@@ -13,7 +13,7 @@ import org.apache.spark.sql.SparkSession
   * measurement showed 76 queries x 4 executions in a single JVM
   * contaminate each other (codegen-cache pressure + GC residue):
   * `d3_simhash` measured 18.6 s in-battery vs 5.5 s in an isolated
-  * JVM (`BenchOne`), d9 16.7 vs 2.2, e1 13.5 vs 2.8 — the battery was
+  * JVM, d9 16.7 vs 2.2, e1 13.5 vs 2.8 — the battery was
   * overstating the engine ~2x. The parent therefore forks a child JVM
   * per query GROUP: every dedup/composition query (d*, e*, cc*) runs
   * in its own JVM, the cheap relational/scalar queries run in chunks
@@ -67,18 +67,6 @@ object Bench {
       require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
       parentMain(Some(only))
     case _ => parentMain(None)
-  }
-
-  private def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
   }
 
   // ------------------------------------------------------------------
@@ -191,10 +179,9 @@ object Bench {
     // back to back, and a single shared filename meant the second run
     // overwrote the first's full per-query record (r15 lost its 32-core
     // map to the 8-core rerun)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val detailFile =
       if (only.isDefined) "bench_detail_smoke.json"
-      else s"bench_detail_c$cpus.json"
+      else s"bench_detail_c${GraftSession.cpus}.json"
     groups.zipWithIndex.foreach { case (g, i) =>
       System.err.println(s"[bench] forking group ${i + 1}/${groups.size}: ${g.mkString(",")}")
       acc ++= forkGroup(g, log)
@@ -314,7 +301,7 @@ object Bench {
 
   private def childMain(outPath: String, names: Seq[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
+    val spark = GraftSession.create()
     // Generic untimed warmup: a fresh JVM would otherwise pay Spark's
     // OWN JIT/classloading (parquet reader, exchange, codegen
     // compiler, noop sink) inside the first timed runs — measured
@@ -353,16 +340,11 @@ object Bench {
         catch { case e: Throwable =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1.0 }
       }
-      // Between runs: clearCache drops CacheManager entries so
-      // operators that persist() intermediates are measured
-      // recomputing, and unpersisting every registered RDD frees
-      // localCheckpoint blocks (connected components), which
-      // clearCache does NOT touch.
+      // clean between runs, so operators that persist() intermediates
+      // are measured recomputing
       def cleanRun(): Double = {
         val t = run()
-        spark.catalog.clearCache()
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
+        GraftSession.clean(spark)
         t
       }
       // Adaptive warm count: sub-2.5s-cold queries keep 3 warms (their
@@ -387,7 +369,7 @@ object Bench {
 
   private def ingestChildMain(outPath: String): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = session()
+    val spark = GraftSession.create()
     val (rows, sec, reSec) = ingestBench(spark, sfDir)
     Files.write(Paths.get(outPath), s"$rows,$sec,$reSec\n".getBytes("UTF-8"))
     spark.stop()

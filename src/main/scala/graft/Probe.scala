@@ -1,0 +1,109 @@
+package graft
+
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.execution.FormattedMode
+
+/** Solo measurement of battery queries: `runMain graft.Probe
+  * <name[,name...]> [runs]` over SPARK_GRAFT_SF_DIR, default 3 runs with
+  * Bench's cache hygiene between them. Per query it prints
+  *  - each run's seconds with its Spark job and stage counts:
+  *    fixed-cost queries (SfScaling exponent ≈ 0) pay scheduler
+  *    round-trips, so the job count is what wall-clock alone can't show;
+  *  - the last run's per-job census: id, wall-clock, and the label or
+  *    call site that scheduled it;
+  *  - the formatted physical plan of the last run's frame. A composite
+  *    query (foreachBatch folds, multi-pass pipelines) runs its
+  *    internal actions while building that frame, so for st1-st4, cc5
+  *    and ev8 the plan is only the last leg and the census is the
+  *    evidence.
+  *
+  * SPARK_GRAFT_CONF (semicolon-separated k=v) overrides session conf,
+  * so an A/B like "same query, AQE off" is one env var instead of a
+  * recompile. Bench never reads it. */
+object Probe {
+
+  private final case class Job(id: Int, stages: Int, label: String,
+      startNs: Long) {
+    @volatile var endNs: Long = -1L
+  }
+
+  /** The one listener: every job's stage count, label and wall-clock. */
+  private final class Census extends SparkListener {
+    val jobs = new ConcurrentHashMap[Int, Job]
+
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      // the result stage's name carries the call site ("parquet at
+      // Foo.scala:123"). AQE/broadcast futures and foreachBatch jobs
+      // collapse to one anonymous site; for those, the per-stage call
+      // sites name the operators the job materialized.
+      val site = j.stageInfos.lastOption.map(_.name).getOrElse("?")
+      val anon = site.contains("withThreadLocalCaptured") ||
+        site.startsWith("start at")
+      val stageSites = j.stageInfos.map(_.name).distinct
+        .filterNot(_.contains("withThreadLocalCaptured"))
+      val where =
+        if (anon && stageSites.nonEmpty)
+          s"$site <- [${stageSites.take(4).mkString(" | ")}]"
+        else site
+      // setJobDescription labels (the silver write path sets them)
+      // survive in the job properties when every call site collapses
+      // to the stream's start()
+      val label = Option(j.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .fold(where)(d => s"[$d] $where")
+      jobs.put(j.jobId, Job(j.jobId, j.stageInfos.size, label, System.nanoTime())): Unit
+    }
+
+    override def onJobEnd(j: SparkListenerJobEnd): Unit =
+      Option(jobs.get(j.jobId)).foreach(_.endNs = System.nanoTime())
+  }
+
+  def main(args: Array[String]): Unit = {
+    val names = args(0).split(",").toSeq
+    val runs = if (args.length > 1) args(1).toInt else 3
+    require(runs >= 1, s"runs must be >= 1, got $runs")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("set SPARK_GRAFT_SF_DIR to a test-data directory"))
+    val conf = sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(';'))
+      .map(_.trim).filter(_.nonEmpty).map { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) => k -> v
+          case _ => sys.error(s"bad SPARK_GRAFT_CONF entry (need k=v): '$kv'")
+        }
+      }.toMap
+    val spark = GraftSession.create(conf = conf)
+    val census = new Census
+    spark.sparkContext.addSparkListener(census)
+    names.foreach { name =>
+      val fn = SparkEntry.queries(name)
+      (1 to runs).foreach { i =>
+        census.jobs.clear()
+        val t0 = System.nanoTime()
+        val df = fn(spark, sfDir)
+        df.write.mode("overwrite").format("noop").save()
+        val secs = (System.nanoTime() - t0) / 1e9
+        // listener events arrive asynchronously on the bus: read the
+        // census only after a drain pause, outside the timed region, or
+        // a run's jobs undercount and bleed into the next run
+        Thread.sleep(500)
+        val jobs = census.jobs.values.asScala.toSeq.sortBy(_.id)
+        println(f"[probe] $name run$i: $secs%.3f s" +
+          s" jobs=${jobs.size} stages=${jobs.map(_.stages).sum}")
+        if (i == runs) {
+          jobs.foreach { j =>
+            val ms = if (j.endNs < 0) Double.NaN else (j.endNs - j.startNs) / 1e6
+            println(f"[probe] $name job ${j.id}%4d $ms%8.1f ms  ${j.label}")
+          }
+          println(s"[probe] $name plan:\n" +
+            df.queryExecution.explainString(FormattedMode))
+        }
+        GraftSession.clean(spark)
+      }
+    }
+    spark.stop()
+  }
+}

@@ -36,12 +36,8 @@ object ScaleCheck {
   /** Median-of-3 wall seconds for `f` (first run separately reported
     * as cold), with cache hygiene between runs. */
   private def timed(spark: SparkSession)(f: => Long): (Long, Double, Double) = {
-    def clean(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-    }
-    val (n, cold) = time(f); clean()
-    val warms = Seq.fill(3) { val (_, w) = time(f); clean(); w }.sorted
+    val (n, cold) = time(f); GraftSession.clean(spark)
+    val warms = Seq.fill(3) { val (_, w) = time(f); GraftSession.clean(spark); w }.sorted
     (n, cold, warms(1))
   }
 
@@ -54,38 +50,22 @@ object ScaleCheck {
     // earlier stages in the same JVM)
     val only = args.lift(1)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val scratch = sys.env.getOrElse("SPARK_GRAFT_SCRATCH", "/tmp/graft_scale")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     import graft.pipeline.{Components, Dedup, TextAnalysis}
 
     // ---- build the N× corpus (generation excluded from timings) ----
-    val bigPath = s"$scratch/documents_${nCopies}x.parquet"
+    val copyDir = s"$scratch/x$nCopies"
+    TailScale.genDocs(spark, sfDir, copyDir, nCopies, cpus)
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
-    if (!new java.io.File(bigPath).exists()) {
-      val copies = (0 until nCopies).map { k =>
-        base.select(
-          (col("doc_id") + lit(k.toLong * 10000000L)).as("doc_id"),
-          (if (k == 0) col("text")
-           else regexp_replace(col("text"), "(\\S+)", s"$$1_c$k")).as("text"),
-          col("lang"), col("source"), col("n_chars"))
-      }
-      copies.reduce(_ unionByName _)
-        .repartition(cpus.toInt).write.mode("overwrite").parquet(bigPath)
-    }
     val n1 = base.count()
-    val big = spark.read.parquet(bigPath)
+    val big = spark.read.parquet(s"$copyDir/documents.parquet")
     val nN = big.count()
     println(s"[scale] corpus 1x=$n1 docs, ${nCopies}x=$nN docs")
 
-    def docs1 = base.repartition(cpus.toInt)
-    def docsN = big.repartition(cpus.toInt)
+    def docs1 = base.repartition(cpus)
+    def docsN = big.repartition(cpus)
 
     // exact candidate volume of the inverted-index pair join:
     // sum over grams of C(df, 2)
@@ -126,16 +106,16 @@ object ScaleCheck {
     val vectorStages = Set("s8_sq_quantize")
     val bigEmbPath = s"$scratch/embeddings_${nCopies}x.parquet"
     lazy val embBase = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    if (only.forall(vectorStages.contains) &&
-        !new java.io.File(bigEmbPath).exists()) {
+    // not TailScale's rotated copies: s8 needs the same vectors (below)
+    if (only.forall(vectorStages.contains) && !TailScale.committed(bigEmbPath)) {
       (0 until nCopies).map { k =>
         embBase.select((col("vec_id") + lit(k.toLong * 10000000L)).as("vec_id"),
           col("embedding"), col("label"))
       }.reduce(_ unionByName _)
-        .repartition(cpus.toInt).write.mode("overwrite").parquet(bigEmbPath)
+        .repartition(cpus).write.mode("overwrite").parquet(bigEmbPath)
     }
-    def emb1 = embBase.repartition(cpus.toInt)
-    def embN = spark.read.parquet(bigEmbPath).repartition(cpus.toInt)
+    def emb1 = embBase.repartition(cpus)
+    def embN = spark.read.parquet(bigEmbPath).repartition(cpus)
 
     // SQ encode: bounds aggregate + scan-stage codegen encode, both
     // corpus-linear; copies repeat the same vectors so bounds are
@@ -148,22 +128,13 @@ object ScaleCheck {
     // curve groups) of different copies are vertex-disjoint: triangles
     // and SF pairs grow exactly ×N by construction
     val liStages = Set("g2_triangles", "a16_sf_pairs", "g1_pagerank", "g5_bfs")
-    val bigLiPath = s"$scratch/lineitem_${nCopies}x.parquet"
-    lazy val liBase = spark.read.parquet(s"$sfDir/lineitem.parquet")
-      .select(col("l_orderkey"), col("l_partkey"), col("l_extendedprice"),
-        col("l_returnflag"), col("l_linenumber"))
-    if (only.forall(liStages.contains) &&
-        !new java.io.File(bigLiPath).exists()) {
-      (0 until nCopies).map { k =>
-        liBase.select(
-          (col("l_orderkey") + lit(k.toLong * 1000000000L)).as("l_orderkey"),
-          (col("l_partkey") + lit(k.toLong * 1000000000L)).as("l_partkey"),
-          col("l_extendedprice"), col("l_returnflag"), col("l_linenumber"))
-      }.reduce(_ unionByName _)
-        .repartition(cpus.toInt).write.mode("overwrite").parquet(bigLiPath)
-    }
-    def li1 = liBase.repartition(cpus.toInt)
-    def liN = spark.read.parquet(bigLiPath).repartition(cpus.toInt)
+    if (only.forall(liStages.contains))
+      TailScale.genLineitem(spark, sfDir, copyDir, nCopies, cpus)
+    def liCols(li: DataFrame): DataFrame =
+      li.select(col("l_orderkey"), col("l_partkey"), col("l_extendedprice"),
+        col("l_returnflag"), col("l_linenumber")).repartition(cpus)
+    def li1 = liCols(spark.read.parquet(s"$sfDir/lineitem.parquet"))
+    def liN = liCols(spark.read.parquet(s"$copyDir/lineitem.parquet"))
 
     // triangle counting on the thresholded co-purchase graph: wedge
     // volume is the superlinear risk (Σ outdeg²) — the degree
@@ -248,7 +219,7 @@ object ScaleCheck {
     if (only.forall(incStages.contains)) {
       val batch = base.filter(col("doc_id") % 101 === 0)
         .select((col("doc_id") + lit(900000000L)).as("doc_id"), col("text"))
-        .repartition(cpus.toInt)
+        .repartition(cpus)
       if (only.forall(_ == "d9_incremental_flat")) {
         val ix1 = Dedup.loadOrBuildIndex(docs1, "doc_id", "text",
           dir = s"$scratch/sc_ix_1x")
@@ -261,7 +232,7 @@ object ScaleCheck {
       if (only.forall(_ == "cc5_update_flat")) {
         def prevClusters(tag: String, d: => DataFrame): String = {
           val p = s"$scratch/sc_clusters_$tag.parquet"
-          if (!new java.io.File(p).exists()) {
+          if (!TailScale.committed(p)) {
             val cl = Components.dedupClusters(d, "doc_id",
               Dedup.minhashNearDups(d, "doc_id", "text", 3, 32, 8, 0.5),
               "id_a", "id_b")

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * entry (`SparkEntry.queries(name)`) against it — same plan, same
   * rounding, same orderBy, nothing re-derived for the harness.
   *
-  * Copy construction (the ScaleCheck generators):
+  * Copy construction (ScaleCheck builds its copies with the same
+  * generators):
   *  - documents: copy k offsets doc_id by k·10⁷ and suffixes every
   *    word with `_ck` — shingle/df structure replicates per copy,
   *    disjoint across copies.
@@ -90,15 +91,9 @@ object TailScale {
       evQueries.contains(name) || name == d6Probe,
       s"unknown tail query $name")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = GraftSession.cpus
     val scratch = sys.env.getOrElse("SPARK_GRAFT_SCRATCH", "/tmp/graft_tail")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
 
     val dir =
       if (nCopies == 1) sfDir
@@ -106,23 +101,18 @@ object TailScale {
         val d = s"$scratch/x$nCopies"
         val scaled =
           if (docQueries.contains(name)) {
-            genDocs(spark, sfDir, d, nCopies, cpus.toInt); "documents"
+            genDocs(spark, sfDir, d, nCopies, cpus); "documents"
           } else if (evQueries.contains(name)) {
-            genEvents(spark, sfDir, d, nCopies, cpus.toInt); "events"
+            genEvents(spark, sfDir, d, nCopies, cpus); "events"
           } else if (name == d6Probe) {
-            genEmbeddings(spark, sfDir, d, nCopies, cpus.toInt); "embeddings"
+            genEmbeddings(spark, sfDir, d, nCopies, cpus); "embeddings"
           } else {
-            genLineitem(spark, sfDir, d, nCopies, cpus.toInt); "lineitem"
+            genLineitem(spark, sfDir, d, nCopies, cpus); "lineitem"
           }
         linkOthers(sfDir, d, except = scaled)
         d
       }
 
-    def clean(): Unit = {
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-    }
     val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
       if (name == d6Probe) { (s, dd) =>
         graft.pipeline.SemDedup.semanticPairs(
@@ -135,12 +125,12 @@ object TailScale {
       val t0 = System.nanoTime()
       fn(spark, dir).write.mode("overwrite").format("noop").save()
       val dt = (System.nanoTime() - t0) / 1e9
-      clean()
+      GraftSession.clean(spark)
       dt
     }
     val cold = once()
     val n = fn(spark, dir).count() // untimed, result-shape sanity only
-    clean()
+    GraftSession.clean(spark)
     val warms = Seq.fill(nWarms)(once()).sorted
     val med =
       if (nWarms % 2 == 1) warms(nWarms / 2)
@@ -178,15 +168,20 @@ object TailScale {
     if (java.nio.file.Files.isSymbolicLink(p)) java.nio.file.Files.delete(p)
   }
 
-  private def genDocs(spark: SparkSession, sfDir: String, outDir: String,
+  /** Whether a cached generation at `out` is complete. A crash
+    * mid-write leaves a partial dir that a bare exists() would silently
+    * accept, corrupting every later measurement; `_SUCCESS` is written
+    * on job commit, and mode("overwrite") cleanly replaces any partial
+    * leftover. */
+  private[graft] def committed(out: String): Boolean =
+    new java.io.File(out, "_SUCCESS").exists()
+
+  /** documents ×n into `outDir/documents.parquet`; see the object doc. */
+  private[graft] def genDocs(spark: SparkSession, sfDir: String, outDir: String,
       n: Int, cpus: Int): Unit = {
     val out = s"$outDir/documents.parquet"
     dropIfSymlink(out)
-    // cache only a COMMITTED generation: a crash mid-write leaves a
-    // partial dir that bare exists() would silently accept, corrupting
-    // every later measurement; _SUCCESS is written on job commit and
-    // mode("overwrite") cleanly replaces any partial leftover
-    if (new java.io.File(out, "_SUCCESS").exists()) return
+    if (committed(out)) return
     val base = spark.read.parquet(s"$sfDir/documents.parquet")
     (0 until n).map { k =>
       base.select(
@@ -206,7 +201,7 @@ object TailScale {
       n: Int, cpus: Int): Unit = {
     val out = s"$outDir/events.parquet"
     dropIfSymlink(out)
-    if (new java.io.File(out, "_SUCCESS").exists()) return // see genDocs
+    if (committed(out)) return
     val base = spark.read.parquet(s"$sfDir/events.parquet")
     (0 until n).map { k =>
       base.withColumn("event_id", col("event_id") + lit(k.toLong * 1000000000L))
@@ -228,7 +223,7 @@ object TailScale {
       n: Int, cpus: Int): Unit = {
     val out = s"$outDir/embeddings.parquet"
     dropIfSymlink(out)
-    if (new java.io.File(out, "_SUCCESS").exists()) return // see genDocs
+    if (committed(out)) return
     val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
     val dim = base.select(size(col("embedding")).as("d")).head().getInt(0)
@@ -253,11 +248,12 @@ object TailScale {
       .repartition(cpus).write.mode("overwrite").parquet(out)
   }
 
-  private def genLineitem(spark: SparkSession, sfDir: String, outDir: String,
+  /** lineitem ×n into `outDir/lineitem.parquet`; see the object doc. */
+  private[graft] def genLineitem(spark: SparkSession, sfDir: String, outDir: String,
       n: Int, cpus: Int): Unit = {
     val out = s"$outDir/lineitem.parquet"
     dropIfSymlink(out)
-    if (new java.io.File(out, "_SUCCESS").exists()) return // see genDocs
+    if (committed(out)) return
     val base = spark.read.parquet(s"$sfDir/lineitem.parquet")
     (0 until n).map { k =>
       base

@@ -804,7 +804,7 @@ object Dedup {
     * prefix filter pays two extra full-gram-stream shuffles (global df
     * aggregation + a df-ranked window re-sort) to shrink candidate
     * volume from Σ df² to Σ df(rare)². Measured at sf0.1 (5 k docs,
-    * ProfileD3 `pairs` mode): plain 1.2–2.0 s vs prefix-filtered
+    * stage profile): plain 1.2–2.0 s vs prefix-filtered
     * 4.6–9.8 s for the identical 256-pair result — below ~50 k docs
     * the bound's fixed work dominates and Σ df² is capped by the small
     * corpus anyway; above it the quadratic candidate risk is what

@@ -522,7 +522,7 @@ object Corpus {
         TextAnalysis.tokenCount(col("export_text")).cast("long").as("n_tokens"))
       .persist()
     slim.count(): Unit // eager: one compute+cache pass (localCheckpoint's
-                       // eager path ran the subtree twice — JobTrace showed
+                       // eager path ran the subtree twice — the job census showed
                        // two ~8.3 s jobs at this line at 10×)
     val packed = Sharding.packByTokenBudgetStratified(slim, "doc_id",
       col("n_tokens"), budget = 1000L, strata = Seq("split"))

@@ -1488,19 +1488,8 @@ object FastdbOps {
           val decoded = Brokers.decode(s,
             batch.select(col("topic"), col("value")), "value",
             Brokers.ConfluentWire)
-          val w = AlertStream.wrangle(decoded, "bpv-ps", "Pitt-Google", "lsst-alerts")
-          val staged = Seq(w.objects, w.sources, w.forced, w.sourcesExtra,
-            w.forcedExtra, w.brokerinfo, w.thumbnails)
-          staged.foreach(_.persist())
-          try {
-            val (_, deltas) = graft.merge.SourceImporter.importBatchWithDeltas(
-              store.load(s), w.objects, w.sources, w.forced,
-              stagedSourcesExtra = Some(w.sourcesExtra),
-              stagedForcedExtra = Some(w.forcedExtra),
-              stagedBrokerinfo = Some(w.brokerinfo),
-              stagedThumbnails = Some(w.thumbnails))
-            store.saveDelta(deltas)
-          } finally staged.foreach(_.unpersist())
+          AlertStream.importWrangled(s, store,
+            AlertStream.wrangle(decoded, "bpv-ps", "Pitt-Google", "lsst-alerts"))
         }
         .start()
       try {

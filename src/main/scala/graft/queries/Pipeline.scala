@@ -315,7 +315,7 @@ object Pipeline {
     // candidate path auto-chosen by corpus size (Dedup.usePrefixFilter):
     // the PPJoin prefix bound costs two extra full-gram-stream shuffles
     // (global df agg + df-ranked window), measured 3-8x slower than the
-    // plain inverted index at sf0.1 (ProfileD3 `pairs`: 4.6-9.8s vs
+    // plain inverted index at sf0.1 (stage profile: 4.6-9.8s vs
     // 1.2-2.0s, identical 256 pairs) — it pays only where sum df^2 can
     // explode, i.e. large/boilerplate-heavy corpora. Output is
     // identical either way (PipelineSpec proves it)

@@ -116,10 +116,7 @@ object SqlSurface {
     require(!entry.error, s"x2 queue execution failed: ${entry.errortext}")
     // the sink is parquet: re-impose the presentation order on read-back
     val out = queue.results(id).orderBy("rootid", "visit").localCheckpoint()
-    val root = java.nio.file.Paths.get(dir)
-    java.nio.file.Files.walk(root)
-      .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-      .forEach(p => java.nio.file.Files.deleteIfExists(p))
+    graft.util.Local.deleteRecursively(dir)
     out
   }
 

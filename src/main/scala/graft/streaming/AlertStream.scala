@@ -211,27 +211,32 @@ object AlertStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (compactEvery > 0 && nBatches.incrementAndGet() % compactEvery == 0)
           store.compact(spark)
-        val w = wrangle(batch, baseProcverId)
-        // persist the staging frames: saveDelta executes one plan per
-        // touched table (up to 9), and each would otherwise re-run the
-        // wrangle lineage from the input files
-        val staged = Seq(w.objects, w.sources, w.forced, w.sourcesExtra,
-          w.forcedExtra, w.brokerinfo, w.thumbnails)
-        staged.foreach(_.persist())
-        try {
-          // persist the delta path: each batch writes only its new rows
-          // (SilverStore.saveDelta), not a recomputation of the catalog
-          val (_, deltas) = SourceImporter.importBatchWithDeltas(
-            store.load(spark), w.objects, w.sources, w.forced,
-            stagedSourcesExtra = Some(w.sourcesExtra),
-            stagedForcedExtra = Some(w.forcedExtra),
-            stagedBrokerinfo = Some(w.brokerinfo),
-            stagedThumbnails = Some(w.thumbnails))
-          store.saveDelta(deltas)
-        } finally staged.foreach(_.unpersist())
+        importWrangled(spark, store, wrangle(batch, baseProcverId))
       }
       .start()
     if (awaitAll) { q.processAllAvailable(); q.stop() }
     q
+  }
+
+  /** One micro-batch's silver merge: import the wrangled batch against
+    * the store and append only its new rows ([[SilverStore.saveDelta]]),
+    * not a recomputation of the catalog. */
+  def importWrangled(spark: SparkSession, store: SilverStore,
+      w: Wrangled): Unit = {
+    // persist the staging frames: saveDelta executes one plan per
+    // touched table (up to 9), and each would otherwise re-run the
+    // wrangle lineage from the input
+    val staged = Seq(w.objects, w.sources, w.forced, w.sourcesExtra,
+      w.forcedExtra, w.brokerinfo, w.thumbnails)
+    staged.foreach(_.persist())
+    try {
+      val (_, deltas) = SourceImporter.importBatchWithDeltas(
+        store.load(spark), w.objects, w.sources, w.forced,
+        stagedSourcesExtra = Some(w.sourcesExtra),
+        stagedForcedExtra = Some(w.forcedExtra),
+        stagedBrokerinfo = Some(w.brokerinfo),
+        stagedThumbnails = Some(w.thumbnails))
+      store.saveDelta(deltas)
+    } finally staged.foreach(_.unpersist())
   }
 }

@@ -2,13 +2,13 @@ package graft.streaming
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.util.Comparator
 import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.merge.SourceImporter.{ImportDeltas, ImportResult}
 import graft.schema.Schemas
+import graft.util.Local
 
 /** Log-structured parquet persistence for the silver catalog.
   *
@@ -136,11 +136,6 @@ final class SilverStore(baseDir: String) {
 
   // ---- write path ---------------------------------------------------
 
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).sorted(Comparator.reverseOrder[Path]())
-        .forEach(f => Files.delete(f))
-
   private def newSegName(): String =
     s"seg_${java.util.UUID.randomUUID().toString.replace("-", "")}"
 
@@ -193,7 +188,7 @@ final class SilverStore(baseDir: String) {
     try df.write.parquet(dir.toString)
     finally sc.setJobDescription(null)
     val n = footerRowCount(df.sparkSession, dir)
-    if (n == 0L) { deleteRecursively(dir); None } else Some(seg)
+    if (n == 0L) { Local.deleteRecursively(dir.toString); None } else Some(seg)
   }
 
   /** Staged writes: per table, the manifest contents to commit. */
@@ -246,13 +241,16 @@ final class SilverStore(baseDir: String) {
     // from the pre-manifest flat layout are left untouched.
     staged.entries.foreach { case (name, segs) =>
       val live = segs.toSet
-      if (Files.exists(tableDir(name)))
-        Files.list(tableDir(name)).iterator().asScala.toSeq
-          .filter { p =>
+      if (Files.exists(tableDir(name))) {
+        val s = Files.list(tableDir(name))
+        val garbage =
+          try s.iterator().asScala.toSeq.filter { p =>
             val n = p.getFileName.toString
             (n.startsWith("seg_") || n == "_manifest.tmp") && !live.contains(n)
           }
-          .foreach(deleteRecursively)
+          finally s.close()
+        garbage.foreach(p => Local.deleteRecursively(p.toString))
+      }
     }
   }
 

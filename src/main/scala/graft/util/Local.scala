@@ -1,9 +1,8 @@
 package graft.util
 
-/** Local-filesystem helpers for per-invocation scratch trees (queue
-  * replays, JSONL round-trip exports) — java.nio, not Hadoop, because
-  * these paths are always JVM-local temp dirs. Persistent artifacts go
-  * through [[Stage]] instead. */
+/** Local-filesystem helpers for JVM-local trees (queue replays, JSONL
+  * round-trip exports, silver-store segments) — java.nio, not Hadoop.
+  * Persistent artifacts go through [[Stage]] instead. */
 object Local {
   def deleteRecursively(dir: String): Unit = {
     val root = java.nio.file.Paths.get(dir)
@@ -11,10 +10,13 @@ object Local {
     // and the walk (or mid-walk); the tree being already gone is
     // success for a delete-if-exists helper, so swallow that one shape
     try {
-      if (java.nio.file.Files.exists(root))
-        java.nio.file.Files.walk(root)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
+      if (java.nio.file.Files.exists(root)) {
+        // the walk holds directory handles open until closed
+        val walk = java.nio.file.Files.walk(root)
+        try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
           .forEach(p => java.nio.file.Files.deleteIfExists(p): Unit)
+        finally walk.close()
+      }
     } catch {
       case _: java.nio.file.NoSuchFileException => ()
       case e: java.io.UncheckedIOException

@@ -204,6 +204,29 @@ class StreamingSpec extends AnyFunSuite {
     assert(store.load(spark).diasource.count() == after.size)
   }
 
+  test("silver store: saveDelta commits leak no file descriptors") {
+    val fds = new java.io.File("/proc/self/fd")
+    assume(fds.isDirectory, "needs /proc/self/fd")
+    val store = new SilverStore(Files.createTempDirectory("fds").toString)
+    val w = AlertStream.wrangle(alertsDf(Seq(1L, 2L), 9L, 1.0, 2.0), "bpv-c")
+    // imported against the empty store and pinned, so every save
+    // appends the same non-empty rows and flips each touched manifest
+    val (_, d0) = graft.merge.SourceImporter.importBatchWithDeltas(
+      store.load(spark), w.objects, w.sources, w.forced,
+      stagedBrokerinfo = Some(w.brokerinfo))
+    def pin(df: org.apache.spark.sql.DataFrame) = df.localCheckpoint()
+    val d = graft.merge.SourceImporter.ImportDeltas(pin(d0.rootDiaobject),
+      pin(d0.diaobject), pin(d0.diasource), pin(d0.diaforcedsource),
+      pin(d0.diaobjectPosition), pin(d0.brokerinfo), pin(d0.thumbnails),
+      None, None)
+    store.saveDelta(d) // warm-up: pools and class loading open their fds once
+    val before = fds.list().length
+    val commits = 50
+    (1 to commits).foreach(_ => store.saveDelta(d))
+    val grown = fds.list().length - before
+    assert(grown < commits / 5, s"$commits commits left $grown more open fds")
+  }
+
   test("query queue: FIFO, read-only enforcement, results and errors") {
     val q = new graft.api.QueryQueue(spark,
       Files.createTempDirectory("qres").toString)

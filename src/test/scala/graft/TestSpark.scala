@@ -2,14 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local SparkSession for the whole test run. */
+/** One shared local SparkSession for the whole test run, with the
+  * mains' session settings. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.debug.maxToStringFields", "200")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.create(4,
+    Map("spark.sql.debug.maxToStringFields" -> "200"))
 }
