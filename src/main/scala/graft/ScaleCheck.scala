@@ -222,9 +222,9 @@ object ScaleCheck {
         .repartition(cpus)
       if (only.forall(_ == "d9_incremental_flat")) {
         val ix1 = Dedup.loadOrBuildIndex(docs1, "doc_id", "text",
-          dir = s"$scratch/sc_ix_1x")
+          dir = s"$scratch/sc_minhash_1x")
         val ixN = Dedup.loadOrBuildIndex(docsN, "doc_id", "text",
-          dir = s"$scratch/sc_ix_${nCopies}x")
+          dir = s"$scratch/sc_minhash_${nCopies}x")
         stageRaw("d9_incremental_flat")(
           Dedup.incrementalMinhash(batch, "doc_id", "text", ix1).count(),
           Dedup.incrementalMinhash(batch, "doc_id", "text", ixN).count())

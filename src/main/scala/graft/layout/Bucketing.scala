@@ -22,38 +22,30 @@ import org.apache.spark.sql.functions.col
   * session catalog; a fresh session re-attaches to the files via
   * CREATE TABLE ... CLUSTERED BY ... LOCATION (bucket info lives in
   * the catalog, not the files — re-registering with the same spec is
-  * what makes the layout durable across sessions). Scratch locations
-  * are keyed by the SOURCE table's content signature (the
-  * IvfAnn.scratchDir convention) so a regenerated dataset rebuilds
-  * instead of serving stale buckets.
+  * what makes the layout durable across sessions).
   */
 object Bucketing {
 
-  /** Canonical scratch location for a bucketed copy of `table`. */
+  /** Canonical location of a bucketed copy of `table`
+    * ([[graft.util.Stage.scratchDir]]). */
   def scratchDir(dataset: String, table: String, key: String,
       nBuckets: Int): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_bkt_${table}_${key}_" +
-      s"${nBuckets}_${graft.Tables.tableSignature(dataset, table)}"
+    graft.util.Stage.scratchDir("bkt", dataset, table, key, nBuckets)
 
-  /** Catalog-safe table name bound to the same signature. */
+  /** Catalog name bound to the same key as [[scratchDir]]. */
   def tableName(dataset: String, table: String, key: String,
       nBuckets: Int): String =
-    s"graft_bkt_${table}_${key}_${nBuckets}_" +
-      graft.Tables.tableSignature(dataset, table)
+    graft.util.Stage.scratchKey("bkt", dataset, table, key, nBuckets)
 
   /** Return `name` as a bucketed table, materializing `df` on first
     * use: write once (bucketBy + sortBy on `key`, one file per bucket
     * via the pre-repartition, so the scan needs no per-bucket merge
-    * sort), re-attach on every later session. The build follows the
-    * [[graft.util.Stage]] commit protocol: the bucketed files are
-    * written under a staging location (via a throwaway catalog name —
-    * `saveAsTable` is the only API that writes bucket layout) and
-    * atomically renamed into place, so a reader never attaches to a
-    * half-written directory and concurrent builders race safely; the
+    * sort), re-attach on every later session. The build is published
+    * with [[graft.util.Stage.publish]] (via a throwaway catalog name —
+    * `saveAsTable` is the only API that writes bucket layout, so this
+    * family cannot use [[graft.util.Stage.loadOrBuild]]'s writers); the
     * catalog entry is then always (re)declared over the published
-    * files with CREATE TABLE ... CLUSTERED BY ... LOCATION, which is
-    * how the layout survives across sessions anyway (bucket info
-    * lives in the catalog, not the files).
+    * files with CREATE TABLE ... CLUSTERED BY ... LOCATION.
     */
   def bucketedTable(spark: SparkSession, name: String, df: => DataFrame,
       key: String, nBuckets: Int, dir: String): DataFrame = {

@@ -9,44 +9,33 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * parquet artifact instead of re-paying the build. At 100 TB the
   * cluster table is the deliverable a dedup job ships to the rest of
   * the pipeline — nobody recomputes a trillion-shingle pair graph to
-  * ask "which cluster is this doc in".
-  *
-  * Persistence follows the [[IvfAnn.scratchDir]] convention: the
-  * location is keyed by the SOURCE table's content signature plus the
-  * clustering parameters, so a regenerated dataset (or a different
-  * shingle/threshold config) rebuilds instead of serving stale
-  * clusters. Commit protocol is [[graft.util.Stage]]: build into a
-  * staging dir, atomic rename to publish — readers never see a
-  * half-written table and concurrent builders race safely.
+  * ask "which cluster is this doc in". Lifecycle: [[graft.util.Stage]].
   */
 object ClusterStore {
 
-  /** Canonical scratch location for the cluster table of `dataset`'s
-    * documents at the given clustering parameters. */
+  /** Canonical location of the cluster table of `dataset`'s documents
+    * at the given clustering parameters. */
   def scratchDir(dataset: String, shingleWords: Int, threshold: Double): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_cc_${shingleWords}_" +
-      s"${math.round(threshold * 100)}_" +
-      graft.Tables.tableSignature(dataset, "documents")
+    graft.util.Stage.scratchDir("cc", dataset, "documents", shingleWords,
+      math.round(threshold * 100))
 
-  /** Load the persisted (doc_id, cluster, is_rep) table if present,
-    * else build it from `docs` (pair graph auto-policy + large/small-
-    * star CC, exactly cc1's substrate) and persist it via the
-    * [[graft.util.Stage]] staging-then-rename protocol (Hadoop-FS
-    * markers, atomic publish, race-safe against concurrent builders).
-    * Either way the returned frame reads from parquet, so repeat
-    * consumers pay only the scan. */
+  /** The (doc_id, cluster, is_rep) table of `dataset`'s documents
+    * (long doc_id), built from `docs` (pair graph auto-policy + large/
+    * small-star CC, exactly cc1's substrate) on first use. `docs` is
+    * only evaluated by a build. */
   def loadOrBuild(spark: SparkSession, dataset: String, docs: => DataFrame,
       shingleWords: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val dir = scratchDir(dataset, shingleWords, threshold)
-    if (!graft.util.Stage.isCommitted(spark, dir)) {
-      graft.util.Stage.publish(spark, dir) { staging =>
-        val d = docs
-        val pairs = Dedup.ngramJaccardPairsAuto(d, "doc_id", "text",
-          shingleWords = shingleWords, threshold = threshold)
-        Components.dedupClusters(d, "doc_id", pairs, "id_a", "id_b")
-          .write.mode("overwrite").parquet(staging)
-      }
-    }
-    spark.read.parquet(dir)
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("cluster", LongType), StructField("is_rep", BooleanType)))
+    graft.util.Stage.loadOrBuild(spark,
+        scratchDir(dataset, shingleWords, threshold), Seq("clusters" -> schema)) {
+      val d = docs
+      val pairs = Dedup.ngramJaccardPairsAuto(d, "doc_id", "text",
+        shingleWords = shingleWords, threshold = threshold)
+      val clusters = Components.dedupClusters(d, "doc_id", pairs, "id_a", "id_b")
+      graft.util.Stage.Built(Seq(clusters.write),
+        () => Components.release(clusters))
+    }.head
   }
 }

@@ -294,7 +294,7 @@ object Dedup {
 
   /** [[minhashIndex]] plus the persisted signature frame both index
     * halves derive from — callers that materialize the index elsewhere
-    * (e.g. [[saveIndex]]) use the handle to release the cache. */
+    * (e.g. [[loadOrBuildIndex]]) use the handle to release the cache. */
   def minhashIndexWithSigs(corpus: DataFrame, idCol: String, textCol: String,
       shingleWords: Int = 3, numHashes: Int = 32,
       bands: Int = 8): (NearDupIndex, DataFrame) = {
@@ -323,68 +323,34 @@ object Dedup {
      sigs.select(col(idCol), col("_shingles")).schema)
   }
 
-  /** Persist a [[NearDupIndex]]: band postings laid out PARTITIONED BY
-    * `_band` — a batch's probe join prunes to matching band files —
-    * plus the shingle frame for candidate verification. The shingle
-    * write lands last, so `shingles/_SUCCESS` is the commit marker for
-    * the whole index. At 100 TB the same layout holds; you'd
-    * additionally bucket postings by `_bucket` and shingles by id so
-    * probes and verifications become co-located point lookups. */
-  def saveIndex(index: NearDupIndex, dir: String): Unit = {
-    graft.util.Stage.publish(index.buckets.sparkSession, dir,
-        "shingles/_SUCCESS") { staging =>
-      index.buckets.write.mode("overwrite").partitionBy("_band")
-        .parquet(s"$staging/buckets")
-      index.shingles.write.mode("overwrite").parquet(s"$staging/shingles")
-    }
-  }
-
-  def isIndexSaved(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean =
-    graft.util.Stage.isCommitted(spark, dir, "shingles/_SUCCESS")
-
-  /** Reload a saved index. Probing a loaded index pays only the probe
-    * cost — shingling and banding the corpus happened at [[saveIndex]]
-    * time, which is the operational mode incrementalMinhash exists
-    * for: index once, probe every batch, never rescan the corpus.
-    * `schemas` (buckets, shingles — [[indexSchemas]]' shape): the index
-    * layout is fixed by construction, so callers that know it skip the
-    * footer-inference scheduler job each schemaless read fires. */
-  def loadIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      schemas: Option[(org.apache.spark.sql.types.StructType,
-        org.apache.spark.sql.types.StructType)] = None): NearDupIndex =
-    NearDupIndex(
-      schemas.fold(spark.read)(s => spark.read.schema(s._1))
-        .parquet(s"$dir/buckets"),
-      schemas.fold(spark.read)(s => spark.read.schema(s._2))
-        .parquet(s"$dir/shingles"))
-
-  /** Load the index at `dir` if present, else build it from `corpus`
-    * and persist it there (freeing the build's signature cache once
-    * written). Either way the returned index reads from the persisted
-    * band-partitioned layout — with explicit schemas (plan-only, from
-    * the corpus frame), so the two reads plan jobless. */
+  /** The [[NearDupIndex]] of `corpus` as a [[graft.util.Stage]]
+    * artifact at `dir`: band postings PARTITIONED BY `_band` — a
+    * batch's probe join prunes to matching band files — plus the
+    * shingle frame for candidate verification. Probing it pays only
+    * the probe cost: index once, probe every batch, never rescan the
+    * corpus. At 100 TB you'd additionally bucket postings by `_bucket`
+    * and shingles by id so probes and verifications become co-located
+    * point lookups. */
   def loadOrBuildIndex(corpus: DataFrame, idCol: String, textCol: String,
       shingleWords: Int = 3, numHashes: Int = 32, bands: Int = 8,
       dir: String): NearDupIndex = {
-    if (!isIndexSaved(corpus.sparkSession, dir)) {
+    val (bSchema, shSchema) = indexSchemas(corpus, idCol, textCol,
+      shingleWords, numHashes, bands)
+    val Seq(buckets, shingles) = graft.util.Stage.loadOrBuild(
+        corpus.sparkSession, dir,
+        Seq("buckets" -> bSchema, "shingles" -> shSchema)) {
       val (built, sigs) = minhashIndexWithSigs(corpus, idCol, textCol,
         shingleWords, numHashes, bands)
-      saveIndex(built, dir)
-      sigs.unpersist()
+      graft.util.Stage.Built(Seq(built.buckets.write.partitionBy("_band"),
+        built.shingles.write), () => sigs.unpersist())
     }
-    loadIndex(corpus.sparkSession, dir, Some(indexSchemas(corpus, idCol,
-      textCol, shingleWords, numHashes, bands)))
+    NearDupIndex(buckets, shingles)
   }
 
-  /** Canonical per-dataset scratch location for the demo corpus band
-    * index (d9 + NearDupStream-style consumers). Keyed by the source
-    * table's CONTENT signature, not just its path — a regenerated
-    * dataset at the same path gets a fresh index instead of stale
-    * postings (same contract as [[IvfAnn.scratchDir]]). */
-  def indexScratchDir(dataset: String, table: String = "documents"): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_neardupp_${
-      graft.Tables.tableSignature(dataset, table)}"
+  /** Canonical location of `dataset`'s demo corpus band index (d9, e5;
+    * e9 passes its corpus subset as `variant`). */
+  def indexScratchDir(dataset: String, variant: String*): String =
+    graft.util.Stage.scratchDir("minhash", dataset, "documents", variant: _*)
 
   /** Incremental NEAR-dup — [[incrementalExact]]'s counterpart for
     * paraphrase-level duplicates, the operational mode at 100 TB: the
@@ -653,24 +619,6 @@ object Dedup {
     (SimHashIndex(keys, sigs.select(col(idCol), col("_shingles"))), sigs)
   }
 
-  /** Persist a [[SimHashIndex]]: key postings PARTITIONED BY `_comb`
-    * (a probe's equi-join prunes to matching combo files) plus the
-    * shingle frame; `shingles/_SUCCESS` is the commit marker, as with
-    * [[saveIndex]]. At 100 TB you'd additionally bucket keys by
-    * (_v1, _v2) and shingles by id for co-located point lookups. */
-  def saveSimhashIndex(index: SimHashIndex, dir: String): Unit = {
-    graft.util.Stage.publish(index.keys.sparkSession, dir,
-        "shingles/_SUCCESS") { staging =>
-      index.keys.write.mode("overwrite").partitionBy("_comb")
-        .parquet(s"$staging/keys")
-      index.shingles.write.mode("overwrite").parquet(s"$staging/shingles")
-    }
-  }
-
-  def isSimhashIndexSaved(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Boolean =
-    graft.util.Stage.isCommitted(spark, dir, "shingles/_SUCCESS")
-
   /** The two frame schemas a persisted [[SimHashIndex]] reads back
     * with — plan-only, no job ([[indexSchemas]]' counterpart for the
     * hamming family). */
@@ -685,42 +633,32 @@ object Dedup {
      sigs.select(col(idCol), col("_shingles")).schema)
   }
 
-  /** `schemas` (keys, shingles — [[simhashIndexSchemas]]' shape): the
-    * layout is fixed by construction, so callers that know it skip the
-    * footer-inference job each schemaless read fires. */
-  def loadSimhashIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-      schemas: Option[(org.apache.spark.sql.types.StructType,
-        org.apache.spark.sql.types.StructType)] = None): SimHashIndex =
-    SimHashIndex(
-      schemas.fold(spark.read)(s => spark.read.schema(s._1))
-        .parquet(s"$dir/keys"),
-      schemas.fold(spark.read)(s => spark.read.schema(s._2))
-        .parquet(s"$dir/shingles"))
-
-  /** Load the simhash index at `dir` if present, else build from
-    * `corpus` and persist it there — the probe-only operational mode,
-    * mirroring [[loadOrBuildIndex]] (explicit read schemas included). */
+  /** The [[SimHashIndex]] of `corpus` as a [[graft.util.Stage]]
+    * artifact at `dir`: key postings PARTITIONED BY `_comb` (a probe's
+    * equi-join prunes to matching combo files) plus the shingle frame.
+    * At 100 TB you'd additionally bucket keys by (_v1, _v2) and
+    * shingles by id for co-located point lookups. */
   def loadOrBuildSimhashIndex(corpus: DataFrame, idCol: String,
       textCol: String, maxHamming: Int = 4, shingleWords: Int = 3,
       dir: String): SimHashIndex = {
-    if (!isSimhashIndexSaved(corpus.sparkSession, dir)) {
+    val (kSchema, shSchema) = simhashIndexSchemas(corpus, idCol, textCol,
+      maxHamming, shingleWords)
+    val Seq(keys, shingles) = graft.util.Stage.loadOrBuild(
+        corpus.sparkSession, dir,
+        Seq("keys" -> kSchema, "shingles" -> shSchema)) {
       val (built, sigs) = simhashIndexWithSigs(corpus, idCol, textCol,
         maxHamming, shingleWords)
-      saveSimhashIndex(built, dir)
-      sigs.unpersist()
+      graft.util.Stage.Built(Seq(built.keys.write.partitionBy("_comb"),
+        built.shingles.write), () => sigs.unpersist())
     }
-    loadSimhashIndex(corpus.sparkSession, dir,
-      Some(simhashIndexSchemas(corpus, idCol, textCol, maxHamming,
-        shingleWords)))
+    SimHashIndex(keys, shingles)
   }
 
-  /** Canonical content-signature-keyed scratch location for the demo
-    * corpus simhash index (d10) — maxHamming is part of the path
-    * because it determines the block-key layout (see [[SimHashIndex]]). */
-  def simhashScratchDir(dataset: String, maxHamming: Int = 4,
-      table: String = "documents"): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_simhashp_h${maxHamming}_${
-      graft.Tables.tableSignature(dataset, table)}"
+  /** Canonical location of `dataset`'s demo corpus simhash index (d10)
+    * — maxHamming is part of the key because it determines the
+    * block-key layout (see [[SimHashIndex]]). */
+  def simhashScratchDir(dataset: String, maxHamming: Int = 4): String =
+    graft.util.Stage.scratchDir("simhash", dataset, "documents", s"h$maxHamming")
 
   /** Incremental SimHash near-dup — [[incrementalMinhash]]'s
     * counterpart on the hamming-distance candidate family: the

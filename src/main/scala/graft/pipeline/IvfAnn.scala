@@ -2,7 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -76,62 +76,6 @@ object IvfAnn {
     Index(assigned, centroids)
   }
 
-  /** Persist an index: the assigned corpus laid out PARTITIONED BY
-    * cell id — so a probe's `_cell` equi-join prunes to its cells'
-    * files (dynamic partition pruning against the broadcast probe
-    * list) instead of scanning the corpus — plus the tiny centroid
-    * table. The whole index commits via [[graft.util.Stage]]: both
-    * tables are written under a staging dir and published by one
-    * atomic rename, so readers never see an assigned table without
-    * its centroids (or vice versa) and concurrent builders race
-    * safely on any Hadoop filesystem. At 100 TB the same layout
-    * holds; you'd additionally bucket within cells by id for
-    * co-located candidate joins.
-    *
-    * `nlist` is REQUIRED (there is deliberately no 2-arg overload):
-    * every artifact carries its requested resolution as an
-    * `NLIST_<n>` marker file inside the staged tree (atomic with it).
-    * The built centroid COUNT can be legitimately smaller than the
-    * requested nlist (MLlib k-means on a corpus with fewer clusters
-    * than cells returns fewer centers), so the count alone cannot
-    * distinguish "same request, sparse data" from "stale index built
-    * at a coarser resolution" — a markerless artifact would let
-    * [[loadOrBuild]]'s `loaded <= nlist` fallback accept a silently
-    * coarser index, the exact gap the marker closes. */
-  def save(index: Index, dir: String, nlist: Int): Unit = {
-    require(nlist > 0, s"nlist must be positive (got $nlist) — every " +
-      "saved index carries its NLIST marker")
-    val spark = index.assigned.sparkSession
-    graft.util.Stage.publish(spark, dir, "centroids/_SUCCESS") { staging =>
-      index.assigned.write.mode("overwrite")
-        .partitionBy("_cell").parquet(s"$staging/assigned")
-      graft.util.Stage.fs(spark, dir)
-        .create(new org.apache.hadoop.fs.Path(s"$staging/NLIST_$nlist"))
-        .close()
-      // centroids LAST: its _SUCCESS is the commit marker
-      index.centroids.write.mode("overwrite").parquet(s"$staging/centroids")
-    }
-  }
-
-  def isSaved(spark: SparkSession, dir: String): Boolean =
-    graft.util.Stage.isCommitted(spark, dir, "centroids/_SUCCESS")
-
-  /** Reload a saved index. Probing a loaded index pays only the probe
-    * cost — quantizer training and cell assignment happened at
-    * [[save]] time, which is the deploy shape: build the index once,
-    * serve top-k queries against the persisted cells.
-    * `schemas` (assigned, centroids — [[indexSchemas]]' shape): the
-    * layout is fixed by construction, so callers that know it skip the
-    * footer-inference scheduler job each schemaless read fires. */
-  def load(spark: SparkSession, dir: String,
-      schemas: Option[(org.apache.spark.sql.types.StructType,
-        org.apache.spark.sql.types.StructType)] = None): Index =
-    Index(
-      schemas.fold(spark.read)(s => spark.read.schema(s._1))
-        .parquet(s"$dir/assigned"),
-      schemas.fold(spark.read)(s => spark.read.schema(s._2))
-        .parquet(s"$dir/centroids"))
-
   /** The two frame schemas a persisted index reads back with —
     * plan-only (a zero-row slice of the corpus through the same
     * normalize projection [[buildIndex]] runs; `_cell` is the int
@@ -149,62 +93,49 @@ object IvfAnn {
     (assigned, centroids)
   }
 
-  /** Canonical per-dataset scratch location for a shared demo index —
-    * s3_ann_ivf and s4's re-rank path use the same (nlist = 16,
-    * default seed) index, so whichever runs first builds it and later
-    * consumers read it, exactly like two production consumers sharing
-    * one persisted quantizer. Keyed by the embeddings table's CONTENT
-    * signature, not just the path: a regenerated dataset at the same
-    * path gets a fresh index instead of stale cell assignments. Also
-    * keyed by `nlist`, so an index built at one resolution is never
-    * silently served to a caller asking for another. */
+  /** Canonical per-dataset location for a shared demo index — s3_ann_ivf
+    * and s4's re-rank path use the same (nlist = 16, default seed)
+    * index, so whichever runs first builds it and later consumers read
+    * it, exactly like two production consumers sharing one persisted
+    * quantizer. Keyed by `nlist`, so an index built at one resolution
+    * is never silently served to a caller asking for another. */
   def scratchDir(dataset: String, nlist: Int = 16): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivf_${
-      graft.Tables.tableSignature(dataset, "embeddings")}_n$nlist"
+    graft.util.Stage.scratchDir("ivf", dataset, "embeddings", s"n$nlist")
 
-  /** Load the index at `dir` if present, else build it from `corpus`
-    * and persist it there. Either way the returned index reads from
-    * the persisted cell-partitioned layout (and the build path frees
-    * its in-memory assignment cache after writing). */
+  /** The index of `corpus` as a [[graft.util.Stage]] artifact at `dir`:
+    * the assigned corpus PARTITIONED BY cell id — so a probe's `_cell`
+    * equi-join prunes to its cells' files (dynamic partition pruning
+    * against the broadcast probe list) instead of scanning the corpus
+    * — plus the tiny centroid table. At 100 TB you'd additionally
+    * bucket within cells by id for co-located candidate joins.
+    *
+    * The artifact is stamped with the REQUESTED `nlist`: the built
+    * centroid count can legitimately be smaller (MLlib k-means on a
+    * corpus with fewer clusters than cells returns fewer centers), so
+    * the count alone cannot tell "same request, sparse data" from
+    * "index built at another resolution". The stamp makes an index at
+    * a different nlist — larger (the limit below would silently
+    * truncate it) or smaller (silently coarser quantization) — fail
+    * loudly, including a lost publish race against a different-nlist
+    * writer at the same explicit dir. */
   def loadOrBuild(corpus: DataFrame, idCol: String, embCol: String,
       nlist: Int, dir: String): Index = {
-    val spark = corpus.sparkSession
-    if (!isSaved(spark, dir)) {
+    val (aSchema, cSchema) = indexSchemas(corpus, idCol, embCol)
+    val Seq(assigned, centroids) = graft.util.Stage.loadOrBuild(
+        corpus.sparkSession, dir,
+        Seq("assigned" -> aSchema, "centroids" -> cSchema), s"nlist=$nlist") {
       val built = buildIndex(corpus, idCol, embCol, nlist)
-      save(built, dir, nlist)
-      built.assigned.unpersist()
+      graft.util.Stage.Built(Seq(built.assigned.write.partitionBy("_cell"),
+        built.centroids.write), () => built.assigned.unpersist())
     }
-    val ix = load(spark, dir, Some(indexSchemas(corpus, idCol, embCol)))
     // The centroid table has at most nlist rows by construction, but a
     // parquet read carries no static row bound (maxRows = None), so
     // the probe-list cross join downstream would be indistinguishable
     // in the plan from a corpus-quadratic one. Stamp the known bound
-    // onto the plan with a semantically-no-op limit: GlobalLimit(nlist)
-    // makes the broadcast side's boundedness statically provable.
-    // Guard the no-op claim via the NLIST marker [[save]] stamped
-    // (atomic with the artifact): it records the REQUESTED resolution,
-    // so a stale index built at a DIFFERENT nlist — larger (the limit
-    // would silently truncate: probes assigned among a prefix of cells
-    // while `assigned` carries all of them) or smaller (silently
-    // coarser quantization, degraded recall) — is rejected loudly.
-    // This also covers losing the publish race to a different-nlist
-    // writer at the same explicit dir: the winner's marker disagrees.
-    // The marker check is a metadata probe, not a count job; a
-    // markerless LEGACY artifact falls back to the truncation-safety
-    // count bound (scratchDir keys by nlist, so canonical locations
-    // can't serve a coarser index either way).
-    val f = graft.util.Stage.fs(spark, dir)
-    if (!f.exists(new org.apache.hadoop.fs.Path(dir, s"NLIST_$nlist"))) {
-      val others = f.globStatus(new org.apache.hadoop.fs.Path(dir, "NLIST_*"))
-      require(others == null || others.isEmpty,
-        s"index at $dir was built at ${others.head.getPath.getName} but " +
-          s"nlist=$nlist was requested — rebuild or key the location by nlist")
-      val loaded = ix.centroids.count()
-      require(loaded <= nlist,
-        s"legacy index at $dir has $loaded cells but nlist=$nlist was " +
-          "requested — the limit would truncate it; rebuild the index")
-    }
-    ix.copy(centroids = ix.centroids.limit(nlist))
+    // onto the plan with a semantically-no-op limit (no-op because the
+    // nlist stamp was checked): GlobalLimit(nlist) makes the broadcast
+    // side's boundedness statically provable.
+    Index(assigned, centroids.limit(nlist))
   }
 
   /** Top-k per query over the `nprobe` nearest cells. */

@@ -58,7 +58,7 @@ object PqAnn {
 
   /** [[buildIndex]] plus the persisted cell-assignment frame the codes
     * derive from — callers that materialize the index elsewhere (e.g.
-    * [[save]]) use the handle to release the cache, as
+    * [[loadOrBuild]]) use the handle to release the cache, as
     * [[Dedup.minhashIndexWithSigs]]. */
   def buildIndexWithAssigned(corpus: DataFrame, idCol: String, embCol: String,
       dim: Int, nlist: Int, m: Int = 8, ksub: Int = 16,
@@ -209,77 +209,53 @@ object PqAnn {
       }.toDF()
   }
 
-  // ---- persistence (same layout contract as IvfAnn) ----------------
+  /** Content-signature + parameter-keyed location (stale codebooks for
+    * a regenerated dataset or different layout can never be probed). */
+  def scratchDir(dataset: String, nlist: Int, m: Int, ksub: Int): String =
+    graft.util.Stage.scratchDir("pq", dataset, "embeddings", nlist, m, ksub)
 
-  /** Codes land PARTITIONED BY cell (a probe's equi-join prunes to its
-    * cells' files); the model (cells + codebooks) is two tiny parquet
-    * tables. The whole index commits via [[graft.util.Stage]]
-    * staging-then-rename (Hadoop-FS, atomic, race-safe), same as
-    * [[IvfAnn.save]]. */
-  def save(index: Index, dir: String): Unit = {
-    val spark = index.codes.sparkSession
+  /** The index of `corpus` as a [[graft.util.Stage]] artifact at `dir`:
+    * codes PARTITIONED BY cell (a probe's equi-join prunes to its
+    * cells' files), plus the model (cells + codebooks) as two tiny
+    * tables, collected back into a [[Model]] on load. */
+  def loadOrBuild(corpus: DataFrame, idCol: String, embCol: String,
+      dim: Int, nlist: Int, m: Int = 8, ksub: Int = 16,
+      dir: String): Index = {
+    val spark = corpus.sparkSession
     import spark.implicits._
-    graft.util.Stage.publish(spark, dir, "books/_SUCCESS") { staging =>
-      index.codes.write.mode("overwrite").partitionBy("_cell")
-        .parquet(s"$staging/codes")
-      index.model.cells.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
-        .toDF("_cell", "_center")
-        .repartition(1).write.mode("overwrite").parquet(s"$staging/cells")
-      booksDf(spark, index.model.books)
-        .withColumn("_dim", lit(index.model.dim))
-        .repartition(1).write.mode("overwrite").parquet(s"$staging/books")
-    }
-  }
-
-  def isSaved(spark: SparkSession, dir: String): Boolean =
-    graft.util.Stage.isCommitted(spark, dir, "books/_SUCCESS")
-
-  def load(spark: SparkSession, dir: String): Index = {
-    // all three tables have layouts fixed by [[save]]'s construction —
-    // explicit schemas skip one footer-inference scheduler job per read
-    // (the [[graft.Tables.table]] / RollupStore pattern)
     import org.apache.spark.sql.types._
+    val codesSchema = StructType(Seq(StructField("vec_id", LongType),
+      StructField("_cell", IntegerType), StructField("_code", BinaryType)))
     val cellsSchema = StructType(Seq(StructField("_cell", IntegerType),
       StructField("_center", ArrayType(DoubleType))))
     val booksSchema = StructType(Seq(StructField("_m", IntegerType),
       StructField("_cid", IntegerType),
       StructField("_cw", ArrayType(DoubleType)),
       StructField("_dim", IntegerType)))
-    val codesSchema = StructType(Seq(StructField("vec_id", LongType),
-      StructField("_cell", IntegerType), StructField("_code", BinaryType)))
-    val cellRows = spark.read.schema(cellsSchema).parquet(s"$dir/cells").collect()
+    val Seq(codes, cellsPart, booksPart) = graft.util.Stage.loadOrBuild(spark, dir,
+        Seq("codes" -> codesSchema, "cells" -> cellsSchema,
+          "books" -> booksSchema)) {
+      val (built, assigned) =
+        buildIndexWithAssigned(corpus, idCol, embCol, dim, nlist, m, ksub)
+      graft.util.Stage.Built(Seq(
+        built.codes.write.partitionBy("_cell"),
+        built.model.cells.zipWithIndex.map { case (c, i) => (i, c.toSeq) }.toSeq
+          .toDF("_cell", "_center").repartition(1).write,
+        booksDf(spark, built.model.books).withColumn("_dim", lit(built.model.dim))
+          .repartition(1).write), () => assigned.unpersist())
+    }
+    val cellRows = cellsPart.collect()
     val cells = Array.ofDim[Array[Double]](cellRows.length)
     cellRows.foreach(r => cells(r.getInt(0)) = r.getSeq[Double](1).toArray)
-    val bookRows = spark.read.schema(booksSchema).parquet(s"$dir/books").collect()
-    val dim = bookRows.head.getAs[Int]("_dim")
-    val m = bookRows.map(_.getAs[Int]("_m")).max + 1
-    val ksub = bookRows.map(_.getAs[Int]("_cid")).max + 1
-    val books = Array.fill(m, ksub)(Array.empty[Double])
+    val bookRows = booksPart.collect()
+    val bookDim = bookRows.head.getAs[Int]("_dim")
+    val bookM = bookRows.map(_.getAs[Int]("_m")).max + 1
+    val bookK = bookRows.map(_.getAs[Int]("_cid")).max + 1
+    val books = Array.fill(bookM, bookK)(Array.empty[Double])
     bookRows.foreach { r =>
       books(r.getAs[Int]("_m"))(r.getAs[Int]("_cid")) =
         r.getAs[Seq[Double]]("_cw").toArray }
-    Index(Model(dim, m, ksub, cells, books),
-      spark.read.schema(codesSchema).parquet(s"$dir/codes"))
-  }
-
-  /** Content-signature + parameter-keyed scratch location (stale
-    * codebooks for a regenerated dataset or different layout can never
-    * be probed — the same contract as IvfAnn.scratchDir). */
-  def scratchDir(dataset: String, nlist: Int, m: Int, ksub: Int): String =
-    s"${System.getProperty("java.io.tmpdir")}/graft_ivfpq_${nlist}_${m}_${ksub}_${
-      graft.Tables.tableSignature(dataset, "embeddings")}"
-
-  def loadOrBuild(corpus: DataFrame, idCol: String, embCol: String,
-      dim: Int, nlist: Int, m: Int = 8, ksub: Int = 16,
-      dir: String): Index = {
-    val spark = corpus.sparkSession
-    if (!isSaved(spark, dir)) {
-      val (built, assigned) =
-        buildIndexWithAssigned(corpus, idCol, embCol, dim, nlist, m, ksub)
-      save(built, dir)
-      assigned.unpersist()
-    }
-    load(spark, dir)
+    Index(Model(bookDim, bookM, bookK, cells, books), codes)
   }
 
   final case class RawRow(id: Long, emb: Seq[Double])

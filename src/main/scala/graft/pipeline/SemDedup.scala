@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
 object SemDedup {
 
   /** Same-cell pairs with exact cosine >= threshold, over an existing
-    * (possibly [[IvfAnn.load]]ed) index — the deploy shape: build and
-    * persist the quantizer once, run dedup passes against it. */
+    * (possibly [[IvfAnn.loadOrBuild]]-loaded) index — the deploy shape:
+    * build and persist the quantizer once, run dedup passes against it. */
   def semanticPairsWithIndex(index: IvfAnn.Index, idCol: String,
       threshold: Double): DataFrame = {
     val a = index.assigned.select(col("_cell"), col(idCol).as("id_a"), col("_ne").as("_ea"))
@@ -52,7 +52,7 @@ object SemDedup {
     out
   }
 
-  /** SemDeDup against an existing (typically [[IvfAnn.load]]ed)
+  /** SemDeDup against an existing (typically [[IvfAnn.loadOrBuild]]-loaded)
     * index — the deploy shape: quantize and persist once, then every
     * dedup pass (rerun after a threshold change, a nightly re-audit, a
     * new downstream consumer) pays the in-cell pair scan only, reading

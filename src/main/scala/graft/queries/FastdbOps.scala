@@ -1116,15 +1116,13 @@ object FastdbOps {
     * charge the loader for a collect_list shuffle it never performs —
     * repeat runs measure what S2 is: a nested-parquet scan + explode. */
   def s2Dp1Load(s: SparkSession, d: String): DataFrame = {
-    // keyed on the SOURCE table's content signature: a regenerated
-    // dataset rebuilds the fixture instead of serving a stale one
-    // (s2 is oracled — a stale fixture would hash-mismatch)
-    val fixDir = s"${System.getProperty("java.io.tmpdir")}/graft_dp1_${
-      graft.Tables.tableSignature(d, "lineitem")}"
-    if (!new java.io.File(s"$fixDir/_SUCCESS").exists())
-      s2NestedFixture(s, d).write.mode("overwrite").parquet(fixDir)
-    val out = Dp1Loader.load(s.read.parquet(fixDir), "bpv-dp1")
-    s2Flat(out)
+    // content-signature-keyed: a regenerated dataset rebuilds the
+    // fixture instead of serving a stale one (s2 is oracled)
+    val fixture = s2NestedFixture(s, d)
+    val Seq(nested) = graft.util.Stage.loadOrBuild(s,
+        graft.util.Stage.scratchDir("dp1", d, "lineitem"),
+        Seq("nested" -> fixture.schema))(graft.util.Stage.Built(Seq(fixture.write)))
+    s2Flat(Dp1Loader.load(nested, "bpv-dp1"))
   }
 
   private def s2NestedFixture(s: SparkSession, d: String): DataFrame = {

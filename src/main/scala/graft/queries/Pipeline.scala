@@ -483,9 +483,9 @@ object Pipeline {
     // probing the full-corpus index (e5's mode) would match every eval
     // doc's own verbatim origin at Jaccard 1.0 and flag 100% of the
     // suite — so the fuzzy side gets its own corpus-only persisted
-    // index (still content-signature-keyed; "_e9c" suffixes the subset)
+    // index (still content-signature-keyed; "e9c" names the subset)
     val index = Dedup.loadOrBuildIndex(corpus, "doc_id", "text",
-      dir = Dedup.indexScratchDir(d) + "_e9c")
+      dir = Dedup.indexScratchDir(d, "e9c"))
     val fuzzy = graft.pipeline.Decontamination
       .fuzzyContamination(index, evalOff, "doc_id", "text", threshold = 0.5)
       .select((col("eval_doc_id") - 5000000L).as("eval_doc_id"), col("doc_id"))

@@ -122,6 +122,17 @@ object Quality {
       |  ROUND(AVG(lp), 6) AS avg_logp
       |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin
 
+  /** Per-run scratch for the streamed-ingestion entries: the index IS
+    * the stream's state, so each run gets a fresh directory — and the
+    * result is eagerly materialized (localCheckpoint) so the
+    * multi-segment parquet tree can be deleted before returning
+    * instead of accumulating under /tmp across bench repetitions. */
+  private def withStreamScratch(f: String => DataFrame): DataFrame = {
+    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    try f(dir).localCheckpoint(true)
+    finally graft.util.Local.deleteRecursively(dir)
+  }
+
   /** Streamed near-dup ingestion, end-to-end under the oracle gate:
     * the corpus arrives as four deterministic micro-batches
     * (batch k = doc_id % 4) through
@@ -133,21 +144,6 @@ object Quality {
     * ([[PortableHashOracle.st3Sql]]), so the evolving kept-set
     * semantics — not just the final pair graph — are hash-checked.
     * Fresh scratch per run: the index IS the stream's state. */
-  /** Per-run scratch for the streamed-ingestion entries: the index IS
-    * the stream's state, so each run gets a fresh directory — and the
-    * result is eagerly materialized (localCheckpoint) so the
-    * multi-segment parquet tree can be deleted before returning
-    * instead of accumulating under /tmp across bench repetitions. */
-  private def withStreamScratch(f: String => DataFrame): DataFrame = {
-    def deleteRec(file: java.io.File): Unit = {
-      Option(file.listFiles()).foreach(_.foreach(deleteRec))
-      file.delete(): Unit
-    }
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
-    try f(dir).localCheckpoint(true)
-    finally deleteRec(new java.io.File(dir))
-  }
-
   def st3StreamNeardup(s: SparkSession, d: String): DataFrame =
     withStreamScratch { dir =>
       val docs = documents(s, d)

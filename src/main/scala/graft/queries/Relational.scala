@@ -718,10 +718,6 @@ object Relational {
     * the output (state carries raw doubles; per-batch partial sums
     * reassociate differently than one pass). */
   def ev8IncrementalRollup(s: SparkSession, d: String): DataFrame = {
-    def deleteRec(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(deleteRec))
-      f.delete(): Unit
-    }
     val dir = java.nio.file.Files.createTempDirectory("graft_ev8").toString
     try {
       val ev = events(s, d).withColumn("day",
@@ -739,7 +735,7 @@ object Relational {
           round(col("sum_value"), 4).as("sum_value_r"))
         .orderBy("day", "event_type")
         .localCheckpoint(true)  // detach from the scratch tree before delete
-    } finally deleteRec(new java.io.File(dir))
+    } finally graft.util.Local.deleteRecursively(dir)
   }
 
   val ev8Sql: String =
@@ -953,36 +949,31 @@ object Relational {
     * session, sentinel 2 triggers the batch in which that watermark
     * evicts + emits them. Sentinel users are negative ids, filtered
     * from the result; their own sessions never close, so nothing
-    * synthetic can leak through the filter anyway. The staging copy is
-    * content-signature-keyed and written once per dataset; the real
-    * table rides in ONE file so no real row can arrive behind the
+    * synthetic can leak through the filter anyway. The staged copy
+    * (b0..b2) is a [[graft.util.Stage]] artifact; the real table rides in ONE file so no real row can arrive behind the
     * watermark (the checkpoint is fresh per run — replay determinism
     * is StreamingSpec territory). */
   def st2StreamSessions(s: SparkSession, d: String): DataFrame = {
-    import java.nio.file.{Files, Paths}
     val ev = events(s, d).select(col("ts"), col("user_id"))
-    val stage = s"${System.getProperty("java.io.tmpdir")}/graft_st2_${
-      graft.Tables.tableSignature(d, "events")}"
-    val done = Paths.get(s"$stage/_STAGED")
-    if (!Files.exists(done)) {
+    val stage = graft.util.Stage.scratchDir("st2", d, "events")
+    graft.util.Stage.loadOrBuild(s, stage, (0 to 2).map(i => s"b$i" -> ev.schema)) {
       val maxTs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
-      ev.coalesce(1).write.mode("overwrite").parquet(s"$stage/b0")
       val day = 86400000000L
-      Seq(1 -> (maxTs + 10 * day), 2 -> (maxTs + 11 * day)).foreach {
-        case (i, us) =>
-          s.range(1)
-            .select(timestamp_micros(lit(us)).as("ts"),
-              lit(-i.toLong).as("user_id"))
-            .coalesce(1).write.mode("overwrite").parquet(s"$stage/b$i")
-      }
-      Files.createFile(done)
+      graft.util.Stage.Built(ev.coalesce(1).write +:
+        Seq(1 -> (maxTs + 10 * day), 2 -> (maxTs + 11 * day)).map {
+          case (i, us) =>
+            s.range(1)
+              .select(timestamp_micros(lit(us)).as("ts"),
+                lit(-i.toLong).as("user_id"))
+              .coalesce(1).write
+        })
     }
-    val ckpt = Files.createTempDirectory("st2_ckpt").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("st2_ckpt").toString
     val name = "st2_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = graft.streaming.EventWindows
       .sessionCounts(
         s.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", "1").parquet(s"$stage/*"),
+          .option("maxFilesPerTrigger", "1").parquet(s"$stage/b*"),
         "ts", "user_id", gap = "30 minutes", lateness = "10 minutes")
       .writeStream
       .outputMode("append")

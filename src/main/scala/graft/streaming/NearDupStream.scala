@@ -46,7 +46,8 @@ object NearDupStream {
     * index (every doc would match its replayed twin and the "kept"
     * rewrite would empty the segment); a c-segment qualifies when
     * upTo <= below since it only holds strictly-earlier batches. */
-  private def committedSegments(root: String, below: Option[Long]): Seq[String] = {
+  private[streaming] def committedSegments(root: String,
+      below: Option[Long]): Seq[String] = {
     val parsed = Option(new java.io.File(root).listFiles()).map(_.toSeq).getOrElse(Nil)
       .filter(f => f.isDirectory && new java.io.File(f, "_SUCCESS").exists())
       .flatMap { f =>
@@ -206,18 +207,15 @@ object NearDupStream {
       val segs = committedSegments(root, Some(upTo))
       if (segs.size > 1) {
         val tmp = new java.io.File(s"$dir/_compact_tmp_$kind")
-        deleteRecursively(tmp)
+        graft.util.Local.deleteRecursively(tmp.getAbsolutePath)
         spark.read.parquet(segs: _*).coalesce(targetPartitions)
           .write.mode("overwrite").parquet(tmp.getAbsolutePath)
         val dest = new java.io.File(root, s"c$upTo")
-        deleteRecursively(dest)
+        graft.util.Local.deleteRecursively(dest.getAbsolutePath)
         require(tmp.renameTo(dest), s"compaction rename failed: $tmp -> $dest")
-        segs.foreach(p => deleteRecursively(new java.io.File(p)))
+        segs.foreach(graft.util.Local.deleteRecursively)
       }
     }
-
-  private def deleteRecursively(f: java.io.File): Unit =
-    graft.util.Local.deleteRecursively(f.getAbsolutePath)
 
   /** LIVE duplicate clusters: fold the batch's verified pairs into the
     * versioned (id, cluster) map via [[Components.updateClusters]] —

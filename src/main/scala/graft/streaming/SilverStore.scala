@@ -39,21 +39,6 @@ import graft.util.Local
   */
 final class SilverStore(baseDir: String) {
 
-  private val appendTables = Seq(
-    "root_diaobject" -> Schemas.rootDiaObject,
-    "diaobject" -> Schemas.diaObject,
-    "diasource" -> Schemas.diaSource,
-    "diaforcedsource" -> Schemas.diaForcedSource,
-    "diaobject_position" -> Schemas.diaObjectPosition,
-    "diasource_brokerinfo" -> Schemas.diaSourceBrokerInfo,
-    "thumbnails" -> Schemas.thumbnails)
-  /** COALESCE-upsert tables: stored append-only with a `_seq` column,
-    * merged on read. */
-  private val morTables = Seq(
-    "diasource_extra" -> Schemas.diaSourceExtra,
-    "diaforcedsource_extra" -> Schemas.diaForcedSourceExtra)
-  private val tables = (appendTables ++ morTables).toMap
-
   private def tableDir(name: String): Path = Paths.get(baseDir, name)
   private def manifestPath(name: String): Path = tableDir(name).resolve("_manifest")
 
@@ -63,30 +48,8 @@ final class SilverStore(baseDir: String) {
         .asScala.toSeq.filter(_.nonEmpty)
     else Seq.empty
 
-  /** Flat `.parquet` files in a manifest-less table dir are a store
-    * laid down by the pre-manifest format. Only FILES count as legacy
-    * content: a `seg_*` DIRECTORY with no manifest is an orphan from a
-    * crashed first-ever stage, and treating it as committed data would
-    * make the replayed batch's anti-joins see its rows as already
-    * present — the rows would never re-import, and the next commit's
-    * GC would delete the orphan: silent loss. The explicit file list
-    * (rather than reading the table dir) also keeps Spark from
-    * recursing into orphan segment dirs. [[commit]]'s GC only deletes
-    * `seg_*` dirs, so legacy files can never be destroyed. */
-  private def legacyFiles(name: String): Seq[String] = {
-    val d = tableDir(name)
-    if (Files.exists(manifestPath(name)) || !Files.exists(d)) return Nil
-    val s = Files.list(d)
-    try s.iterator().asScala.toSeq
-      .filter(p => Files.isRegularFile(p) &&
-        p.getFileName.toString.endsWith(".parquet"))
-      .map(_.toString)
-    finally s.close()
-  }
-
   private def segPaths(name: String): Seq[String] =
-    liveSegments(name).map(s => tableDir(name).resolve(s).toString) ++
-      legacyFiles(name)
+    liveSegments(name).map(s => tableDir(name).resolve(s).toString)
 
   private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
@@ -113,9 +76,7 @@ final class SilverStore(baseDir: String) {
     val raw = spark.read.schema(withSeq(schema)).parquet(paths: _*)
     val keys = Seq(schema.fields.head.name, "base_procver_id")
     val payload = schema.fieldNames.toSeq.filterNot(keys.contains)
-    // legacy (pre-manifest) files carry no _seq column → null → rank
-    // them first, like a seq-0 compacted segment
-    val seq = coalesce(col("_seq"), lit(0L))
+    val seq = col("_seq")
     raw.groupBy(keys.map(col): _*)
       .agg(min_by(col(payload.head), when(col(payload.head).isNotNull, seq)).as(payload.head),
         payload.tail.map(c =>
@@ -237,8 +198,7 @@ final class SilverStore(baseDir: String) {
     staged.entries.foreach { case (name, segs) => flipManifest(name, segs) }
     // GC: segments no longer referenced are garbage (orphans from
     // crashed stages are collected by the next successful commit).
-    // Only `seg_*` dirs and the manifest tmp are ever deleted — files
-    // from the pre-manifest flat layout are left untouched.
+    // Only `seg_*` dirs and the manifest tmp are ever deleted.
     staged.entries.foreach { case (name, segs) =>
       val live = segs.toSet
       if (Files.exists(tableDir(name))) {
@@ -274,33 +234,10 @@ final class SilverStore(baseDir: String) {
 
   def save(r: ImportResult): Unit = commit(stageFull(r))
 
-  /** First delta-write on a pre-manifest table: the manifest flip
-    * would hide the legacy flat files from segPaths, so the legacy
-    * rows are materialized into a segment FIRST and lead the new
-    * manifest. A crash before the flip leaves the manifest absent and
-    * the legacy files authoritative (the migration segment becomes a
-    * GC-able orphan); the legacy flat files themselves are never
-    * deleted either way. MOR tables read legacy with null `_seq`,
-    * which readMor ranks as seq 0 — the same compacted-base rank the
-    * migration preserves. */
-  private def migrateLegacy(name: String,
-      spark: SparkSession): Seq[String] = {
-    val files = legacyFiles(name)
-    if (files.isEmpty) Nil
-    else {
-      val schema =
-        if (morTables.exists(_._1 == name)) withSeq(tables(name))
-        else tables(name)
-      writeSegment(name, spark.read.schema(schema).parquet(files: _*)).toSeq
-    }
-  }
-
   /** Append one importer batch: O(delta) I/O. Insert-only tables gain
     * a segment holding exactly their new rows; COALESCE tables append
     * their staged docs with the next `_seq` (merge-on-read recovers
-    * upsert semantics); untouched tables' manifests are not flipped.
-    * A table still on the pre-manifest flat layout is migrated into
-    * its first manifest (see [[migrateLegacy]]). */
+    * upsert semantics); untouched tables' manifests are not flipped. */
   def saveDelta(d: ImportDeltas): Unit = {
     val appends = Seq(
       "root_diaobject" -> d.rootDiaobject, "diaobject" -> d.diaobject,
@@ -315,10 +252,7 @@ final class SilverStore(baseDir: String) {
         name -> df.withColumn("_seq", lit(seq))
       }
     val staged = Staged(stagePar(appends ++ morAppends) { case (name, df) =>
-      writeSegment(name, df).map { seg =>
-        val legacy = migrateLegacy(name, df.sparkSession)
-        name -> (legacy ++ liveSegments(name) :+ seg)
-      }
+      writeSegment(name, df).map(seg => name -> (liveSegments(name) :+ seg))
     }.flatten)
     commit(staged)
   }

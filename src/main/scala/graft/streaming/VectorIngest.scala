@@ -19,7 +19,7 @@ import graft.pipeline.PqAnn
   * delivery cannot duplicate codes (the [[NearDupStream]] segment
   * idea; `_SUCCESS` is the commit marker and marker-less crash debris
   * is ignored). At 100 TB each segment would additionally be laid out
-  * partitioned by `_cell` like [[PqAnn.save]]; segments stay small
+  * partitioned by `_cell` like [[PqAnn.loadOrBuild]]; segments stay small
   * (one micro-batch), so cell-partitioning the COMPACTED view is the
   * operative layout — compaction composes exactly as
   * [[NearDupStream.compactSegments]].
@@ -34,21 +34,16 @@ object VectorIngest {
       .write.mode("overwrite").parquet(s"$dir/codes/b$batchId")
   }
 
-  private def committedSegments(root: String): Seq[String] =
-    Option(new java.io.File(root).listFiles()).map(_.toSeq).getOrElse(Nil)
-      .filter(f => f.isDirectory && f.getName.startsWith("b") &&
-        new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getAbsolutePath).sorted
-
   /** The accumulated index over all committed segments, probe-ready
     * with the same frozen model. Empty stream → empty code table
-    * (typed via an empty encode of `like`). */
+    * (typed via an empty encode of `like`, whose schema also types the
+    * segment read). */
   def loadIndex(spark: SparkSession, dir: String, model: PqAnn.Model,
       like: DataFrame, idCol: String, embCol: String): PqAnn.Index = {
-    val segs = committedSegments(s"$dir/codes")
-    val codes =
-      if (segs.isEmpty) PqAnn.encodeNew(model, like.limit(0), idCol, embCol)
-      else spark.read.parquet(segs: _*)
-    PqAnn.Index(model, codes)
+    val segs = NearDupStream.committedSegments(s"$dir/codes", None)
+    val empty = PqAnn.encodeNew(model, like.limit(0), idCol, embCol)
+    PqAnn.Index(model,
+      if (segs.isEmpty) empty
+      else spark.read.schema(empty.schema).parquet(segs: _*))
   }
 }

@@ -186,9 +186,9 @@ class PipelineSpec extends AnyFunSuite {
     val q = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding"))
     val dir = java.nio.file.Files.createTempDirectory("ivf_persist").toString
-    assert(!IvfAnn.isSaved(spark, dir))
+    assert(!graft.util.Stage.isCommitted(spark, dir))
     val viaBuild = IvfAnn.loadOrBuild(emb, "vec_id", "embedding", 8, dir)
-    assert(IvfAnn.isSaved(spark, dir))
+    assert(graft.util.Stage.isCommitted(spark, dir))
     // the layout is partitioned by cell id → a probe reads only its cells
     val cellDirs = new java.io.File(s"$dir/assigned").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("_cell="))
@@ -254,10 +254,10 @@ class PipelineSpec extends AnyFunSuite {
     val q = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding"))
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_persist").toString
-    assert(!PqAnn.isSaved(spark, dir))
+    assert(!graft.util.Stage.isCommitted(spark, dir))
     val viaBuild = PqAnn.loadOrBuild(emb, "vec_id", "embedding",
       dim = 64, nlist = 8, m = 8, ksub = 16, dir = dir)
-    assert(PqAnn.isSaved(spark, dir))
+    assert(graft.util.Stage.isCommitted(spark, dir))
     val cellDirs = new java.io.File(s"$dir/codes").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("_cell="))
     assert(cellDirs.length == 8, s"expected 8 cell partitions, got ${cellDirs.length}")

@@ -510,9 +510,10 @@ class QualitySpec extends AnyFunSuite {
     Components.release(viaIndex)
     Components.release(inPlace)
     // and a RE-load (second consumer) sees the same index
-    assert(IvfAnn.isSaved(spark, dir))
+    assert(graft.util.Stage.isCommitted(spark, dir))
     val again = SemDedup.semanticDedupWithIndex(
-      IvfAnn.load(spark, dir), "vec_id", threshold = 0.9)
+      IvfAnn.loadOrBuild(semCorpus, "vec_id", "embedding", nlist = 8, dir = dir),
+      "vec_id", threshold = 0.9)
     assert(again.collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSet == a)
     Components.release(again)
   }

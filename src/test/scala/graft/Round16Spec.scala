@@ -58,13 +58,80 @@ class Round16Spec extends AnyFunSuite {
     assert(Stage.isCommitted(spark, dir2))
     assert(spark.read.parquet(dir2).count() == 1)
 
-    // custom marker: not committed until the marker's own subdir exists
+    // loadOrBuild: named parts in order, root _SUCCESS last — nothing
+    // is committed while the build runs
     val dir3 = s"${tmpBase("stage3")}/artifact"
-    Stage.publish(spark, dir3, "inner/_SUCCESS") { staging =>
-      Seq((1L, "x")).toDF("id", "v").write.parquet(s"$staging/inner")
+    val part = Seq((1L, "x")).toDF("id", "v")
+    val Seq(inner, outer) = Stage.loadOrBuild(spark, dir3,
+        Seq("inner" -> part.schema, "outer" -> part.schema)) {
+      assert(!Stage.isCommitted(spark, dir3))
+      Stage.Built(Seq(part.write, part.union(part).write))
     }
-    assert(Stage.isCommitted(spark, dir3, "inner/_SUCCESS"))
-    assert(!Stage.isCommitted(spark, dir3)) // no top-level _SUCCESS
+    assert(Stage.isCommitted(spark, dir3))
+    assert(new java.io.File(s"$dir3/inner/_SUCCESS").exists())
+    assert(inner.count() == 1 && outer.count() == 2)
+  }
+
+  /** Spark jobs launched while `f` runs on this thread: job-start
+    * events of this thread's job group, counted up to a marker job run
+    * after `f` — the listener bus is ordered, so once the marker
+    * arrives every earlier job has been seen. */
+  private def jobsDuring[A](f: => A): (A, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"jobsDuring-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null &&
+            j.properties.getProperty("spark.jobGroup.id") == group)
+          seen.put(String.valueOf(j.properties.getProperty("spark.job.description")))
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "counted")
+    try {
+      val a = f
+      sc.setJobGroup(group, "marker")
+      sc.parallelize(Seq(1), 1).count()
+      var n = 0
+      var next = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (next != "marker") {
+        assert(next != null, "marker job never reached the listener")
+        n += 1
+        next = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      (a, n)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("Stage.loadOrBuild: a committed artifact loads without building " +
+    "and without a Spark job") {
+    import graft.util.Stage
+    val dir = s"${tmpBase("lifecycle")}/artifact"
+    val part = Seq((1L, "a"), (2L, "b")).toDF("id", "v")
+    def load(build: => Stage.Built) =
+      Stage.loadOrBuild(spark, dir, Seq("rows" -> part.schema))(build)
+    load(Stage.Built(Seq(part.write)))
+    val (Seq(rows), jobs) = jobsDuring(
+      load(sys.error("a committed artifact must not be rebuilt")))
+    assert(jobs == 0, s"$jobs job(s) before the first action")
+    assert(rows.count() == 2)
+
+    // the cluster table through its family entry point (its load used
+    // to infer the schema from the parquet footers: one job per call)
+    val ds = tmpBase("lifecycle_cc")
+    val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z w q"))
+      .toDF("doc_id", "text")
+    docs.write.parquet(s"$ds/documents.parquet")
+    graft.pipeline.ClusterStore.loadOrBuild(spark, ds, docs)
+    val (clusters, ccJobs) = jobsDuring(graft.pipeline.ClusterStore
+      .loadOrBuild(spark, ds, sys.error("a committed artifact must not be rebuilt")))
+    assert(ccJobs == 0, s"$ccJobs job(s) before the first action")
+    assert(clusters.filter(col("is_rep")).count() == 2)
+    graft.util.Local.deleteRecursively(graft.pipeline.ClusterStore.scratchDir(ds, 3, 0.5))
   }
 
   test("hardNegatives: duplicate ranks resolve by id, partition-invariant") {

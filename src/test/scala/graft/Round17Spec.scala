@@ -255,17 +255,17 @@ class Round17Spec extends AnyFunSuite {
       .toDF("vec_id", "embedding")
     val dir = s"${tmpBase("ivf17")}/ix"
     graft.pipeline.IvfAnn.loadOrBuild(emb, "vec_id", "embedding", 4, dir)
-    // the NLIST marker records the REQUESTED resolution — a later
+    // the artifact's stamp records the REQUESTED resolution — a later
     // request at a different one fails loudly in BOTH directions
     val up = intercept[IllegalArgumentException] {
       graft.pipeline.IvfAnn.loadOrBuild(emb, "vec_id", "embedding", 8, dir)
     }
-    assert(up.getMessage.contains("NLIST_4") && up.getMessage.contains("nlist=8"))
+    assert(up.getMessage.contains("nlist=4") && up.getMessage.contains("nlist=8"))
     val down = intercept[IllegalArgumentException] {
       graft.pipeline.IvfAnn.loadOrBuild(emb, "vec_id", "embedding", 2, dir)
     }
-    assert(down.getMessage.contains("NLIST_4") && down.getMessage.contains("nlist=2"))
-    // same resolution reloads fine (no count job, just the marker probe)
+    assert(down.getMessage.contains("nlist=4") && down.getMessage.contains("nlist=2"))
+    // same resolution reloads fine (no count job, just the marker read)
     assert(graft.pipeline.IvfAnn
       .loadOrBuild(emb, "vec_id", "embedding", 4, dir).centroids.count() == 4)
     // and nlist-keyed scratch locations can't collide in the first place

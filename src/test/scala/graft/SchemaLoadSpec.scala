@@ -5,13 +5,13 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.pipeline.{Dedup, IvfAnn, PqAnn}
+import graft.pipeline.{ClusterStore, Dedup, IvfAnn, PqAnn}
 
-/** r16 footer-inference sweep: every persisted-index load now passes an
-  * explicit schema (plan-only, no inference job). These tests pin the
-  * CONTRACT that makes the optimization safe — the constructed schemas
-  * describe the bytes actually on disk: loading with them returns the
-  * same columns, types, and rows as the schemaless (inference) read. */
+/** Every persisted-artifact load passes an explicit schema (plan-only,
+  * no inference job). These tests pin the CONTRACT that makes that
+  * safe — the declared schemas describe the bytes actually on disk:
+  * loading with them returns the same columns, types, and rows as the
+  * schemaless (inference) read of each part. */
 class SchemaLoadSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -30,58 +30,59 @@ class SchemaLoadSpec extends AnyFunSuite {
     (5L, "short text")).toDF("doc_id", "text")
 
   test("minhash index: explicit-schema load ≡ schemaless load") {
-    val dir = Files.createTempDirectory("sls_mh").toString
-    val (built, sigs) = Dedup.minhashIndexWithSigs(docs, "doc_id", "text",
-      shingleWords = 2, numHashes = 8, bands = 4)
-    Dedup.saveIndex(built, dir)
-    sigs.unpersist()
-    val plain = Dedup.loadIndex(spark, dir)
-    val schemas = Dedup.indexSchemas(docs, "doc_id", "text",
-      shingleWords = 2, numHashes = 8, bands = 4)
-    val typed = Dedup.loadIndex(spark, dir, Some(schemas))
-    assert(shape(typed.buckets).toSet === shape(plain.buckets).toSet)
-    assert(shape(typed.shingles).toSet === shape(plain.shingles).toSet)
+    val dir = Files.createTempDirectory("sls_mh").toString + "/ix"
+    val typed = Dedup.loadOrBuildIndex(docs, "doc_id", "text",
+      shingleWords = 2, numHashes = 8, bands = 4, dir = dir)
+    val plainBuckets = spark.read.parquet(s"$dir/buckets")
+    val plainShingles = spark.read.parquet(s"$dir/shingles")
+    assert(shape(typed.buckets).toSet === shape(plainBuckets).toSet)
+    assert(shape(typed.shingles).toSet === shape(plainShingles).toSet)
     assert(rows(typed.buckets.select("_band", "_bucket", "doc_id")) ===
-      rows(plain.buckets.select("_band", "_bucket", "doc_id")))
-    assert(rows(typed.shingles) === rows(plain.shingles))
+      rows(plainBuckets.select("_band", "_bucket", "doc_id")))
+    assert(rows(typed.shingles) === rows(plainShingles))
     graft.util.Local.deleteRecursively(dir)
   }
 
   test("simhash index: explicit-schema load ≡ schemaless load") {
-    val dir = Files.createTempDirectory("sls_sh").toString
-    val (built, sigs) = Dedup.simhashIndexWithSigs(docs, "doc_id", "text",
-      maxHamming = 2, shingleWords = 2)
-    Dedup.saveSimhashIndex(built, dir)
-    sigs.unpersist()
-    val plain = Dedup.loadSimhashIndex(spark, dir)
-    val schemas = Dedup.simhashIndexSchemas(docs, "doc_id", "text",
-      maxHamming = 2, shingleWords = 2)
-    val typed = Dedup.loadSimhashIndex(spark, dir, Some(schemas))
-    assert(shape(typed.keys).toSet === shape(plain.keys).toSet)
-    assert(shape(typed.shingles).toSet === shape(plain.shingles).toSet)
+    val dir = Files.createTempDirectory("sls_sh").toString + "/ix"
+    val typed = Dedup.loadOrBuildSimhashIndex(docs, "doc_id", "text",
+      maxHamming = 2, shingleWords = 2, dir = dir)
+    val plainKeys = spark.read.parquet(s"$dir/keys")
+    val plainShingles = spark.read.parquet(s"$dir/shingles")
+    assert(shape(typed.keys).toSet === shape(plainKeys).toSet)
+    assert(shape(typed.shingles).toSet === shape(plainShingles).toSet)
     assert(rows(typed.keys.select("_comb", "_v1", "_v2", "doc_id", "_sim")) ===
-      rows(plain.keys.select("_comb", "_v1", "_v2", "doc_id", "_sim")))
-    assert(rows(typed.shingles) === rows(plain.shingles))
+      rows(plainKeys.select("_comb", "_v1", "_v2", "doc_id", "_sim")))
+    assert(rows(typed.shingles) === rows(plainShingles))
     graft.util.Local.deleteRecursively(dir)
   }
 
   test("IVF index: explicit-schema load ≡ schemaless load") {
-    val dir = Files.createTempDirectory("sls_ivf").toString
+    val dir = Files.createTempDirectory("sls_ivf").toString + "/ix"
     val emb = (0L until 40L).map(i =>
       (i, Array.tabulate(4)(k => ((i % 5) + k * 0.1)))).toSeq
       .toDF("vec_id", "embedding")
-    val built = IvfAnn.buildIndex(emb, "vec_id", "embedding", nlist = 3)
-    IvfAnn.save(built, dir, nlist = 3)
-    built.assigned.unpersist()
-    val plain = IvfAnn.load(spark, dir)
-    val typed = IvfAnn.load(spark, dir,
-      Some(IvfAnn.indexSchemas(emb, "vec_id", "embedding")))
-    assert(shape(typed.assigned).toSet === shape(plain.assigned).toSet)
-    assert(shape(typed.centroids).toSet === shape(plain.centroids).toSet)
+    val typed = IvfAnn.loadOrBuild(emb, "vec_id", "embedding", nlist = 3, dir = dir)
+    val plainAssigned = spark.read.parquet(s"$dir/assigned")
+    val plainCentroids = spark.read.parquet(s"$dir/centroids")
+    assert(shape(typed.assigned).toSet === shape(plainAssigned).toSet)
+    assert(shape(typed.centroids).toSet === shape(plainCentroids).toSet)
     assert(rows(typed.assigned.select("vec_id", "_cell")) ===
-      rows(plain.assigned.select("vec_id", "_cell")))
-    assert(rows(typed.centroids) === rows(plain.centroids))
+      rows(plainAssigned.select("vec_id", "_cell")))
+    assert(rows(typed.centroids) === rows(plainCentroids))
     graft.util.Local.deleteRecursively(dir)
+  }
+
+  test("cluster table: explicit-schema load ≡ schemaless load") {
+    val ds = Files.createTempDirectory("sls_cc").toString
+    docs.write.parquet(s"$ds/documents.parquet")
+    val typed = ClusterStore.loadOrBuild(spark, ds, docs)
+    val dir = ClusterStore.scratchDir(ds, 3, 0.5)
+    val plain = spark.read.parquet(s"$dir/clusters")
+    assert(shape(typed) === shape(plain))
+    assert(rows(typed) === rows(plain))
+    graft.util.Local.deleteRecursively(dir)
+    graft.util.Local.deleteRecursively(ds)
   }
 
   test("PQ index: static-schema load matches the persisted layout") {

@@ -166,44 +166,6 @@ class StreamingSpec extends AnyFunSuite {
       "replayed rows must land")
   }
 
-  test("silver store: first saveDelta on a legacy flat store keeps the legacy rows") {
-    val dir = Files.createTempDirectory("legacy").toString
-    // lay down a pre-manifest store: flat parquet directly in table dirs
-    val store0 = new SilverStore(dir)
-    val w1 = AlertStream.wrangle(alertsDf(Seq(1L, 2L, 3L), 9L, 1.0, 2.0), "bpv-c")
-    val (full1, _) = graft.merge.SourceImporter.importBatchWithDeltas(
-      store0.load(spark), w1.objects, w1.sources, w1.forced)
-    Seq("root_diaobject" -> full1.rootDiaobject, "diaobject" -> full1.diaobject,
-      "diasource" -> full1.diasource, "diaforcedsource" -> full1.diaforcedsource,
-      "diaobject_position" -> full1.diaobjectPosition)
-      .foreach { case (n, df) => df.write.parquet(s"$dir/$n") }
-    Seq("diasource_extra" -> full1.diasourceExtra,
-      "diaforcedsource_extra" -> full1.diaforcedsourceExtra)
-      .foreach { case (n, df) => df.write.parquet(s"$dir/$n") }
-
-    val store = new SilverStore(dir)
-    val legacyIds = store.load(spark).diasource
-      .select("diasourceid").collect().map(_.getLong(0)).toSet
-    assert(legacyIds.nonEmpty, "legacy flat files must be readable")
-
-    // first delta write: new rows AND the legacy rows must survive the
-    // manifest flip
-    val w2 = AlertStream.wrangle(alertsDf(Seq(50L), 9L, 1.0, 2.0), "bpv-c")
-    val (_, d2) = graft.merge.SourceImporter.importBatchWithDeltas(
-      store.load(spark), w2.objects, w2.sources, w2.forced)
-    store.saveDelta(d2)
-    val after = store.load(spark).diasource
-      .select("diasourceid").collect().map(_.getLong(0)).toSet
-    assert(legacyIds.subsetOf(after),
-      s"legacy rows hidden by the manifest flip: ${legacyIds -- after}")
-    assert((after -- legacyIds).nonEmpty, "the delta itself must land too")
-    // idempotent replay of the same batch: nothing new
-    val (_, d2b) = graft.merge.SourceImporter.importBatchWithDeltas(
-      store.load(spark), w2.objects, w2.sources, w2.forced)
-    store.saveDelta(d2b)
-    assert(store.load(spark).diasource.count() == after.size)
-  }
-
   test("silver store: saveDelta commits leak no file descriptors") {
     val fds = new java.io.File("/proc/self/fd")
     assume(fds.isDirectory, "needs /proc/self/fd")
