@@ -258,8 +258,8 @@ object Bench {
     * NoClassDefFoundError). Fallback for launchers whose class.path
     * is just a bootstrap jar: code-source locations (graft classes
     * dir + the Spark jars dir glob). */
-  private[graft] def forkChild(childArgs: Seq[String], log: File,
-      timeoutMin: Long, env: Map[String, String] = Map.empty): Boolean = {
+  private def forkChild(childArgs: Seq[String], log: File,
+      timeoutMin: Long): Boolean = {
     def loc(c: Class[_]): String =
       new File(c.getProtectionDomain.getCodeSource.getLocation.toURI).getAbsolutePath
     val graftCp = loc(Bench.getClass)
@@ -279,7 +279,6 @@ object Bench {
       "-Dspark.ui.enabled=false",
       "-cp", cp, "graft.Bench") ++ childArgs
     val pb = new ProcessBuilder(cmd: _*)
-    env.foreach { case (k, v) => pb.environment().put(k, v) }
     pb.redirectErrorStream(true)
     pb.redirectOutput(ProcessBuilder.Redirect.appendTo(log))
     val p = pb.start()

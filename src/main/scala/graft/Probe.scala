@@ -5,14 +5,16 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FormattedMode
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Solo measurement of battery queries: `runMain graft.Probe
   * <name[,name...]> [runs]` over SPARK_GRAFT_SF_DIR, default 3 runs with
   * Bench's cache hygiene between them. Per query it prints
   *  - each run's seconds with its Spark job and stage counts:
-  *    fixed-cost queries (SfScaling exponent ≈ 0) pay scheduler
-  *    round-trips, so the job count is what wall-clock alone can't show;
+  *    fixed-cost queries pay scheduler round-trips, so the job count is
+  *    what wall-clock alone can't show;
   *  - the last run's per-job census: id, wall-clock, and the label or
   *    call site that scheduled it;
   *  - the formatted physical plan of the last run's frame. A composite
@@ -23,12 +25,21 @@ import org.apache.spark.sql.execution.FormattedMode
   *
   * SPARK_GRAFT_CONF (semicolon-separated k=v) overrides session conf,
   * so an A/B like "same query, AQE off" is one env var instead of a
-  * recompile. Bench never reads it. */
+  * recompile. Bench never reads it. [[Meter]] is the measured run
+  * [[TailScale]] shares. */
 object Probe {
 
-  private final case class Job(id: Int, stages: Int, label: String,
+  final case class Job(id: Int, stages: Int, label: String,
       startNs: Long) {
     @volatile var endNs: Long = -1L
+  }
+
+  /** One measured run: wall seconds of building the frame plus its
+    * noop-sink write, the jobs both launched, and (when asked for) the
+    * frame's formatted plan. */
+  final case class Run(secs: Double, jobs: Seq[Job], plan: Option[String]) {
+    def summary: String =
+      f"$secs%.3f s jobs=${jobs.size} stages=${jobs.map(_.stages).sum}"
   }
 
   /** The one listener: every job's stage count, label and wall-clock. */
@@ -62,12 +73,36 @@ object Probe {
       Option(jobs.get(j.jobId)).foreach(_.endNs = System.nanoTime())
   }
 
-  def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").toSeq
-    val runs = if (args.length > 1) args(1).toInt else 3
-    require(runs >= 1, s"runs must be >= 1, got $runs")
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
-      sys.error("set SPARK_GRAFT_SF_DIR to a test-data directory"))
+  /** Measured runs on one session, whose job census listener it
+    * installs. */
+  final class Meter(val spark: SparkSession) {
+    private val census = new Census
+    spark.sparkContext.addSparkListener(census)
+
+    /** Build the frame and write it to the noop sink, timed; then drain
+      * the listener bus (outside the timed region: events arrive
+      * asynchronously, and an undrained run's jobs undercount and bleed
+      * into the next), take the census, and clean the session's caches. */
+    def run(build: => DataFrame, explain: Boolean = false): Run = {
+      census.jobs.clear()
+      val t0 = System.nanoTime()
+      val df = build
+      df.write.mode("overwrite").format("noop").save()
+      val secs = (System.nanoTime() - t0) / 1e9
+      Bridge.drainListeners(spark.sparkContext)
+      val jobs = census.jobs.values.asScala.toSeq.sortBy(_.id)
+      val plan =
+        if (explain) Some(df.queryExecution.explainString(FormattedMode)) else None
+      GraftSession.clean(spark)
+      Run(secs, jobs, plan)
+    }
+
+    def close(): Unit = spark.sparkContext.removeSparkListener(census)
+  }
+
+  /** The probing mains' session: [[GraftSession]] with SPARK_GRAFT_CONF
+    * applied, metered. */
+  def meter(): Meter = {
     val conf = sys.env.get("SPARK_GRAFT_CONF").toSeq.flatMap(_.split(';'))
       .map(_.trim).filter(_.nonEmpty).map { kv =>
         kv.split("=", 2) match {
@@ -75,35 +110,31 @@ object Probe {
           case _ => sys.error(s"bad SPARK_GRAFT_CONF entry (need k=v): '$kv'")
         }
       }.toMap
-    val spark = GraftSession.create(conf = conf)
-    val census = new Census
-    spark.sparkContext.addSparkListener(census)
+    new Meter(GraftSession.create(conf = conf))
+  }
+
+  def main(args: Array[String]): Unit = {
+    val names = args(0).split(",").toSeq
+    val runs = if (args.length > 1) args(1).toInt else 3
+    require(runs >= 1, s"runs must be >= 1, got $runs")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR",
+      sys.error("set SPARK_GRAFT_SF_DIR to a test-data directory"))
+    val m = meter()
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
       (1 to runs).foreach { i =>
-        census.jobs.clear()
-        val t0 = System.nanoTime()
-        val df = fn(spark, sfDir)
-        df.write.mode("overwrite").format("noop").save()
-        val secs = (System.nanoTime() - t0) / 1e9
-        // listener events arrive asynchronously on the bus: read the
-        // census only after a drain pause, outside the timed region, or
-        // a run's jobs undercount and bleed into the next run
-        Thread.sleep(500)
-        val jobs = census.jobs.values.asScala.toSeq.sortBy(_.id)
-        println(f"[probe] $name run$i: $secs%.3f s" +
-          s" jobs=${jobs.size} stages=${jobs.map(_.stages).sum}")
-        if (i == runs) {
-          jobs.foreach { j =>
+        val last = i == runs
+        val r = m.run(fn(m.spark, sfDir), explain = last)
+        println(s"[probe] $name run$i: ${r.summary}")
+        if (last) {
+          r.jobs.foreach { j =>
             val ms = if (j.endNs < 0) Double.NaN else (j.endNs - j.startNs) / 1e6
             println(f"[probe] $name job ${j.id}%4d $ms%8.1f ms  ${j.label}")
           }
-          println(s"[probe] $name plan:\n" +
-            df.queryExecution.explainString(FormattedMode))
+          r.plan.foreach(plan => println(s"[probe] $name plan:\n$plan"))
         }
-        GraftSession.clean(spark)
       }
     }
-    spark.stop()
+    m.spark.stop()
   }
 }

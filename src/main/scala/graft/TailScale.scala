@@ -1,23 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** One-decade-deeper exponent probe for the battery's highest-exponent
-  * tail: `runMain graft.TailScale <query> <nCopies>`.
+/** The scale probe: `runMain graft.TailScale <query> <nCopies> [warms]`.
   *
-  * SfScaling fits per-query exponents across sf0.001/0.01/0.1 and the
-  * 0.3–0.42 tail (e3, g2, g3, g4, a19) reads as "a linear term emerging
-  * above a large constant" — a claim that should be TESTED one decade
-  * up, where a hidden superlinear term would finally dominate. This
-  * harness builds ScaleCheck-style disjoint-copy inputs at N× the
-  * sf0.1 tables (true work grows exactly ×N by construction) into a
+  * At sf0.1 most of the battery measures fixed cost, so a scale claim
+  * is tested one or two decades up, where a hidden superlinear term
+  * would finally dominate. This harness builds disjoint-copy inputs at
+  * N× the base table the query scales ([[scaledTable]]) into a
   * directory shaped like a testdata dir, then runs the REAL battery
   * entry (`SparkEntry.queries(name)`) against it — same plan, same
-  * rounding, same orderBy, nothing re-derived for the harness.
+  * rounding, same orderBy, nothing re-derived for the harness. Every
+  * other table is symlinked through at 1×.
   *
-  * Copy construction (ScaleCheck builds its copies with the same
-  * generators):
+  * Copy construction ([[generators]]; true work grows exactly ×N):
   *  - documents: copy k offsets doc_id by k·10⁷ and suffixes every
   *    word with `_ck` — shingle/df structure replicates per copy,
   *    disjoint across copies.
@@ -27,46 +24,24 @@ import org.apache.spark.sql.functions._
   *    rootid = ok % 1000 and visit = pk % 100 distributions, so
   *    light-curve groups DEEPEN ×N exactly as they do when the real
   *    table grows).
+  *  - events: event_id offset by k·10⁹ (divisible by 4, so the
+  *    battery's %4 micro-batch split keeps its distribution);
+  *    ts/type/value untouched, so rollup groups and sessions DEEPEN ×N
+  *    as a busier real stream would.
+  *  - embeddings: vec_id offset by k·10⁷, vectors rotated/negated per
+  *    copy ([[embeddingCopy]]).
   *
-  * Run each (query, scale) in its own JVM invocation (the SfScaling
-  * discipline); generation is cached per scale under the scratch dir
-  * and excluded from timings. Prints cold + warm median over nWarms
-  * runs (optional third arg, default 3; an even count reports the
-  * mean of the middle two); the exponent one decade up is
-  * log10(t(100×)/t(10×)).
-  *
-  * Round-14 additions: e4/e7 (documents copies), ev8 (events copies —
-  * rollup groups deepen ×N), and the d6 OPERATOR probe (embeddings
-  * copies rotated/negated per copy + nlist scaled ×N — see the
-  * d6Probe note for why the battery's planted-pair contract cannot be
-  * replicated ×N directly).
+  * Each run is [[Probe.Meter.run]]: seconds plus the job and stage
+  * census, with cache hygiene between runs. Run each (query, scale) in
+  * its own JVM invocation; generation is cached per scale and core
+  * count under the scratch dir and excluded from timings. Prints every
+  * run, then cold + warm median over `warms` runs (default 3; an even
+  * count reports the mean of the middle two); the exponent one decade
+  * up is log10(t(100×)/t(10×)). At ×1 any battery query runs against
+  * SPARK_GRAFT_SF_DIR itself, which is the per-scale-factor sweep.
   */
 object TailScale {
 
-  // e8 (r16): pure documents-table derivation like e3 — the whole
-  // export (dedup → exact-k cap → global shuffle → pack → manifest)
-  // deepens ×N, exercising this round's narrow-shuffle rewrite.
-  // e1 (r16): documents-only funnel whose pair stage auto-switches to
-  // the PPJoin prefix-filter branch above 50k docs — ×10 of sf0.1
-  // crosses that threshold, so this probe measures the branch the
-  // 100 TB brief would actually run (sf0.1 itself never exercises it
-  // at battery scale).
-  private val docQueries = Set("e1_corpus_funnel", "e3_export_manifest",
-    "e4_tokenized_pack", "e7_bloom_decontaminate", "e8_training_export")
-  // a2/a4/sp1 (r15): lineitem-derived photometry deepens ×N under the
-  // same offsets — rootid = l_orderkey % 1000 and apiCatalog's
-  // diaobjectid = (l_orderkey*10 + l_linenumber) % 400 are both
-  // preserved because k·10⁹·10 is divisible by 1000 and 400 — so the
-  // per-object light curves grow ×N exactly as a longer survey would
-  // grow them. sp1's dims (customer/supplier/nation wanted lists) ride
-  // through as symlinks at 1×: dim tables don't grow with the survey.
-  private val liQueries =
-    Set("g2_triangles", "g3_link_predict", "g4_communities", "a19_lomb_scargle",
-      "a2_objstats", "a4_rollup", "sp1_wanted_spectra")
-  // st2 (r15): events copies share user_id/ts, so each user's session
-  // structure keeps its bounds while every session deepens ×N — a
-  // busier stream, the realistic growth mode for sessionization.
-  private val evQueries = Set("ev8_incremental_rollup", "st2_stream_sessions")
   // d6's battery entry is its planted-pair contract, whose truth-pair
   // volume is QUADRATIC in the vector count by construction (8 fixed
   // planted groups that deepen with the corpus) — replicating it ×N
@@ -78,6 +53,43 @@ object TailScale {
   // question being tested.
   private val d6Probe = "d6_semantic_dedup"
 
+  /** Query → the one table whose copies it scales over. A query is
+    * mapped only when its entry reads that table plus dimension tables
+    * and nothing else, and its construction grows ×N with the copies.
+    * a16_structure_func stays out: its rootid = l_orderkey % 1000 is
+    * shared by every copy, so each curve deepens ×N and the in-window
+    * pair volume grows ×N² by construction. */
+  private[graft] val scaledTable: Map[String, String] = {
+    // e1 (r16): its pair stage switches to the PPJoin prefix-filter
+    // branch above 50k docs, so ×10 of sf0.1 measures the branch a
+    // 100 TB run would take (sf0.1 itself never exercises it).
+    val documents = Seq("e1_corpus_funnel", "e3_export_manifest",
+      "e4_tokenized_pack", "e7_bloom_decontaminate", "e8_training_export",
+      "d1_exact_dedup", "d2_minhash_lsh", "d3_simhash", "d4_ngram_jaccard",
+      "d7_dup_spans", "d9_incremental_neardup", "d12_containment",
+      "cc1_dedup_clusters", "cc5_live_clusters", "p7_global_shuffle",
+      "p8_exact_sample", "p9_weighted_sample", "t19_filter_bank",
+      "t21_trigram_kn")
+    // a2/a4/sp1: rootid = l_orderkey % 1000 and apiCatalog's
+    // diaobjectid = (l_orderkey*10 + l_linenumber) % 400 survive the
+    // offsets, so per-object light curves grow ×N as a longer survey
+    // would grow them; sp1's wanted lists are dimension tables at 1×.
+    val lineitem = Seq("g1_pagerank", "g2_triangles", "g3_link_predict",
+      "g4_communities", "g5_bfs", "a19_lomb_scargle", "a2_objstats",
+      "a4_rollup", "sp1_wanted_spectra")
+    val events = Seq("ev8_incremental_rollup", "st2_stream_sessions")
+    val embeddings = Seq(d6Probe, "s8_sq_quantize")
+    Seq("documents" -> documents, "lineitem" -> lineitem,
+      "events" -> events, "embeddings" -> embeddings)
+      .flatMap { case (t, qs) => qs.map(_ -> t) }.toMap
+  }
+
+  /** Table → its k-th disjoint copy, given the base table and the copy
+    * count; see the object doc. */
+  private[graft] val generators: Map[String, (DataFrame, Int) => Int => DataFrame] =
+    Map("documents" -> (documentCopy _), "lineitem" -> (lineitemCopy _),
+      "events" -> (eventCopy _), "embeddings" -> (embeddingCopy _))
+
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val nCopies = args(1).toInt
@@ -87,33 +99,27 @@ object TailScale {
     // from cold
     val nWarms = if (args.length > 2) args(2).toInt else 3
     require(nWarms >= 1, s"nWarms must be >= 1, got $nWarms")
-    require(docQueries.contains(name) || liQueries.contains(name) ||
-      evQueries.contains(name) || name == d6Probe,
-      s"unknown tail query $name")
+    require(SparkEntry.queries.contains(name), s"unknown query $name")
+    require(nCopies == 1 || scaledTable.contains(name),
+      s"$name has no scaled table; only x1 runs it")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = GraftSession.cpus
     val scratch = sys.env.getOrElse("SPARK_GRAFT_SCRATCH", "/tmp/graft_tail")
-    val spark = GraftSession.create()
+    val m = Probe.meter()
+    val spark = m.spark
 
     val dir =
       if (nCopies == 1) sfDir
       else {
-        val d = s"$scratch/x$nCopies"
-        val scaled =
-          if (docQueries.contains(name)) {
-            genDocs(spark, sfDir, d, nCopies, cpus); "documents"
-          } else if (evQueries.contains(name)) {
-            genEvents(spark, sfDir, d, nCopies, cpus); "events"
-          } else if (name == d6Probe) {
-            genEmbeddings(spark, sfDir, d, nCopies, cpus); "embeddings"
-          } else {
-            genLineitem(spark, sfDir, d, nCopies, cpus); "lineitem"
-          }
-        linkOthers(sfDir, d, except = scaled)
+        // keyed by layout too: the copies are written in `cpus` files
+        val d = s"$scratch/x${nCopies}_c$cpus"
+        val table = scaledTable(name)
+        generate(spark, sfDir, d, table, nCopies, cpus)
+        linkOthers(sfDir, d, except = table)
         d
       }
 
-    val fn: (SparkSession, String) => org.apache.spark.sql.DataFrame =
+    val fn: (SparkSession, String) => DataFrame =
       if (name == d6Probe) { (s, dd) =>
         graft.pipeline.SemDedup.semanticPairs(
           s.read.parquet(s"$dd/embeddings.parquet")
@@ -121,22 +127,19 @@ object TailScale {
           "vec_id", "embedding", nlist = 8 * nCopies, threshold = 0.8)
       }
       else SparkEntry.queries(name)
-    def once(): Double = {
-      val t0 = System.nanoTime()
-      fn(spark, dir).write.mode("overwrite").format("noop").save()
-      val dt = (System.nanoTime() - t0) / 1e9
-      GraftSession.clean(spark)
-      dt
-    }
-    val cold = once()
+    val cold = m.run(fn(spark, dir))
     val n = fn(spark, dir).count() // untimed, result-shape sanity only
     GraftSession.clean(spark)
-    val warms = Seq.fill(nWarms)(once()).sorted
+    val warms = Seq.fill(nWarms)(m.run(fn(spark, dir)))
+    (cold +: warms).zipWithIndex.foreach { case (r, i) =>
+      println(s"[tailscale] $name x$nCopies run${i + 1}: ${r.summary}")
+    }
+    val secs = warms.map(_.secs).sorted
     val med =
-      if (nWarms % 2 == 1) warms(nWarms / 2)
-      else (warms(nWarms / 2 - 1) + warms(nWarms / 2)) / 2
+      if (nWarms % 2 == 1) secs(nWarms / 2)
+      else (secs(nWarms / 2 - 1) + secs(nWarms / 2)) / 2
     println(f"[tailscale] $name x$nCopies%-4d rows=$n%-9d " +
-      f"cold=${cold}%7.2f s  warm_med=${med}%7.2f s  warm_min=${warms.head}%7.2f s")
+      f"cold=${cold.secs}%7.2f s  warm_med=${med}%7.2f s  warm_min=${secs.head}%7.2f s")
     spark.stop()
   }
 
@@ -168,98 +171,62 @@ object TailScale {
     if (java.nio.file.Files.isSymbolicLink(p)) java.nio.file.Files.delete(p)
   }
 
-  /** Whether a cached generation at `out` is complete. A crash
-    * mid-write leaves a partial dir that a bare exists() would silently
-    * accept, corrupting every later measurement; `_SUCCESS` is written
-    * on job commit, and mode("overwrite") cleanly replaces any partial
-    * leftover. */
-  private[graft] def committed(out: String): Boolean =
-    new java.io.File(out, "_SUCCESS").exists()
-
-  /** documents ×n into `outDir/documents.parquet`; see the object doc. */
-  private[graft] def genDocs(spark: SparkSession, sfDir: String, outDir: String,
-      n: Int, cpus: Int): Unit = {
-    val out = s"$outDir/documents.parquet"
+  /** `table` ×n into `outDir/<table>.parquet` as `cpus` files, unless a
+    * committed generation is already there. A crash mid-write leaves a
+    * partial dir that a bare exists() would silently accept; `_SUCCESS`
+    * is written on job commit, and mode("overwrite") cleanly replaces
+    * any partial leftover. */
+  private def generate(spark: SparkSession, sfDir: String, outDir: String,
+      table: String, n: Int, cpus: Int): Unit = {
+    val out = s"$outDir/$table.parquet"
     dropIfSymlink(out)
-    if (committed(out)) return
-    val base = spark.read.parquet(s"$sfDir/documents.parquet")
-    (0 until n).map { k =>
-      base.select(
-        (col("doc_id") + lit(k.toLong * 10000000L)).as("doc_id"),
-        (if (k == 0) col("text")
-         else regexp_replace(col("text"), "(\\S+)", s"$$1_c$k")).as("text"),
-        col("lang"), col("source"), col("n_chars"))
-    }.reduce(_ unionByName _)
-      .repartition(cpus).write.mode("overwrite").parquet(out)
+    if (!new java.io.File(out, "_SUCCESS").exists()) {
+      val copy = generators(table)(spark.read.parquet(s"$sfDir/$table.parquet"), n)
+      (0 until n).map(copy).reduce(_ unionByName _)
+        .repartition(cpus).write.mode("overwrite").parquet(out)
+    }
   }
 
-  /** events ×n: event_id offset by k·10⁹ (divisible by 4, so the
-    * battery's %4 micro-batch split keeps its distribution);
-    * ts/type/value untouched, so the (day, event_type) rollup groups
-    * DEEPEN ×n exactly as a busier real stream would. */
-  private def genEvents(spark: SparkSession, sfDir: String, outDir: String,
-      n: Int, cpus: Int): Unit = {
-    val out = s"$outDir/events.parquet"
-    dropIfSymlink(out)
-    if (committed(out)) return
-    val base = spark.read.parquet(s"$sfDir/events.parquet")
-    (0 until n).map { k =>
-      base.withColumn("event_id", col("event_id") + lit(k.toLong * 1000000000L))
-    }.reduce(_ unionByName _)
-      .repartition(cpus).write.mode("overwrite").parquet(out)
-  }
+  private def documentCopy(base: DataFrame, n: Int)(k: Int): DataFrame =
+    base.withColumn("doc_id", col("doc_id") + lit(k.toLong * 10000000L))
+      .withColumn("text",
+        if (k == 0) col("text")
+        else regexp_replace(col("text"), "(\\S+)", s"$$1_c$k"))
 
-  /** embeddings ×n, pairwise-dissimilar across copies: vec_id offset
-    * by k·10⁷; copy k's vectors are circularly rotated by k mod dim
-    * positions (slice+concat projections, codegen-friendly) and
-    * globally negated every dim copies ((−1)^(k div dim)) — the
-    * negation leg (copies ≥ dim only) is a per-element transform
-    * lambda, generation-time and untimed. Rotated/negated real
-    * embeddings are
-    * almost surely below any near-dup threshold against other
-    * copies, so true near-dup structure replicates ×n while the
-    * probe's nlist scales ×n to hold cell size constant. */
-  private def genEmbeddings(spark: SparkSession, sfDir: String, outDir: String,
-      n: Int, cpus: Int): Unit = {
-    val out = s"$outDir/embeddings.parquet"
-    dropIfSymlink(out)
-    if (committed(out)) return
-    val base = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
+  private def lineitemCopy(base: DataFrame, n: Int)(k: Int): DataFrame =
+    base
+      .withColumn("l_orderkey", col("l_orderkey") + lit(k.toLong * 1000000000L))
+      .withColumn("l_partkey", col("l_partkey") + lit(k.toLong * 1000000000L))
+
+  private def eventCopy(base: DataFrame, n: Int)(k: Int): DataFrame =
+    base.withColumn("event_id", col("event_id") + lit(k.toLong * 1000000000L))
+
+  /** Embeddings, pairwise-dissimilar across copies: copy k's vectors
+    * are circularly rotated by k mod dim positions (slice+concat
+    * projections, codegen-friendly) and globally negated every dim
+    * copies ((−1)^(k div dim)) — the negation leg (copies ≥ dim only)
+    * is a per-element transform lambda, generation-time and untimed.
+    * Rotated/negated real embeddings are almost surely below any
+    * near-dup threshold against other copies, so true near-dup
+    * structure replicates ×n while the d6 probe's nlist scales ×n to
+    * hold cell size constant. */
+  private def embeddingCopy(base: DataFrame, n: Int): Int => DataFrame = {
     val dim = base.select(size(col("embedding")).as("d")).head().getInt(0)
     // rotate-by-(k mod dim) × negate-every-dim-copies repeats with
     // period 2·dim: copy k and copy k+2·dim would be bit-identical,
     // silently reintroducing the quadratic cross-copy near-dup volume
     // this scheme exists to exclude. Refuse rather than alias.
     require(n <= 2 * dim,
-      s"genEmbeddings: n=$n exceeds the 2*dim=${2 * dim} pairwise-dissimilar period")
-    (0 until n).map { k =>
+      s"embeddings: n=$n exceeds the 2*dim=${2 * dim} pairwise-dissimilar period")
+    k => {
       val rot = k % dim
-      val sign = if ((k / dim) % 2 == 0) 1.0f else -1.0f
       val rotated =
         if (rot == 0) col("embedding")
         else concat(slice(col("embedding"), rot + 1, dim - rot),
           slice(col("embedding"), 1, rot))
-      base.select(
-        (col("vec_id") + lit(k.toLong * 10000000L)).as("vec_id"),
-        (if (sign == 1.0f) rotated
-         else transform(rotated, x => -x)).as("embedding"))
-    }.reduce(_ unionByName _)
-      .repartition(cpus).write.mode("overwrite").parquet(out)
-  }
-
-  /** lineitem ×n into `outDir/lineitem.parquet`; see the object doc. */
-  private[graft] def genLineitem(spark: SparkSession, sfDir: String, outDir: String,
-      n: Int, cpus: Int): Unit = {
-    val out = s"$outDir/lineitem.parquet"
-    dropIfSymlink(out)
-    if (committed(out)) return
-    val base = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    (0 until n).map { k =>
-      base
-        .withColumn("l_orderkey", col("l_orderkey") + lit(k.toLong * 1000000000L))
-        .withColumn("l_partkey", col("l_partkey") + lit(k.toLong * 1000000000L))
-    }.reduce(_ unionByName _)
-      .repartition(cpus).write.mode("overwrite").parquet(out)
+      base.withColumn("vec_id", col("vec_id") + lit(k.toLong * 10000000L))
+        .withColumn("embedding",
+          if ((k / dim) % 2 == 0) rotated else transform(rotated, x => -x))
+    }
   }
 }

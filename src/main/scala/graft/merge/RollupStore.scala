@@ -65,13 +65,10 @@ object RollupStore {
     // partitions the dynamic overwrite is about to replace
     val out = merged.localCheckpoint(true)
     agg.unpersist(blocking = false)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try out.write.mode("overwrite").partitionBy(partCol).parquet(dir)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-    }
+    // per-write option, not session conf: other writes in the session
+    // keep their own overwrite mode
+    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partCol).parquet(dir)
     graft.pipeline.Components.release(out)
     if (!fs.exists(started)) fs.create(started).close()
   }

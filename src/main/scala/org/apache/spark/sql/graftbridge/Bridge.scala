@@ -1,10 +1,12 @@
 package org.apache.spark.sql.graftbridge
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
 
-/** Column ⇄ Expression bridge for custom Catalyst expressions.
+/** Column ⇄ Expression bridge for custom Catalyst expressions, plus the
+  * listener-bus drain.
   *
   * Spark 4 moved these conversions behind `private[sql]`
   * (org.apache.spark.sql.classic.ExpressionUtils); a one-file package
@@ -25,4 +27,9 @@ object Bridge {
     * any parsed SQL. */
   def toExpressionEager(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Block until every listener has seen every event posted so far
+    * (`listenerBus` is `private[spark]`): a job census read after an
+    * action then counts exactly that action's jobs. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty(30000L)
 }
