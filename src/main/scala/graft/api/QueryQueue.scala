@@ -121,11 +121,14 @@ final class QueryQueue(spark: SparkSession, resultDir: String) {
     }
   }
 
-  /** Drain the queue (the runner pool's poll loop, serialized). */
-  def runAll(): Unit = {
+  /** The runner's poll loop: claim and execute until the queue is empty. */
+  private def drain(): Unit = {
     var next = claimNext()
     while (next.isDefined) { next.foreach(execute); next = claimNext() }
   }
+
+  /** Drain the queue (the runner pool's poll loop, serialized). */
+  def runAll(): Unit = drain()
 
   /** Drain with a pool of `nWorkers` claiming threads — the
     * reference's runner POOL (long_query_runner.py:216-251 spawns 10
@@ -148,10 +151,7 @@ final class QueryQueue(spark: SparkSession, resultDir: String) {
   def runAll(nWorkers: Int): Unit = {
     require(nWorkers > 0, s"nWorkers must be positive (got $nWorkers)")
     val workers = Seq.tabulate(nWorkers) { i =>
-      val t = new Thread(() => {
-        var next = claimNext()
-        while (next.isDefined) { next.foreach(execute); next = claimNext() }
-      }, s"query-queue-worker-$i")
+      val t = new Thread(() => drain(), s"query-queue-worker-$i")
       t.start(); t
     }
     workers.foreach(_.join())

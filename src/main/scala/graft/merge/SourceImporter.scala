@@ -44,18 +44,13 @@ object SourceImporter {
   def rejectBadRows(df: DataFrame): DataFrame =
     df.filter(col("diaobjectid").isNotNull && col("diaobjectid") =!= 0L)
 
-  /** The insert half of an "ON CONFLICT DO NOTHING" merge: incoming
-    * rows whose key is absent from the existing table. Exposed
-    * separately because it IS the physical delta — an append-only
-    * store persists exactly these rows instead of rewriting the
-    * table. */
-  /** Deterministic intra-batch key resolution: the lexicographically
-    * smallest payload tuple wins. `dropDuplicates(keys)` keeps
-    * whichever copy a partition scans first — replays on a different
-    * partitioning would persist a different payload, breaking the
-    * byte-identical-replay guarantee for direct callers of the merge
-    * ops (importBatch callers are already safe via dedupFirstSeen's
-    * explicit tiebreak). */
+  /** Deterministic intra-batch key resolution for raw input: the
+    * lexicographically smallest payload tuple wins.
+    * `dropDuplicates(keys)` keeps whichever copy a partition scans
+    * first — replays on a different partitioning would persist a
+    * different payload, breaking the byte-identical-replay guarantee
+    * for direct callers of the merge ops (the importer's own input is
+    * already unique per key via dedupFirstSeen's explicit tiebreak). */
   private def dropDupDeterministic(df: DataFrame, keys: Seq[String]): DataFrame = {
     val payload = df.columns.toSeq.filterNot(keys.contains)
     if (payload.isEmpty) df.dropDuplicates(keys)
@@ -64,18 +59,23 @@ object SourceImporter {
       .select(keys.map(col) ++ payload.map(c => col(s"_p.$c").as(c)): _*)
   }
 
-  def newRows(existing: DataFrame, incoming: DataFrame,
+  /** The insert half of an "ON CONFLICT DO NOTHING" merge: incoming
+    * rows whose key is absent from the existing table. It IS the
+    * physical delta — an append-only store persists exactly these rows
+    * instead of rewriting the table. `incoming` must be unique per key
+    * (dedupFirstSeen or dropDupDeterministic output): this is the bare
+    * anti-join, so each key is deduplicated once, upstream. */
+  private def newRows(existing: DataFrame, incoming: DataFrame,
       keys: Seq[String]): DataFrame =
-    dropDupDeterministic(
-      incoming.select(existing.columns.toSeq.map(col): _*)
-        .join(existing.select(keys.map(col): _*), keys, "left_anti"),
-      keys)
+    incoming.select(existing.columns.toSeq.map(col): _*)
+      .join(existing.select(keys.map(col): _*), keys, "left_anti")
 
   /** A11 / S6 — "ON CONFLICT DO NOTHING" merge: insert only rows whose
     * key is absent from the existing table. */
   def mergeKeepExisting(existing: DataFrame, incoming: DataFrame,
       keys: Seq[String]): DataFrame =
-    existing.unionByName(newRows(existing, incoming, keys))
+    existing.unionByName(newRows(existing, dropDupDeterministic(
+      incoming.select(existing.columns.toSeq.map(col): _*), keys), keys))
 
   /** A12 — COALESCE-merge upsert: fill NULL columns of existing rows
     * with newly arrived values, never overwrite non-NULL; insert new
@@ -131,35 +131,6 @@ object SourceImporter {
       else lit(null).cast(f.dataType).as(f.name)
     }.toSeq: _*)
 
-  /** T7/J6/W1 — one importer batch, the reference's
-    * import_from_mongo step chain (source_importer.py:681-767):
-    *
-    *  1. dedup staged docs per natural key, reject bad rows;
-    *  2. anti-join objects against the existing diaobject table (J3);
-    *  3. cone-match genuinely new objects against the existing root
-    *     catalog: within `matchRadiusArcsec` (default 1″) join that
-    *     root, else mint a fresh uuid (W1 — uuid per row);
-    *  4. append new (diaobjectid, base_procver_id, rootid) rows and new
-    *     roots; 5./6. keep-existing merge of sources + forced.
-    *
-    * Root association is order-dependent across batches (first seen
-    * wins) — this is the one inherently sequential piece; run batches
-    * serially (foreachBatch), everything inside a batch is parallel.
-    */
-  def importBatch(
-      existing: ImportResult,
-      stagedObjects: DataFrame,     // diaobjectid, base_procver_id, ra, dec, ingest_ts
-      stagedSources: DataFrame,     // diasource cols + ingest_ts
-      stagedForced: DataFrame,      // diaforcedsource cols + ingest_ts
-      matchRadiusArcsec: Double = 1.0,
-      stagedSourcesExtra: Option[DataFrame] = None,
-      stagedForcedExtra: Option[DataFrame] = None,
-      stagedBrokerinfo: Option[DataFrame] = None,
-      stagedThumbnails: Option[DataFrame] = None): ImportResult =
-    importBatchWithDeltas(existing, stagedObjects, stagedSources, stagedForced,
-      matchRadiusArcsec, stagedSourcesExtra, stagedForcedExtra,
-      stagedBrokerinfo, stagedThumbnails)._1
-
   /** The physical write-set of one importer batch. Every merge in this
     * importer except the *_extra COALESCE upsert is insert-only, so the
     * batch's effect on storage is an APPEND of these row sets — the
@@ -179,11 +150,27 @@ object SourceImporter {
       diasourceExtra: Option[DataFrame],
       diaforcedsourceExtra: Option[DataFrame])
 
+  /** T7/J6/W1 — one importer batch, the reference's
+    * import_from_mongo step chain (source_importer.py:681-767):
+    *
+    *  1. dedup staged docs per natural key, reject bad rows;
+    *  2. anti-join objects against the existing diaobject table (J3);
+    *  3. cone-match genuinely new objects against the existing root
+    *     catalog: within `matchRadiusArcsec` (default 1″) join that
+    *     root, else mint a fresh uuid (W1 — uuid per row);
+    *  4. append new (diaobjectid, base_procver_id, rootid) rows and new
+    *     roots; 5./6. keep-existing merge of sources + forced.
+    *
+    * Root association is order-dependent across batches (first seen
+    * wins) — this is the one inherently sequential piece; run batches
+    * serially (foreachBatch), everything inside a batch is parallel.
+    * Returns (merged tables, the batch's [[ImportDeltas]]).
+    */
   def importBatchWithDeltas(
       existing: ImportResult,
-      stagedObjects: DataFrame,
-      stagedSources: DataFrame,
-      stagedForced: DataFrame,
+      stagedObjects: DataFrame,     // diaobjectid, base_procver_id, ra, dec, ingest_ts
+      stagedSources: DataFrame,     // diasource cols + ingest_ts
+      stagedForced: DataFrame,      // diaforcedsource cols + ingest_ts
       matchRadiusArcsec: Double = 1.0,
       stagedSourcesExtra: Option[DataFrame] = None,
       stagedForcedExtra: Option[DataFrame] = None,

@@ -41,22 +41,6 @@ object Decontamination {
       .agg(countDistinct(col("_sh_g")).as("n_shared_grams"))
   }
 
-  /** Per corpus-document rollup: how many eval documents it overlaps
-    * and how many distinct grams are contaminated in total. */
-  def contaminationReport(corpus: DataFrame, evalSet: DataFrame,
-      idCol: String, textCol: String, n: Int = 8,
-      broadcastEval: Boolean = true): DataFrame = {
-    val cg = Dedup.gramRows(corpus, idCol, textCol, n)
-    val eg0 = Dedup.gramRows(evalSet, idCol, textCol, n)
-      .select(col("_sh_id").as("eval_doc_id"), col("_sh_g"))
-      .distinct()
-    val eg = if (broadcastEval) broadcast(eg0) else eg0
-    cg.join(eg, Seq("_sh_g"))
-      .groupBy(col("_sh_id").as(idCol))
-      .agg(countDistinct(col("_sh_g")).as("n_shared_grams"),
-        countDistinct(col("eval_doc_id")).as("n_eval_docs"))
-  }
-
   /** [[contaminationPairs]] with a BLOOM pre-filter — the shape for an
     * eval side too big to broadcast (the fallback the broadcast path's
     * doc promises). With `broadcastEval = false` the exact gram join

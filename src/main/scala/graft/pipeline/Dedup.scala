@@ -97,14 +97,6 @@ object Dedup {
   def wordShingles(text: Column, n: Int): Column =
     shinglesFromWords(split(trim(text), "\\s+"), n)
 
-  /** Distinct character n-gram shingles. */
-  def charShingles(text: Column, n: Int): Column = {
-    val m = length(text) - (n - 1)
-    when(m > 0,
-      array_distinct(transform(sequence(lit(1), m), i => text.substr(i, lit(n)))))
-      .otherwise(array().cast("array<string>"))
-  }
-
   /** Exact set Jaccard of two (distinct-element) array columns. */
   def jaccard(a: Column, b: Column): Column =
     when(size(array_union(a, b)) > 0,

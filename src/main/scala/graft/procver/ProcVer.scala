@@ -44,10 +44,6 @@ object ProcVer {
       }
   }
 
-  def resolveOrThrow(dims: ProcVerDims, key: String): String =
-    resolve(dims, key).getOrElse(
-      throw new IllegalArgumentException(s"unknown processing version: $key"))
-
   /** Highest-priority base procver for (procver, table)
     * (src/db.py:1699-1706's ORDER BY priority DESC LIMIT 1). */
   def topBaseProcver(dims: ProcVerDims, procverId: String, table: String): Option[String] =

@@ -1486,8 +1486,8 @@ object FastdbOps {
           val decoded = Brokers.decode(s,
             batch.select(col("topic"), col("value")), "value",
             Brokers.ConfluentWire)
-          AlertStream.importWrangled(s, store,
-            AlertStream.wrangle(decoded, "bpv-ps", "Pitt-Google", "lsst-alerts"))
+          AlertStream.importAlerts(s, store, decoded, "bpv-ps",
+            "Pitt-Google", "lsst-alerts")
         }
         .start()
       try {

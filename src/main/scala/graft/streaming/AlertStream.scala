@@ -5,19 +5,19 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.merge.SourceImporter
-import graft.merge.SourceImporter.ImportResult
 
 /** §3.3 — alert-stream ingestion as Structured Streaming.
   *
   * Reference chain: Kafka avro → Mongo staging → cron importer
   * (brokerconsumer.py / source_importer.py). Spark-native chain:
-  * `readStream` (any source) → wrangle into typed row streams →
-  * `foreachBatch` silver merge. This environment ships no Kafka/avro
-  * connector jars, so the bundled source here is a schema'd parquet
-  * *file* stream — swapping in `readStream.format("kafka")` +
-  * `from_avro(...)` changes only `reader()`; wrangle and merge are
-  * source-agnostic. foreachBatch (not continuous) is load-bearing:
-  * root-object association is sequential across batches (T7).
+  * `readStream` (any source) → `foreachBatch` [[importAlerts]]: persist
+  * the batch's alert frame once, wrangle it into typed row streams,
+  * silver merge. The build ships no Kafka/avro connector jars, so the
+  * bundled source here is a schema'd parquet *file* stream — swapping
+  * in `readStream.format("kafka")` + `from_avro(...)` changes only
+  * `reader()`; wrangle and merge are source-agnostic. foreachBatch
+  * (not continuous) is load-bearing: root-object association is
+  * sequential across batches (T7).
   */
 object AlertStream {
 
@@ -211,25 +211,26 @@ object AlertStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (compactEvery > 0 && nBatches.incrementAndGet() % compactEvery == 0)
           store.compact(spark)
-        importWrangled(spark, store, wrangle(batch, baseProcverId))
+        importAlerts(spark, store, batch, baseProcverId)
       }
       .start()
     if (awaitAll) { q.processAllAvailable(); q.stop() }
     q
   }
 
-  /** One micro-batch's silver merge: import the wrangled batch against
+  /** One micro-batch's silver merge: wrangle `alerts`, import it against
     * the store and append only its new rows ([[SilverStore.saveDelta]]),
-    * not a recomputation of the catalog. */
-  def importWrangled(spark: SparkSession, store: SilverStore,
-      w: Wrangled): Unit = {
-    // persist the staging frames: saveDelta executes one plan per
-    // touched table (up to 9), and each would otherwise re-run the
-    // wrangle lineage from the input
-    val staged = Seq(w.objects, w.sources, w.forced, w.sourcesExtra,
-      w.forcedExtra, w.brokerinfo, w.thumbnails)
-    staged.foreach(_.persist())
+    * not a recomputation of the catalog. The alert frame is the one
+    * persisted frame: saveDelta executes one plan per touched table (up
+    * to 9), and each re-reads it instead of re-running the input scan.
+    * Wrangle's `current_timestamp()` is therefore fixed per plan: one
+    * value within a table write, not shared across tables. */
+  def importAlerts(spark: SparkSession, store: SilverStore, alerts: DataFrame,
+      baseProcverId: String, brokername: String = "direct",
+      topic: String = "alerts"): Unit = {
+    alerts.persist()
     try {
+      val w = wrangle(alerts, baseProcverId, brokername, topic)
       val (_, deltas) = SourceImporter.importBatchWithDeltas(
         store.load(spark), w.objects, w.sources, w.forced,
         stagedSourcesExtra = Some(w.sourcesExtra),
@@ -237,6 +238,6 @@ object AlertStream {
         stagedBrokerinfo = Some(w.brokerinfo),
         stagedThumbnails = Some(w.thumbnails))
       store.saveDelta(deltas)
-    } finally staged.foreach(_.unpersist())
+    } finally alerts.unpersist()
   }
 }

@@ -103,12 +103,6 @@ object AvroAlerts {
       bytes(r.get("cutoutTemplate")), cls)
   }
 
-  /** Decode one schemaless avro datum. */
-  def decodeBytes(bytes: Array[Byte], schema: Schema): GenericRecord = {
-    val reader = new GenericDatumReader[GenericRecord](schema)
-    reader.read(null, DecoderFactory.get().binaryDecoder(bytes, null))
-  }
-
   // ---- encoding (the producer's inverse of decode) -------------------
 
   /** Positional Row → avro record fill, field names taken from the

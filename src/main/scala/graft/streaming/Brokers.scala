@@ -168,7 +168,7 @@ object Brokers {
 
   /** Decoded alert stream from the production source: envelope →
     * framing decode → the alert schema; feed the result to
-    * [[wrangle]]/[[AlertStream]] exactly like the file stream. */
+    * [[AlertStream.importAlerts]] exactly like the file stream. */
   def kafkaAlerts(spark: SparkSession, cfg: BrokerConfig,
       startingOffsets: String = "earliest"): DataFrame =
     decode(spark,
@@ -188,10 +188,4 @@ object Brokers {
           expr(s"substring($valueCol, 6, ${Int.MaxValue})")),
         valueCol)
   }
-
-  /** Wrangle decoded alerts with the broker's identity stamped on the
-    * brokerinfo rows (the metamsg brokername/topic fields). */
-  def wrangle(cfg: BrokerConfig, alerts: DataFrame, baseProcverId: String,
-      topic: String): AlertStream.Wrangled =
-    AlertStream.wrangle(alerts, baseProcverId, cfg.brokername, topic)
 }

@@ -46,11 +46,11 @@ class EndToEndSpec extends AnyFunSuite {
     val ts = current_timestamp()
     val store = new graft.streaming.SilverStore(
       Files.createTempDirectory("e2e").toString)
-    val res = SourceImporter.importBatch(
+    val res = SourceImporter.importBatchWithDeltas(
       store.load(spark),
       loaded.diaobject.withColumn("ingest_ts", ts),
       loaded.diasource.withColumn("ingest_ts", ts),
-      loaded.diaforcedsource.withColumn("ingest_ts", ts))
+      loaded.diaforcedsource.withColumn("ingest_ts", ts))._1
     assert(res.diasource.count() == nDet, "no detections lost in import")
     assert(res.diaforcedsource.count() == nForced)
     assert(res.diaobject.count() == head.count())

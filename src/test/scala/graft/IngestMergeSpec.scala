@@ -148,7 +148,7 @@ class IngestMergeSpec extends AnyFunSuite {
       .toDF("diaforcedsourceid", "base_procver_id", "diaobjectid", "visit", "band",
         "midpointmjdtai", "psfflux", "psffluxerr", "ra", "dec", "ingest_ts")
 
-    val state1 = SourceImporter.importBatch(state0, objs1, srcs1, frcs1)
+    val state1 = SourceImporter.importBatchWithDeltas(state0, objs1, srcs1, frcs1)._1
     assert(state1.rootDiaobject.count() == 2)
     assert(state1.diaobject.count() == 2)
     assert(state1.diasource.count() == 1 && state1.diaforcedsource.count() == 1)
@@ -160,7 +160,7 @@ class IngestMergeSpec extends AnyFunSuite {
       (20L, "bpv2", 42.0, 13.0 + 0.5 / 3600.0, ts(2)),
       (21L, "bpv2", 10.0, 10.0, ts(2)))
       .toDF("diaobjectid", "base_procver_id", "ra", "dec", "ingest_ts")
-    val state2 = SourceImporter.importBatch(state1, objs2, srcs1, frcs1)
+    val state2 = SourceImporter.importBatchWithDeltas(state1, objs2, srcs1, frcs1)._1
     assert(state2.rootDiaobject.count() == 3)
     val rootOf = state2.diaobject.collect()
       .map(r => r.getAs[Long]("diaobjectid") -> r.getAs[String]("rootid")).toMap
@@ -169,8 +169,47 @@ class IngestMergeSpec extends AnyFunSuite {
     assert(state2.diasource.count() == 1 && state2.diaforcedsource.count() == 1)
 
     // idempotency: replaying batch 2 changes nothing
-    val state3 = SourceImporter.importBatch(state2, objs2, srcs1, frcs1)
+    val state3 = SourceImporter.importBatchWithDeltas(state2, objs2, srcs1, frcs1)._1
     assert(state3.rootDiaobject.count() == 3 && state3.diaobject.count() == 4)
     assert(state3.diasource.count() == 1 && state3.diaforcedsource.count() == 1)
+  }
+
+  test("importer: each delta deduplicates its key once") {
+    import org.apache.spark.sql.{DataFrame, Row}
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import graft.streaming.{AlertStream, SilverStore}
+    // alert i: current source i, previous source i-1, forced source
+    // 10*i, one difference cutout — all on object 1
+    def alerts(ids: Seq[Long]): DataFrame = {
+      val dir = java.nio.file.Files.createTempDirectory("alerts").toString + "/a"
+      def src(i: Long) = Row(i, 1L, i, "r", 60000.0 + i, 1.0f, 0.1f, 42.0, 13.0,
+        7.5f, null, null, null, null)
+      val rows = ids.map(i => Row(i, src(i), Seq(src(i - 1)),
+        Seq(Row(i * 10, 1L, i, "r", 59999.0 + i, 0.5f, 0.1f, null, null)),
+        Row(1L, 42.0, 13.0), Array[Byte](1), null, null, null))
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), AlertStream.alertSchema)
+        .write.parquet(dir)
+      spark.read.schema(AlertStream.alertSchema).parquet(dir)
+    }
+    val store = new SilverStore(java.nio.file.Files.createTempDirectory("silver").toString)
+    def importDeltas(a: DataFrame) = {
+      val w = AlertStream.wrangle(a, "bpv")
+      SourceImporter.importBatchWithDeltas(store.load(spark), w.objects, w.sources,
+        w.forced, stagedBrokerinfo = Some(w.brokerinfo),
+        stagedThumbnails = Some(w.thumbnails))._2
+    }
+    store.saveDelta(importDeltas(alerts(Seq(5L, 6L))))
+    // against a store that holds rows, replaying alert 6 and adding 7
+    val d = importDeltas(alerts(Seq(6L, 7L)))
+    Seq("diasource" -> d.diasource, "diaforcedsource" -> d.diaforcedsource,
+      "diaobjectPosition" -> d.diaobjectPosition, "brokerinfo" -> d.brokerinfo,
+      "thumbnails" -> d.thumbnails).foreach { case (name, df) =>
+      val aggs = df.queryExecution.optimizedPlan.collect { case a: Aggregate => a }.length
+      assert(aggs == 1, s"$name delta plan holds $aggs aggregates")
+    }
+    def ids(df: DataFrame) = df.collect().map(_.getLong(0)).toSet
+    assert(ids(d.diasource) == Set(7L) && ids(d.diaforcedsource) == Set(70L))
+    assert(ids(d.brokerinfo.select("diasourceid")) == Set(7L))
+    assert(ids(d.thumbnails) == Set(7L) && d.diaobjectPosition.isEmpty)
   }
 }

@@ -116,6 +116,23 @@ class StreamingSpec extends AnyFunSuite {
       "heartbeat must account for the streamed alerts")
   }
 
+  test("alert stream: each micro-batch reads its input once") {
+    val inDir = Files.createTempDirectory("alerts").toString
+    val ckDir = Files.createTempDirectory("ck").toString
+    val store = new SilverStore(Files.createTempDirectory("silver").toString)
+    // one file per trigger: two micro-batches of three alerts
+    alertsDf(Seq(5L, 6L, 7L), 1L, 42.0, 13.0).coalesce(1).write.parquet(s"$inDir/w1")
+    alertsDf(Seq(20L, 21L, 22L), 2L, 10.0, -30.0).coalesce(1).write.parquet(s"$inDir/w2")
+    val persisted = spark.sparkContext.getPersistentRDDs.keySet
+    val q = AlertStream.run(spark, s"$inDir/*", store, "bpv-once", ckDir,
+      maxFilesPerTrigger = 1, awaitAll = true)
+    val inputRows = q.recentProgress.map(_.numInputRows).sum
+    assert(inputRows == 6, s"$inputRows input rows scanned for 6 alerts")
+    assert(spark.sparkContext.getPersistentRDDs.keySet == persisted,
+      "the import left a frame persisted")
+    assert(store.load(spark).brokerinfo.count() == 6)
+  }
+
   test("silver store: crash before manifest flip leaves previous version readable") {
     val store = new SilverStore(Files.createTempDirectory("swap").toString)
     val w1 = AlertStream.wrangle(alertsDf(Seq(1L, 2L), 9L, 1.0, 2.0), "bpv-c")
@@ -836,7 +853,8 @@ class StreamingSpec extends AnyFunSuite {
     val decoded = Brokers.decode(spark, framed, "value", Brokers.ConfluentWire)
     assert(decoded.head().getStruct(1).getLong(0) == 1L)
     // ...and the broker identity lands on the brokerinfo staging rows
-    val w = Brokers.wrangle(Brokers.fink("g1"), decoded, "bpv-f", "fink_lsst")
+    val w = AlertStream.wrangle(decoded, "bpv-f", Brokers.fink("g1").brokername,
+      "fink_lsst")
     val bi = w.brokerinfo.head()
     assert(bi.getAs[String]("brokername") == "Fink")
     assert(bi.getAs[String]("topic") == "fink_lsst")
