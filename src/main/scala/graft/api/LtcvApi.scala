@@ -1,6 +1,6 @@
 package graft.api
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.query.{Catalog, Ltcv}
 
@@ -31,98 +31,84 @@ object LtcvApi {
     * (S/N)²-weighted mean of their detections' positions
     * ([[Ltcv.weightedPositions]], S/N > 3).
     * `alwaysUseWeightedSourcePositions` ignores diaobject_position
-    * entirely, exactly like the reference flag. */
+    * entirely, exactly like the reference flag.
+    *
+    * Each source of facts (members, stored positions, weighted
+    * positions, hosts) is a rootid-keyed frame over the same
+    * [[Ltcv.Scope]]; they union into one per-root aggregate, so there
+    * is no join, and a requested call runs in one partition after each
+    * scan's pushed `diaobjectid IN (…)`. */
   def getObjectInfos(cat: Catalog, procverId: String,
       diaobjectids: Seq[Long] = Nil, rootids: Seq[String] = Nil,
       useWeightedSourcePositions: Boolean = false,
       alwaysUseWeightedSourcePositions: Boolean = false,
       includeHostinfo: Boolean = false): DataFrame = {
-    // no ids requested = ALL objects, the same convention getLtcvs
-    // uses — previously this path silently returned zero rows
-    val ids =
-      if (diaobjectids.nonEmpty || rootids.nonEmpty)
-        Ltcv.expandObjids(cat, procverId, diaobjectids, rootids)
-      else Ltcv.objMap(cat, procverId)
+    // no ids requested = ALL objects, the same convention getLtcvs uses
+    val scope = Ltcv.scope(cat, procverId, diaobjectids, rootids)
     val prios = cat.dims.priorities(procverId, "diaobject")
-    // semi-join FIRST: the best-position aggregate must scan only the
-    // requested objects, not the whole catalog (a 3-object request
-    // previously shuffled every position row); tiebreak on
+    val weighted = useWeightedSourcePositions || alwaysUseWeightedSourcePositions
+    val members = scope.members(cat.diaobject.sparkSession)
+      .select(col("rootid"), col("diaobjectid").cast("long").as("_member"))
+    // per member the highest-priority stored row (tiebreak on
     // base_procver_id so equal-priority versions resolve
-    // deterministically, like priorityDedup
-    val pos = cat.diaobjectPosition
-      .join(ids.select("diaobjectid").distinct(), Seq("diaobjectid"), "left_semi")
-      .join(broadcast(prios), Seq("base_procver_id"))
-      .groupBy("diaobjectid")
-      .agg(max_by(struct(col("ra"), col("dec")),
-        struct(col("priority"), col("base_procver_id"))).as("_p"))
-      .select(col("diaobjectid"), col("_p.ra").as("ra"), col("_p.dec").as("dec"))
-    val base = ids.join(pos, Seq("diaobjectid"), "left_outer")
-      .groupBy("rootid")
-      .agg(sort_array(collect_list(col("diaobjectid"))).as("diaobjectids"),
-        min_by(struct(col("ra"), col("dec")),
-          struct(col("ra").isNull, col("diaobjectid"))).as("_pos"))
-      .select(col("rootid"), col("diaobjectids"),
-        col("_pos.ra").as("ra"), col("_pos.dec").as("dec"))
-    val positioned =
-    if (!(useWeightedSourcePositions || alwaysUseWeightedSourcePositions)) base
-    else {
-      val known =
-        if (alwaysUseWeightedSourcePositions)
-          base.withColumn("ra", lit(null).cast("double"))
-            .withColumn("dec", lit(null).cast("double"))
-        else base
-      // weighted positions come from the *same rootids'* deduped
-      // detections; `ids` is small (the expanded request), so the
-      // photometry scan it semi-joins is the only big input.
-      val wp = Ltcv.weightedPositions(
-          Ltcv.sources(cat, procverId, objids = Some(ids)))
-        .select(col("rootid"), col("ra").as("_wra"), col("dec").as("_wdec"),
-          col("rastd").as("_wrastd"), col("decstd").as("_wdecstd"),
-          col("ra_dec_cov").as("_wcov"))
-      // uncertainty columns exist only on the weighted path (the
-      // reference's objinfo carries raerr/decerr/ra_dec_cov alongside
-      // ra/dec); rows whose position came from diaobject_position keep
-      // them null rather than mixing estimators
-      known.join(wp, Seq("rootid"), "left_outer")
-        .select(col("rootid"), col("diaobjectids"),
-          coalesce(col("ra"), col("_wra")).as("ra"),
-          coalesce(col("dec"), col("_wdec")).as("dec"),
-          when(col("ra").isNull, col("_wrastd")).as("rastd"),
-          when(col("ra").isNull, col("_wdecstd")).as("decstd"),
-          when(col("ra").isNull, col("_wcov")).as("ra_dec_cov"))
-    }
-    if (!includeHostinfo) positioned
-    else (cat.hostGalaxy, cat.diaobjectHostMatch) match {
-      case (Some(hosts), Some(matches)) =>
-        // ltcvapp's include_hostinfo: attach the best (lowest-prio)
-        // host's columns per root. Matches are diaobjectid-keyed and
-        // span base procvers — restrict to versions under the REQUESTED
-        // procver first, like every other path in this call (an
-        // experimental version's match must not win the argmax) — then
-        // lift to rootid through the expanded id set and argmax once
-        // more; both argmaxes are partial-aggregating min_by, no
-        // window sort.
-        val inProcver = matches.join(
-          broadcast(prios.select("base_procver_id")),
-          Seq("base_procver_id"), "left_semi")
-        val best = graft.host.HostGalaxy.bestHost(inProcver, hosts)
-        val perRoot = ids.join(best, Seq("diaobjectid"))
-          .groupBy("rootid")
-          .agg(min_by(struct(col("host_id"), col("prio"), col("host_ra"),
-            col("host_dec"), col("info")),
-            struct(col("prio"), col("host_galaxy_id"))).as("_h"))
-          .select(col("rootid"),
-            col("_h.host_id").as("hostgal_id"),
-            col("_h.prio").as("hostgal_prio"),
-            col("_h.host_ra").as("hostgal_ra"),
-            col("_h.host_dec").as("hostgal_dec"),
-            col("_h.info").as("hostgal_info"))
-        positioned.join(perRoot, Seq("rootid"), "left_outer")
+    // deterministically), then per root non-null first, smallest id
+    val stored =
+      if (alwaysUseWeightedSourcePositions) Nil
+      else Seq(Ltcv.priorityDedup(
+          scope.tag(cat.diaobjectPosition.select("diaobjectid", "base_procver_id", "ra", "dec")),
+          prios, keys = Seq("rootid", "diaobjectid"), tiebreaks = Seq("base_procver_id"))
+        .select(col("rootid"), struct(col("ra"), col("dec")).as("_pos"),
+          struct(col("ra").isNull, col("diaobjectid")).as("_pord")))
+    // weighted positions come from the *same rootids'* deduped detections
+    val wp =
+      if (!weighted) Nil
+      else Seq(Ltcv.weightedPositions(Ltcv.sources(cat, procverId, scope = Some(scope)))
+        .select(col("rootid"), struct(col("ra"), col("dec"), col("rastd"),
+          col("decstd"), col("ra_dec_cov")).as("_w")))
+    val hosts = (cat.hostGalaxy, cat.diaobjectHostMatch) match {
+      case (Some(h), Some(matches)) if includeHostinfo =>
+        // ltcvapp's include_hostinfo: the best (lowest-prio) host per
+        // root. Matches are diaobjectid-keyed and span base procvers —
+        // restrict to versions under the REQUESTED procver first, like
+        // every other path in this call (an experimental version's
+        // match must not win the argmax) — then lift to rootid and
+        // argmax once more; both argmaxes are partial-aggregating
+        // min_by, no window sort.
+        val inProcver = matches.filter(col("base_procver_id")
+          .isin(Ltcv.baseProcvers(cat, procverId, "diaobject"): _*))
+        Seq(scope.tag(graft.host.HostGalaxy.bestHost(inProcver, h))
+          .select(col("rootid"), struct(col("host_id"), col("prio"), col("host_ra"),
+            col("host_dec"), col("info")).as("_h"),
+            struct(col("prio"), col("host_galaxy_id")).as("_hord")))
       // a catalog without a host import returns infos unchanged — the
       // reference errors instead, but absent tables here are a typed
       // None, not a broken deployment
-      case _ => positioned
+      case _ => Nil
     }
+    val facts = (Seq(members) ++ stored ++ wp ++ hosts)
+      .reduce(_.unionByName(_, allowMissingColumns = true))
+    val aggs = Seq(sort_array(collect_list(col("_member"))).as("diaobjectids")) ++
+      stored.map(_ => min_by(col("_pos"), col("_pord")).as("_pos")) ++
+      wp.map(_ => max(col("_w")).as("_w")) ++
+      hosts.map(_ => min_by(col("_h"), col("_hord")).as("_h"))
+    val perRoot = scope.gather(facts).groupBy("rootid").agg(aggs.head, aggs.tail: _*)
+    val nullPos = lit(null).cast("double")
+    val (ra, dec) =
+      if (stored.isEmpty) (nullPos, nullPos) else (col("_pos.ra"), col("_pos.dec"))
+    // uncertainty columns exist only on the weighted path (the
+    // reference's objinfo carries raerr/decerr/ra_dec_cov alongside
+    // ra/dec); rows whose position came from diaobject_position keep
+    // them null rather than mixing estimators
+    val position =
+      if (!weighted) Seq(ra.as("ra"), dec.as("dec"))
+      else Seq(coalesce(ra, col("_w.ra")).as("ra"), coalesce(dec, col("_w.dec")).as("dec"),
+        when(ra.isNull, col("_w.rastd")).as("rastd"),
+        when(ra.isNull, col("_w.decstd")).as("decstd"),
+        when(ra.isNull, col("_w.ra_dec_cov")).as("ra_dec_cov"))
+    val host = hosts.flatMap(_ => Seq(col("_h.host_id").as("hostgal_id"),
+      col("_h.prio").as("hostgal_prio"), col("_h.host_ra").as("hostgal_ra"),
+      col("_h.host_dec").as("hostgal_dec"), col("_h.info").as("hostgal_info")))
+    perRoot.select(Seq(col("rootid"), col("diaobjectids")) ++ position ++ host: _*)
   }
 
   /** GET a random object (ltcvapp.py:133-145's ORDER BY random()

@@ -168,7 +168,8 @@ object Spectrum {
     *  3. anti-join roots with a spectrum reported in
     *     [noSpecSince, mjdNow] (spectruminfo, J3);
     *  4. photometry for the surviving roots only — [[Ltcv.sources]] /
-    *     [[Ltcv.forced]] with the objids restriction, so the priority
+    *     [[Ltcv.forced]] over the cohort's (diaobjectid, rootid) frame
+    *     ([[Ltcv.Joined]]), so the priority
     *     dedup scans only the requested cohort (the reference pulls
     *     whole lightcurves into pandas here; this stays distributed);
     *  5. latest detection / forced point per (rootid, band) (A9), AB
@@ -271,9 +272,9 @@ object Spectrum {
         scala.concurrent.ExecutionContext.fromExecutor(pool)
       try {
         val fs = scala.concurrent.Future(Ltcv.sources(cat, procverId,
-          mjdNow = Some(mjdNow), objids = Some(ids)).localCheckpoint())
+          mjdNow = Some(mjdNow), scope = Some(Ltcv.Joined(ids))).localCheckpoint())
         val ff = scala.concurrent.Future(Ltcv.forced(cat, procverId,
-          mjdNow = Some(mjdNow), objids = Some(ids)).localCheckpoint())
+          mjdNow = Some(mjdNow), scope = Some(Ltcv.Joined(ids))).localCheckpoint())
         (scala.concurrent.Await.result(fs, scala.concurrent.duration.Duration.Inf),
          scala.concurrent.Await.result(ff, scala.concurrent.duration.Duration.Inf))
       } finally pool.shutdown()

@@ -18,8 +18,8 @@ final case class ProcVerDims(
     baseProcverOfProcver: DataFrame,
     processingVersionAlias: DataFrame) {
 
-  /** (base_procver_id, priority) for one (procver, table) — tiny, meant
-    * to be broadcast into photometry joins. */
+  /** (base_procver_id, priority) for one (procver, table) — tiny; the
+    * queries collect it into literal predicates rather than join it. */
   def priorities(procverId: String, table: String): DataFrame =
     baseProcverOfProcver
       .filter(col("procver_id") === procverId && col("_table") === table)

@@ -1536,7 +1536,7 @@ object FastdbOps {
     * is even, so odd roots never had forced rows). All derived doubles
     * sit on exact 0.1/0.25 lattices computed by one IEEE op order in
     * both engines. */
-  private[queries] def apiCatalog(s: SparkSession, d: String): graft.query.Catalog = {
+  private[graft] def apiCatalog(s: SparkSession, d: String): graft.query.Catalog = {
     val k = col("l_orderkey") * 10 + col("l_linenumber")
     val sfx = col("l_suppkey") % 3
     val band = when(k % 3 === 0, "g").when(k % 3 === 1, "r").otherwise("i")
@@ -1659,7 +1659,7 @@ object FastdbOps {
     * ids with `id % 5 != 4` — and members of one root share `id % 5`
     * (150 ≡ 0 mod 5), so roots with `N % 5 == 4` have NO stored
     * position at any SF and must take the weighted-source fallback. */
-  private def apiPositions(s: SparkSession, d: String): DataFrame = {
+  private[graft] def apiPositions(s: SparkSession, d: String): DataFrame = {
     val m = col("p_partkey") % 400
     val pv = col("p_partkey") % 3
     part(s, d).select(

@@ -1,13 +1,17 @@
 package graft.query
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.procver.ProcVerDims
 import graft.functions.Funcs
 
 /** Catalog handle: the silver fact tables + procver dimensions.
   * All ops are DataFrame-in/DataFrame-out; nothing collects except
-  * tiny-dimension resolution.
+  * tiny-dimension resolution and request-key resolution: a call with
+  * requested ids (or [[Ltcv.hotLtcvs]]'s window candidates) resolves
+  * them to (diaobjectid, rootid) pairs on the driver when it is
+  * called, so those resolve jobs run before the returned frame does.
   */
 final case class Catalog(
     rootDiaobject: DataFrame,
@@ -28,6 +32,17 @@ final case class Catalog(
   */
 object Ltcv {
 
+  /** (base_procver_id, priority) pairs of a priority frame, collected:
+    * the dimension is a handful of rows. Any integral `priority` type. */
+  private def priorityList(priorities: DataFrame): Seq[(Any, Long)] =
+    priorities.select(col("base_procver_id"), col("priority").cast("long"))
+      .collect().toSeq.map(r => r.get(0) -> r.getLong(1))
+
+  /** Base procvers of `table` under a procver, as literals for an
+    * `IN (…)` predicate that reaches the scan. */
+  def baseProcvers(cat: Catalog, procverId: String, table: String): Seq[Any] =
+    priorityList(cat.dims.priorities(procverId, table)).map(_._1)
+
   /** A1 — priority dedup, the system's signature operator.
     *
     * For each natural key keep the row whose base procver has the
@@ -39,7 +54,9 @@ object Ltcv {
     * gets map-side partial combine, so at 100 TB only one row per
     * (key, partition) reaches the shuffle instead of every photometry
     * row hitting a full partition sort. The priority map is a handful
-    * of rows — always broadcast.
+    * of rows, so it is collected, not joined: the rows are restricted
+    * by `base_procver_id IN (…)` (a filter the parquet scan takes) and
+    * ranked by a literal `CASE base_procver_id WHEN … THEN priority`.
     *
     * Physical note: the struct-typed max_by buffer is not
     * UnsafeRow-mutable, so both aggregate halves run as SortAggregate
@@ -52,15 +69,18 @@ object Ltcv {
     */
   def priorityDedup(df: DataFrame, priorities: DataFrame,
       keys: Seq[String], tiebreaks: Seq[String]): DataFrame = {
-    val joined = df.join(broadcast(priorities), Seq("base_procver_id"))
-    // the joined `priority` is ordering machinery, not row payload: it
-    // must not leak into the output schema (the reference's tables have
-    // no such column, and it would collide with a fact table's own
-    // priority), and keeping it out also narrows the SortAggregate
-    // buffer this scaladoc warns about
-    val payload = joined.columns.filterNot(keys.contains).filterNot(_ == "priority")
-    val ordKey = struct(col("priority") +: tiebreaks.map(col): _*)
-    joined
+    val prios = priorityList(priorities)
+    val bpv = col("base_procver_id")
+    val rank = prios match {
+      case Seq() => lit(null).cast("long")
+      case (b, p) +: rest =>
+        rest.foldLeft(when(bpv === lit(b), p)) { case (c, (b, p)) => c.when(bpv === lit(b), p) }
+    }
+    // base_procver_id leads the payload, where the former join put it
+    val payload = "base_procver_id" +:
+      df.columns.filterNot(c => keys.contains(c) || c == "base_procver_id")
+    val ordKey = struct(rank +: tiebreaks.map(col): _*)
+    df.filter(bpv.isin(prios.map(_._1): _*))
       .groupBy(keys.map(col): _*)
       .agg(max_by(struct(payload.map(col): _*), ordKey).as("_best"))
       .select(keys.map(col) ++ payload.map(c => col(s"_best.$c").as(c)): _*)
@@ -71,55 +91,126 @@ object Ltcv {
     * src/ltcv.py:569-630). */
   def objMap(cat: Catalog, procverId: String): DataFrame =
     cat.diaobject
-      .join(broadcast(cat.dims.priorities(procverId, "diaobject")
-        .select("base_procver_id")), Seq("base_procver_id"))
+      .filter(col("base_procver_id").isin(baseProcvers(cat, procverId, "diaobject"): _*))
       .select("diaobjectid", "rootid").distinct()
 
-  /** Expand requested object ids to *all* diaobjectids sharing their
-    * rootids (src/ltcv.py:569-630): the alert stream re-associates
-    * sources across diaobjectids, so lightcurves must be assembled per
-    * rootid (SURVEY.md §7.4 "identity pathologies"). */
-  def expandObjids(cat: Catalog, procverId: String,
-      diaobjectids: Seq[Long] = Nil, rootids: Seq[String] = Nil): DataFrame = {
-    val m = objMap(cat, procverId)
-    val wanted = m.filter(
-      (if (diaobjectids.nonEmpty) col("diaobjectid").isin(diaobjectids: _*) else lit(false)) ||
-      (if (rootids.nonEmpty) col("rootid").isin(rootids: _*) else lit(false)))
-      .select("rootid").distinct()
-    m.join(broadcast(wanted), Seq("rootid"), "left_semi")
+  /** Run `body` with the Spark jobs it launches described as `label`,
+    * so a job census can attribute driver-side collects. */
+  private def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    sc.setJobDescription(label)
+    try body
+    finally sc.setJobDescription(null)
   }
+
+  /** Resolve requested object ids to *all* (diaobjectid, rootid) pairs
+    * sharing their rootids, on the driver (src/ltcv.py:569-630): the
+    * alert stream re-associates sources across diaobjectids, so
+    * lightcurves must be assembled per rootid (SURVEY.md §7.4 "identity
+    * pathologies"). Two filtered, shuffle-free scans of `diaobject`
+    * under the procver's base versions: requested ids to rootids, then
+    * rootids to member ids (a rootid-only request needs only the
+    * second). The result is a few rows per requested object. */
+  def resolveIds(cat: Catalog, procverId: String,
+      diaobjectids: Seq[Long] = Nil, rootids: Seq[String] = Nil): Seq[(Long, String)] =
+    if (diaobjectids.isEmpty && rootids.isEmpty) Nil
+    else labelled(cat.diaobject.sparkSession, "ltcv: resolve ids") {
+      val objs = cat.diaobject.filter(
+        col("base_procver_id").isin(baseProcvers(cat, procverId, "diaobject"): _*))
+      val viaIds =
+        if (diaobjectids.isEmpty) Nil
+        else objs.filter(col("diaobjectid").isin(diaobjectids.distinct.sorted: _*))
+          .select("rootid").collect().toSeq.map(_.getString(0))
+      val roots = (rootids ++ viaIds).distinct.sorted
+      if (roots.isEmpty) Nil
+      else objs.filter(col("rootid").isin(roots: _*))
+        .select(col("diaobjectid").cast("long"), col("rootid")).collect().toSeq
+        .map(r => (r.getLong(0), r.getString(1))).distinct.sorted
+    }
+
+  /** [[resolveIds]] as a (diaobjectid, rootid) frame. */
+  def expandObjids(cat: Catalog, procverId: String,
+      diaobjectids: Seq[Long] = Nil, rootids: Seq[String] = Nil): DataFrame =
+    Keys(resolveIds(cat, procverId, diaobjectids, rootids)).members(cat.diaobject.sparkSession)
+
+  /** Which objects a read covers, and how its diaobjectid-keyed rows
+    * get their rootid. */
+  sealed trait Scope {
+    /** Restrict diaobjectid-keyed rows to the scope and append `rootid`. */
+    def tag(df: DataFrame): DataFrame
+    /** The scope's (diaobjectid, rootid) pairs. */
+    def members(spark: SparkSession): DataFrame
+    /** Bring a scoped result together for its last operator: one
+      * partition for a request, unchanged for the corpus. */
+    def gather(df: DataFrame): DataFrame
+  }
+
+  /** Request path: (diaobjectid, rootid) pairs resolved on the driver.
+    * The ids reach the scan as a pushed `diaobjectid IN (…)`, the
+    * surviving rows cross one single-partition exchange, and rootid
+    * comes from the literal pairs — so dedup, the patch join and the
+    * final sort run in that one partition with no further exchange,
+    * and the plan grows with the request, not the catalog. A
+    * diaobjectid under several rootids (across base procvers) sends
+    * its rows to each of them, as a join would. */
+  final case class Keys(pairs: Seq[(Long, String)]) extends Scope {
+    private val rootsOf: Map[Long, Seq[String]] =
+      pairs.groupBy(_._1).map { case (id, ps) => id -> ps.map(_._2).distinct.sorted }
+    def tag(df: DataFrame): DataFrame = {
+      val one = df.filter(col("diaobjectid").isin(rootsOf.keys.toSeq.sorted: _*)).repartition(1)
+      // the column order a join on diaobjectid would give
+      one.select(col("diaobjectid") +: one.columns.filterNot(_ == "diaobjectid").map(col) :+
+        explode(element_at(typedLit(rootsOf), col("diaobjectid"))).as("rootid"): _*)
+    }
+    def members(spark: SparkSession): DataFrame =
+      spark.createDataFrame(pairs).toDF("diaobjectid", "rootid")
+    def gather(df: DataFrame): DataFrame = df.coalesce(1)
+  }
+
+  /** Corpus path: rows join a (diaobjectid, rootid) frame. */
+  final case class Joined(objids: DataFrame) extends Scope {
+    def tag(df: DataFrame): DataFrame = df.join(objids, Seq("diaobjectid"))
+    def members(spark: SparkSession): DataFrame = objids.select("diaobjectid", "rootid")
+    def gather(df: DataFrame): DataFrame = df
+  }
+
+  /** The request path when ids are given, else every object under the
+    * procver. */
+  def scope(cat: Catalog, procverId: String,
+      diaobjectids: Seq[Long], rootids: Seq[String]): Scope =
+    if (diaobjectids.nonEmpty || rootids.nonEmpty)
+      Keys(resolveIds(cat, procverId, diaobjectids, rootids))
+    else Joined(objMap(cat, procverId))
 
   private def photometryForProcver(phot: DataFrame, cat: Catalog,
       procverId: String, table: String, idCol: String,
-      mjdNow: Option[Double], bands: Seq[String],
-      objids: Option[DataFrame]): DataFrame = {
+      mjdNow: Option[Double], bands: Seq[String], scope: Option[Scope]): DataFrame = {
     // P3 time-travel cut + P4 band filter push down to the parquet scan.
     val cut = mjdNow.map(m => phot.filter(col("midpointmjdtai") <= m)).getOrElse(phot)
     val banded = if (bands.nonEmpty) cut.filter(col("band").isin(bands: _*)) else cut
-    val m = objids.getOrElse(objMap(cat, procverId))
-    val withRoot = banded.join(m, Seq("diaobjectid"))
+    val scoped = scope.getOrElse(Joined(objMap(cat, procverId))).tag(banded)
     // (idCol, base_procver_id) is the storage PK, so priority + idCol is
     // a total order within any (rootid, visit) group.
-    priorityDedup(withRoot, cat.dims.priorities(procverId, table),
+    priorityDedup(scoped, cat.dims.priorities(procverId, table),
       keys = Seq("rootid", "visit"), tiebreaks = Seq(idCol))
   }
 
   /** Detections deduped per (rootid, visit) under `procverId`
-    * (src/ltcv.py:640-671). `objids`: optional (diaobjectid, rootid)
-    * restriction from [[expandObjids]] — small, broadcast by Catalyst. */
+    * (src/ltcv.py:640-671), over `scope` (default: every object under
+    * the procver). */
   def sources(cat: Catalog, procverId: String,
       mjdNow: Option[Double] = None, bands: Seq[String] = Nil,
-      objids: Option[DataFrame] = None): DataFrame =
+      scope: Option[Scope] = None): DataFrame =
     photometryForProcver(cat.diasource, cat, procverId, "diasource",
-      "diasourceid", mjdNow, bands, objids)
+      "diasourceid", mjdNow, bands, scope)
 
   /** Forced photometry deduped per (rootid, visit)
     * (src/ltcv.py:681-712). */
   def forced(cat: Catalog, procverId: String,
       mjdNow: Option[Double] = None, bands: Seq[String] = Nil,
-      objids: Option[DataFrame] = None): DataFrame =
+      scope: Option[Scope] = None): DataFrame =
     photometryForProcver(cat.diaforcedsource, cat, procverId, "diaforcedsource",
-      "diaforcedsourceid", mjdNow, bands, objids)
+      "diaforcedsourceid", mjdNow, bands, scope)
 
   /** J2 — the FULL OUTER patch join (src/ltcv.py:714-741).
     *
@@ -129,7 +220,12 @@ object Ltcv {
     * from the detection; `isdet` = a detection exists; `ispatch` = the
     * value came from the detection because forced hasn't arrived.
     */
-  def patchJoin(forcedDf: DataFrame, sourcesDf: DataFrame): DataFrame = {
+  def patchJoin(forcedDf: DataFrame, sourcesDf: DataFrame): DataFrame =
+    patched(forcedDf, sourcesDf).drop("_detmjd")
+
+  /** [[patchJoin]] plus `_detmjd`, the detection's own mjd (null on
+    * forced-only rows). */
+  private def patched(forcedDf: DataFrame, sourcesDf: DataFrame): DataFrame = {
     val f = forcedDf.select(
       col("rootid"), col("visit"),
       col("band").as("f_band"), col("midpointmjdtai").as("f_mjd"),
@@ -151,32 +247,31 @@ object Ltcv {
         coalesce(col("f_diaobjectid"), col("s_diaobjectid")).as("diaobjectid"),
         col("s_detflux").as("detflux"), col("s_detfluxerr").as("detfluxerr"),
         col("s_band").isNotNull.as("isdet"),
-        (col("s_band").isNotNull && col("f_band").isNull).as("ispatch"))
+        (col("s_band").isNotNull && col("f_band").isNull).as("ispatch"),
+        col("s_mjd").as("_detmjd"))
   }
 
   /** Full lightcurve assembly for a set of objects, ordered
     * (rootid, mjd) — the reference's `many_object_ltcvs`
-    * (src/ltcv.py:294-924) as one declarative plan. */
+    * (src/ltcv.py:294-924) as one declarative plan. Requested ids take
+    * the request path ([[Keys]]); no ids means every object. */
   def objectLtcvs(cat: Catalog, procverId: String,
       diaobjectids: Seq[Long] = Nil, rootids: Seq[String] = Nil,
       mjdNow: Option[Double] = None, bands: Seq[String] = Nil,
       whichPhot: String = "patch"): DataFrame = {
-    val ids =
-      if (diaobjectids.nonEmpty || rootids.nonEmpty)
-        Some(expandObjids(cat, procverId, diaobjectids, rootids))
-      else None
     // reject typos instead of silently serving the patch dataset (the
     // reference raises on an unknown which_phot the same way)
     require(Seq("patch", "detections", "forced").contains(whichPhot),
       s"whichPhot must be patch|detections|forced, got '$whichPhot'")
+    val sc = scope(cat, procverId, diaobjectids, rootids)
+    def src = sources(cat, procverId, mjdNow, bands, Some(sc))
+    def frc = forced(cat, procverId, mjdNow, bands, Some(sc))
     val out = whichPhot match {
-      case "detections" => sources(cat, procverId, mjdNow, bands, ids)
-      case "forced"     => forced(cat, procverId, mjdNow, bands, ids)
-      case _            => patchJoin(
-        forced(cat, procverId, mjdNow, bands, ids),
-        sources(cat, procverId, mjdNow, bands, ids))
+      case "detections" => src
+      case "forced"     => frc
+      case _            => patchJoin(frc, src)
     }
-    out.orderBy("rootid", "midpointmjdtai")
+    sc.gather(out).orderBy("rootid", "midpointmjdtai")
   }
 
   // ---- objstats (A2-A4): the matview replacement ------------------
@@ -351,7 +446,6 @@ object Ltcv {
     * of small curves, no global sort, no skew. */
   def rollingTrailing(src: DataFrame, keys: Seq[String], timeCol: String,
       fluxCol: String, trail: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(keys.map(col): _*).orderBy(timeCol)
       .rangeBetween(-trail, 0L)
     src.withColumn("n_trail", count(lit(1)).over(w))
@@ -383,7 +477,6 @@ object Ltcv {
     * global densification. */
   def interpolateGrid(dedupedSrc: DataFrame, keys: Seq[String],
       timeCol: String, fluxCol: String, step: Long): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val k = keys.map(col)
     val grid = dedupedSrc.groupBy(k: _*)
       .agg(min(col(timeCol)).as("_tmin"), max(col(timeCol)).as("_tmax"))
@@ -451,7 +544,6 @@ object Ltcv {
   def stetsonIndices(dedupedSrc: DataFrame, keys: Seq[String],
       timeCol: String, tieCol: String, fluxCol: String,
       errCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val k = keys.map(col)
     val m = dedupedSrc.groupBy(k: _*)
       .agg(count(lit(1)).as("_n"), avg(col(fluxCol)).as("_fbar"))
@@ -481,17 +573,39 @@ object Ltcv {
 
   /** T6 — hot transients: lightcurves of objects with a detection in
     * [mjdNow - lastdays, mjdNow] (src/ltcv.py:1290-1518; default window
-    * 30 d). Photometry is cut at mjdNow (P3). */
+    * 30 d). Photometry is cut at mjdNow (P3).
+    *
+    * Window first: one scan of `diasource` with the window, band and
+    * base-procver filters pushed collects the candidate diaobjectids,
+    * which then take the request path. A candidate's raw detection may
+    * still lose the priority dedup (or a candidate root may hold no
+    * in-window detection after it), so a root is kept exactly when one
+    * of its *deduped* detections lies in the window. */
   def hotLtcvs(cat: Catalog, procverId: String, mjdNow: Double,
       lastdays: Double = 30.0, bands: Seq[String] = Nil): DataFrame = {
-    val src = sources(cat, procverId, Some(mjdNow), bands)
-    val hotRoots = src
-      .filter(col("midpointmjdtai") >= mjdNow - lastdays)
-      .select("rootid").distinct()
-    val frc = forced(cat, procverId, Some(mjdNow), bands)
-    patchJoin(
-      frc.join(hotRoots, Seq("rootid"), "left_semi"),
-      src.join(hotRoots, Seq("rootid"), "left_semi"))
+    val candidates = labelled(cat.diasource.sparkSession, "ltcv: hot candidates") {
+      hotCandidates(cat, procverId, mjdNow, lastdays, bands)
+        .collect().toSeq.map(_.getLong(0)).distinct
+    }
+    val keys = Keys(resolveIds(cat, procverId, candidates))
+    val lastDet = max(col("_detmjd")).over(Window.partitionBy("rootid"))
+    keys.gather(patched(
+        forced(cat, procverId, Some(mjdNow), bands, Some(keys)),
+        sources(cat, procverId, Some(mjdNow), bands, Some(keys))))
+      .withColumn("_lastdet", lastDet)
+      .filter(col("_lastdet") >= mjdNow - lastdays)
+      .drop("_detmjd", "_lastdet")
       .orderBy("rootid", "midpointmjdtai")
+  }
+
+  /** diaobjectids of the detections in [[hotLtcvs]]'s window, band and
+    * base-procver filters included: a superset of the hot objects. */
+  private[graft] def hotCandidates(cat: Catalog, procverId: String, mjdNow: Double,
+      lastdays: Double, bands: Seq[String]): DataFrame = {
+    val inWindow = cat.diasource.filter(
+      col("midpointmjdtai").between(mjdNow - lastdays, mjdNow) &&
+        col("base_procver_id").isin(baseProcvers(cat, procverId, "diasource"): _*))
+    val banded = if (bands.nonEmpty) inWindow.filter(col("band").isin(bands: _*)) else inWindow
+    banded.select(col("diaobjectid").cast("long"))
   }
 }

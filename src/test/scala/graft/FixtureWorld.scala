@@ -197,4 +197,19 @@ object FixtureWorld {
       photDf(forcedSources, "diaforcedsource", "diaforcedsourceid"),
       dims(spark))
   }
+
+  /** `cat` with its object, position and photometry tables written to
+    * parquet under a fresh temporary directory, so plans show which
+    * filters reach the scans. */
+  def onParquet(spark: SparkSession, cat: Catalog): Catalog = {
+    val dir = java.nio.file.Files.createTempDirectory("fixture_parquet").toString
+    def save(df: DataFrame, name: String): DataFrame = {
+      df.write.parquet(s"$dir/$name")
+      spark.read.parquet(s"$dir/$name")
+    }
+    cat.copy(diaobject = save(cat.diaobject, "diaobject"),
+      diaobjectPosition = save(cat.diaobjectPosition, "diaobject_position"),
+      diasource = save(cat.diasource, "diasource"),
+      diaforcedsource = save(cat.diaforcedsource, "diaforcedsource"))
+  }
 }

@@ -1,7 +1,9 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.api.LtcvApi
 import graft.query.{Catalog, Ltcv}
 import graft.procver.ProcVer
 import graft.functions.Funcs
@@ -262,5 +264,76 @@ class LtcvSpec extends AnyFunSuite {
     assert(hotRoots == want && hotRoots.nonEmpty)
     // photometry must be cut at mjd_now
     assert(hot.filter(col("midpointmjdtai") > mjdNow).count() == 0)
+  }
+
+  /** The fixture catalog plus hand-placed objects at a window's edges
+    * (pv1 chain: bpv1b > bpv1a > bpv1; hot window [60095, 60105], where
+    * no fixture object has a detection): root-hx's only in-window
+    * detection loses its visit to a higher-priority out-of-window row;
+    * root-hy's in-window detection is under bpv2, outside pv1; root-hz
+    * has an in-window g detection and an earlier r one; diaobjectid
+    * 9300 is under root-ha in bpv1 and under root-hb in bpv1a. */
+  lazy val edgeCat: Catalog = {
+    import spark.implicits._
+    val objs = Seq((9000L, "bpv1", "root-hx"), (9000L, "bpv1b", "root-hx"),
+        (9100L, "bpv1", "root-hy"), (9200L, "bpv1", "root-hz"),
+        (9300L, "bpv1", "root-ha"), (9300L, "bpv1a", "root-hb"))
+      .map { case (id, bpv, root) => (id, bpvId(bpv, "diaobject"), root) }
+      .toDF(cat.diaobject.columns: _*)
+    val dets = Seq(
+        (900001L, "bpv1", 9000L, 1L, "r", 60100.0),
+        (900002L, "bpv1b", 9000L, 1L, "r", 60050.0),
+        (900003L, "bpv2", 9100L, 2L, "r", 60100.0),
+        (900004L, "bpv1", 9200L, 3L, "g", 60101.0),
+        (900005L, "bpv1", 9200L, 4L, "r", 60080.0),
+        (900006L, "bpv1", 9300L, 5L, "r", 60102.0))
+      .map { case (id, bpv, obj, visit, band, mjd) =>
+        (id, bpvId(bpv, "diasource"), obj, visit, band, mjd, 1000.0f, 10.0f, 42.0, 15.0) }
+      .toDF(cat.diasource.columns: _*)
+    cat.copy(diaobject = cat.diaobject.unionByName(objs),
+      diasource = cat.diasource.unionByName(dets))
+  }
+
+  private def roots(df: DataFrame): Set[String] =
+    df.select("rootid").distinct().collect().map(_.getString(0)).toSet
+
+  test("T6 hot transients: exact on deduped detections, procver and band scoped, empty window") {
+    def hot(mjdNow: Double = 60105.0, bands: Seq[String] = Nil) =
+      Ltcv.hotLtcvs(edgeCat, pvId("pv1"), mjdNow, lastdays = 10.0, bands = bands)
+    val all = hot()
+    assert(roots(all) == Set("root-hz", "root-ha", "root-hb"))
+    // a hot root's whole cut lightcurve comes back, not just the window
+    assert(all.filter(col("rootid") === "root-hz").count() == 2)
+    assert(roots(hot(bands = Seq("r"))) == Set("root-ha", "root-hb"))
+    val empty = hot(mjdNow = 59000.0)
+    assert(empty.count() == 0 && empty.schema == all.schema)
+  }
+
+  test("getLtcvs: an unknown id is empty with the usual schema; a two-root id serves both roots") {
+    val known = LtcvApi.getLtcvs(edgeCat, pvId("pv1"), diaobjectids = Seq(9200L))
+    val unknown = LtcvApi.getLtcvs(edgeCat, pvId("pv1"), diaobjectids = Seq(424242L))
+    assert(unknown.count() == 0 && unknown.schema == known.schema)
+    val both = LtcvApi.getLtcvs(edgeCat, pvId("pv1"), diaobjectids = Seq(9300L))
+      .select("rootid", "diaobjectid", "visit").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    assert(both == Set(("root-ha", 9300L, 5L), ("root-hb", 9300L, 5L)))
+  }
+
+  test("request path job budget: getLtcvs <= 5, getObjectInfos <= 4, hotLtcvs <= 7 jobs") {
+    val pq = FixtureWorld.onParquet(spark, cat)
+    val m = new Probe.Meter(spark)
+    try {
+      def jobs(df: => DataFrame) = m.run(df).jobs
+      val ltcv = jobs(LtcvApi.getLtcvs(pq, pvId("pv2"), diaobjectids = Seq(201L)))
+      val infos = jobs(LtcvApi.getObjectInfos(pq, pvId("pv2"), diaobjectids = Seq(201L)))
+      val hot = jobs(Ltcv.hotLtcvs(pq, pvId("pv3"), 60041.0, lastdays = 10.0))
+      assert(ltcv.size <= 5, s"getLtcvs: ${ltcv.map(_.label)}")
+      assert(infos.size <= 4, s"getObjectInfos: ${infos.map(_.label)}")
+      assert(hot.size <= 7, s"hotLtcvs: ${hot.map(_.label)}")
+      // the driver-side collects are labelled for a job census
+      Seq(ltcv, infos, hot).foreach(js =>
+        assert(js.count(_.label.startsWith("[ltcv: resolve ids]")) == 2, js.map(_.label)))
+      assert(hot.count(_.label.startsWith("[ltcv: hot candidates]")) == 1, hot.map(_.label))
+    } finally m.close()
   }
 }

@@ -12,7 +12,45 @@ class PlanShapeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   val d = "/root/testdata/sf0.001"
 
-  def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
+  /** The physical plan as text, with scan metadata (PushedFilters,
+    * DataFilters) rendered whole instead of cut at 100 characters. */
+  def plan(df: DataFrame): String = {
+    val key = "spark.sql.maxMetadataStringLength"
+    val was = spark.conf.getOption(key)
+    spark.conf.set(key, "100000")
+    try df.queryExecution.executedPlan.toString
+    finally was.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** A shuffle exchange line (not a BroadcastExchange). */
+  private def isExchange(line: String): Boolean =
+    "\\bExchange ".r.findFirstIn(line).isDefined
+
+  /** A request plan (the a22/a23/T6 serving calls with ids): every scan
+    * takes the key set as a pushed `In(diaobjectid`, nothing
+    * broadcasts, and each scanned table crosses at most one exchange,
+    * which sits above the key filter — so no photometry row is
+    * shuffled before the request has cut it down. */
+  def assertRequestPlan(p: String, scans: Int): Unit = {
+    val lines = p.split("\n").toSeq
+    val scanLines = lines.filter(_.contains("FileScan"))
+    assert(scanLines.length == scans, s"want $scans scans:\n$p")
+    scanLines.foreach(l => assert(l.contains("In(diaobjectid"), s"key set not pushed:\n$l"))
+    assert(!p.contains("BroadcastExchange"), s"a request plan must not broadcast:\n$p")
+    val ex = lines.indices.filter(i => isExchange(lines(i)))
+    assert(ex.length <= scans, s"more exchanges than scanned tables:\n$p")
+    ex.foreach { i =>
+      val below = lines.drop(i + 1).takeWhile(!_.contains("FileScan"))
+      assert(below.exists(l => l.contains("Filter") &&
+          "diaobjectid#\\d+L? (IN|INSET) ".r.findFirstIn(l).isDefined),
+        s"exchange before the key filter:\n${lines(i)}")
+    }
+  }
+
+  /** The a22/a23 API catalog with its tables on parquet. */
+  lazy val apiCat = FixtureWorld.onParquet(spark,
+    graft.queries.FastdbOps.apiCatalog(spark, d)
+      .copy(diaobjectPosition = graft.queries.FastdbOps.apiPositions(spark, d)))
 
   test("j1 join chain: dims broadcast, region predicate pushed, lineitem pruned") {
     val p = plan(graft.queries.Relational.j1JoinChain(spark, d))
@@ -24,11 +62,19 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("a1 priority dedup: broadcast priorities + partial aggregation, no window sort") {
+    // the tiny priority map reaches every task as plan literals (a
+    // pushed IN and a CASE rank), not through a broadcast hash join
     val p = plan(graft.queries.FastdbOps.a1PriorityDedup(spark, d))
-    assert(p.contains("BroadcastHashJoin"), "priority map must broadcast")
-    assert(p.contains("partial_max_by") || p.contains("partial_max"),
-      "dedup must combine map-side")
+    assert(!p.contains("Join"), s"the priority map must not be joined:\n$p")
+    // a1's base_procver_id is derived, so the IN lands in the scan's
+    // DataFilters; on a stored column it is a pushed parquet filter
+    assert("DataFilters: \\[[^\\]]* IN \\(bpv0,bpv1,bpv2\\)".r.findFirstIn(p).isDefined,
+      "the priority set must filter the scan")
+    assert(p.contains("partial_max_by"), "dedup must combine map-side")
     assert(!p.contains("Window"), "A1 must not be a window sort")
+    val stored = plan(graft.query.Ltcv.sources(
+      FixtureWorld.onParquet(spark, FixtureWorld.catalog(spark)), "pvid-pv1"))
+    assert(stored.contains("In(base_procver_id"), s"priority set not pushed:\n$stored")
   }
 
   test("time-travel cut pushes down to the parquet photometry scan") {
@@ -139,18 +185,24 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("a22 API path: request-bounded sides broadcast, cuts reach the scans") {
-    val p = plan(graft.queries.FastdbOps.a22ManyLtcvs(spark, d))
-    // the expanded id set and priority maps broadcast into every
-    // corpus-side join (the scans carry the pushed mjd cut), so the
-    // ONLY shuffle join is the patch join itself: FULL OUTER cannot
-    // broadcast in Spark, and both its inputs are request-bounded
-    // post-dedup frames — bounded at any corpus scale
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 6,
-      "id/priority joins must broadcast")
-    val smj = p.split("\n").filter(_.contains("SortMergeJoin"))
-    assert(smj.length == 1 && smj.head.contains("FullOuter"),
-      s"only the full-outer patch join may shuffle:\n${smj.mkString("\n")}")
-    assert(!p.contains("CartesianProduct"))
+    // the request-bounded sides (resolved keys, priorities) reach every
+    // task as plan literals pushed into the photometry scans, not through
+    // broadcast joins; each table then crosses one exchange into a
+    // single partition
+    val p = plan(graft.api.LtcvApi.getLtcvs(apiCat, "pv",
+      diaobjectids = Seq(7L, 160L, 311L), rootids = Seq("r5"),
+      mjdNow = Some(60075.05), bands = Seq("g", "r")))
+    assertRequestPlan(p, scans = 2)
+    assert(p.contains("LessThanOrEqual(midpointmjdtai,60075.05)") && p.contains("In(band"),
+      "mjd and band cuts must reach the scans")
+    // FULL OUTER cannot broadcast, and both its inputs already sit in
+    // one partition, so it is a merge join with no exchange of its own
+    val joins = p.split("\n").filter(_.contains("Join"))
+    assert(joins.length == 1 && joins.head.contains("SortMergeJoin") &&
+      joins.head.contains("FullOuter"), s"only the patch join:\n${joins.mkString("\n")}")
+    val battery = plan(graft.queries.FastdbOps.a22ManyLtcvs(spark, d))
+    assert(!battery.contains("BroadcastExchange"))
+    assert(battery.split("\n").count(isExchange) == 2, battery)
   }
 
   test("sp1 spectrum workflow: request-sized joins broadcast, dedup combines map-side") {
@@ -171,13 +223,27 @@ class PlanShapeSpec extends AnyFunSuite {
       s"inner corpus-side joins must broadcast:\n${smj.mkString("\n")}")
   }
 
-  test("a23 object infos: position argmax partial-aggregates, id joins broadcast") {
-    val p = plan(graft.queries.FastdbOps.a23ObjectInfos(spark, d))
+  test("a23 object infos: keys pushed into the position and source scans, no join") {
+    def infos(always: Boolean) = plan(graft.api.LtcvApi.getObjectInfos(apiCat, "pv",
+      diaobjectids = Seq(3L, 158L, 304L), rootids = Seq("r7", "r29"),
+      useWeightedSourcePositions = !always, alwaysUseWeightedSourcePositions = always))
+    val p = infos(always = false)
+    assertRequestPlan(p, scans = 2)
+    assert(!p.contains("Join"), s"members, positions and weights meet in one aggregate:\n$p")
     assert(p.contains("partial_max_by") && p.contains("partial_min_by"),
       "best-position / first-per-root argmaxes must combine map-side")
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 4,
-      "id expansion / priority / semi joins must broadcast")
+    // stored positions ignored: the position table is not read at all
+    assertRequestPlan(infos(always = true), scans = 1)
+  }
+
+  test("T6 hot request plan: window pushed into the candidate scan, keys into the photometry") {
+    val cat = FixtureWorld.onParquet(spark, FixtureWorld.catalog(spark))
+    val cand = plan(graft.query.Ltcv.hotCandidates(cat, "pvid-pv1", 60041.0, 10.0, Seq("r", "g")))
+    Seq("GreaterThanOrEqual(midpointmjdtai,60031.0)", "LessThanOrEqual(midpointmjdtai,60041.0)",
+        "In(base_procver_id", "In(band").foreach(f =>
+      assert(cand.contains(f), s"$f not pushed:\n$cand"))
+    assert(!cand.split("\n").exists(isExchange), "the candidate scan must not shuffle")
+    assertRequestPlan(plan(graft.query.Ltcv.hotLtcvs(cat, "pvid-pv1", 60041.0, 10.0)), scans = 2)
   }
 
   test("a19 Lomb-Scargle pass 2: phase trig projected once per row, not per sum") {

@@ -10,13 +10,17 @@ alternates which tree goes first: A then B on the first seed, B then A
 on the next. Each run's result line is printed as it lands; at the end
 it prints, per side and metric, the median and the quartiles (q1..q3,
 with the spread q3 - q1 as a share of the median), then the failed and
-attempted operations summed over the side's runs. A run's stderr goes
-to `<log-dir>/<side>_<seed>.log`. Exits 1 if any run gave no result or
+attempted operations summed over the side's runs, then the median
+latency of each op kind over all of the side's ops, read from each
+run's stderr line `latencies (s): ltcv ... ; objinfo ...`, so an A/B
+of `turn_p50_s` can say which ops moved. A run's stderr goes to
+`<log-dir>/<side>_<seed>.log`. Exits 1 if any run gave no result or
 reported `correct: false`.
 """
 import argparse
 import json
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -32,8 +36,23 @@ def seeds(spec):
     return out
 
 
+def op_latencies(log):
+    """{op kind: [seconds]} from a run's `latencies (s): ` stderr line."""
+    out = {}
+    with open(log) as fh:
+        for line in fh:
+            m = re.search(r"latencies \(s\): (.*)$", line)
+            if not m:
+                continue
+            for part in m.group(1).split(";"):
+                kind, *values = part.split()
+                out.setdefault(kind, []).extend(float(v) for v in values)
+    return out
+
+
 def run(tree, side, seed, args):
-    """One benchmark run in `tree`; returns its parsed result line or None."""
+    """One benchmark run in `tree`; returns its parsed result line, with
+    the run's op latencies under "op_latencies", or None."""
     log = os.path.join(args.log_dir, f"{side}_{seed}.log")
     cmd = [sys.executable, "perfbench/run.py", "--workload", args.workload,
            "--seed", str(seed), "--seconds", str(args.seconds),
@@ -43,9 +62,12 @@ def run(tree, side, seed, args):
                               stderr=err, text=True)
     lines = proc.stdout.strip().splitlines()
     try:
-        return json.loads(lines[-1]) if proc.returncode == 0 and lines else None
+        r = json.loads(lines[-1]) if proc.returncode == 0 and lines else None
     except json.JSONDecodeError:
         return None
+    if r is not None:
+        r["op_latencies"] = op_latencies(log)
+    return r
 
 
 def quartiles(xs):
@@ -102,6 +124,14 @@ def main():
             spread = (q3 - q1) / abs(med) if med else float("nan")
             print(f"  {name:<40} median {med:<12.6g} q1..q3 {q1:.6g}..{q3:.6g}"
                   f"  spread {spread:.3f}")
+        lat = {}
+        for r in rs:
+            for kind, xs in r["op_latencies"].items():
+                lat.setdefault(kind, []).extend(xs)
+        for kind, xs in lat.items():
+            if xs:
+                print(f"  op {kind:<37} median {statistics.median(xs):<12.6g} "
+                      f"over {len(xs)} ops")
     sys.exit(1 if bad else 0)
 
 
