@@ -1,8 +1,11 @@
 package graft
 
 import java.io.File
+import java.lang.management.ManagementFactory
 import java.nio.file.{Files, Paths}
 import java.util.concurrent.TimeUnit
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
 
@@ -14,7 +17,13 @@ import org.apache.spark.sql.SparkSession
   * contaminate each other (codegen-cache pressure + GC residue):
   * `d3_simhash` measured 18.6 s in-battery vs 5.5 s in an isolated
   * JVM, d9 16.7 vs 2.2, e1 13.5 vs 2.8 — the battery was
-  * overstating the engine ~2x. The parent therefore forks a child JVM
+  * overstating the engine ~2x. The codegen half has a measured
+  * mechanism: Spark's generated-class cache was a 100-entry LRU, and a
+  * work set larger than 100 classes (one alert micro-batch alone needs
+  * ~151) evicts every class before its next use, so each execution
+  * recompiles them all. build.sbt sizes the cache to 1000 entries, and
+  * children start with the parent's JVM arguments, so they get that
+  * setting too. The parent still forks a child JVM
   * per query GROUP: every dedup/composition query (d*, e*, cc*) runs
   * in its own JVM, the cheap relational/scalar queries run in chunks
   * of 8 with the same inter-query cache hygiene. JVM + session
@@ -40,18 +49,6 @@ import org.apache.spark.sql.SparkSession
   * query measured up to the kill instead of erasing the round.
   */
 object Bench {
-
-  /** Matches build.sbt's jdk17AddOpens: Spark 4.x on JDK 17 needs
-    * these when SparkSession is created outside spark-submit. */
-  private val addOpens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   def main(args: Array[String]): Unit = args.headOption match {
     case Some("--child")  => childMain(args(1), args(2).split(",").toSeq)
@@ -273,11 +270,11 @@ object Bench {
         Seq(graftCp, scalaJar, sparkJars + "/*").mkString(File.pathSeparator)
       }
     val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
-    val mem = sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      s"-Xmx$mem",
-      "-Dspark.ui.enabled=false",
-      "-cp", cp, "graft.Bench") ++ childArgs
+    // the parent's own JVM arguments (build.sbt's javaOptions: module
+    // opens, heap, the codegen cache size and the Spark defaults), so a
+    // child runs under exactly the settings its parent was started with
+    val jvmArgs = ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq("-cp", cp, "graft.Bench") ++ childArgs
     val pb = new ProcessBuilder(cmd: _*)
     pb.redirectErrorStream(true)
     pb.redirectOutput(ProcessBuilder.Redirect.appendTo(log))

@@ -4,17 +4,19 @@ import java.util.concurrent.ConcurrentHashMap
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.execution.FormattedMode
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Solo measurement of battery queries: `runMain graft.Probe
   * <name[,name...]> [runs]` over SPARK_GRAFT_SF_DIR, default 3 runs with
   * Bench's cache hygiene between them. Per query it prints
-  *  - each run's seconds with its Spark job and stage counts:
-  *    fixed-cost queries pay scheduler round-trips, so the job count is
-  *    what wall-clock alone can't show;
+  *  - each run's seconds with its Spark job and stage counts and the
+  *    classes it compiled: fixed-cost queries pay scheduler round-trips
+  *    and Janino compiles, which wall-clock alone can't show;
   *  - the last run's per-job census: id, wall-clock, and the label or
   *    call site that scheduled it;
   *  - the formatted physical plan of the last run's frame. A composite
@@ -35,12 +37,22 @@ object Probe {
   }
 
   /** One measured run: wall seconds of building the frame plus its
-    * noop-sink write, the jobs both launched, and (when asked for) the
-    * frame's formatted plan. */
-  final case class Run(secs: Double, jobs: Seq[Job], plan: Option[String]) {
+    * noop-sink write, the jobs both launched, the generated classes
+    * Janino compiled meanwhile and their compile milliseconds (a plan
+    * shape seen before is a codegen-cache hit and compiles nothing),
+    * and (when asked for) the frame's formatted plan. */
+  final case class Run(secs: Double, jobs: Seq[Job], compiles: Long,
+      compileMs: Double, plan: Option[String]) {
     def summary: String =
-      f"$secs%.3f s jobs=${jobs.size} stages=${jobs.map(_.stages).sum}"
+      f"$secs%.3f s jobs=${jobs.size} stages=${jobs.map(_.stages).sum} " +
+        f"compiles=$compiles compile_ms=$compileMs%.0f"
   }
+
+  /** Process-wide codegen counters: classes compiled, compile ns. The
+    * counts are per JVM, so in local mode they include executor-side
+    * compiles, which hit the same cache. */
+  def codegenCounters(): (Long, Long) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
 
   /** The one listener: every job's stage count, label and wall-clock. */
   private final class Census extends SparkListener {
@@ -85,16 +97,18 @@ object Probe {
       * into the next), take the census, and clean the session's caches. */
     def run(build: => DataFrame, explain: Boolean = false): Run = {
       census.jobs.clear()
+      val (n0, ns0) = codegenCounters()
       val t0 = System.nanoTime()
       val df = build
       df.write.mode("overwrite").format("noop").save()
       val secs = (System.nanoTime() - t0) / 1e9
+      val (n1, ns1) = codegenCounters()
       Bridge.drainListeners(spark.sparkContext)
       val jobs = census.jobs.values.asScala.toSeq.sortBy(_.id)
       val plan =
         if (explain) Some(df.queryExecution.explainString(FormattedMode)) else None
       GraftSession.clean(spark)
-      Run(secs, jobs, plan)
+      Run(secs, jobs, n1 - n0, (ns1 - ns0) / 1e6, plan)
     }
 
     def close(): Unit = spark.sparkContext.removeSparkListener(census)

@@ -66,16 +66,25 @@ object AlertStream {
       forced: DataFrame, sourcesExtra: DataFrame, forcedExtra: DataFrame,
       brokerinfo: DataFrame, thumbnails: DataFrame)
 
+  /** The ingest stamp column: one `current_timestamp()` per batch,
+    * added beneath the persisted alert frame by [[importAlerts]]. */
+  val Stamp = "ingest_ts"
+
   /** brokerconsumer.py:534-649's alert_wrangler: split each alert into
     * object / source / source-extra / forced / forced-extra /
     * brokerinfo / thumbnail staging rows (current + previous sources —
     * at-least-once duplicates are expected and removed by the merge).
     * `brokername`/`topic` come from the consumer context, exactly as
-    * the reference's metamsg carries them. */
+    * the reference's metamsg carries them. Every row's ingest time is
+    * the alert frame's [[Stamp]] column; a frame without one is stamped
+    * here, once per executed plan. */
   def wrangle(alerts: DataFrame, baseProcverId: String,
       brokername: String = "direct", topic: String = "alerts"): Wrangled = {
-    val ts = current_timestamp()
-    val objects = alerts.select(
+    val stamped =
+      if (alerts.columns.contains(Stamp)) alerts
+      else alerts.withColumn(Stamp, current_timestamp())
+    val ts = col(Stamp)
+    val objects = stamped.select(
       col("diaObject.diaObjectId").as("diaobjectid"),
       lit(baseProcverId).as("base_procver_id"),
       col("diaObject.ra").as("ra"), col("diaObject.dec").as("dec"),
@@ -106,14 +115,12 @@ object AlertStream {
     // one exploded (current + prv) source stream feeds both the core
     // and the extra split — the collection split is a projection, not
     // a second scan
-    val allSources = alerts.select(explode(concat(
+    val allSources = stamped.select(explode(concat(
         array(srcRow(col("diaSource"))),
         coalesce(transform(col("prvDiaSources"), srcRow _),
           array().cast(stagedSourceType))))
-        .as("s"))
-      .select(col("s.*"))
-      .withColumn("base_procver_id", lit(baseProcverId))
-      .withColumn("ingest_ts", ts)
+        .as("s"), ts)
+      .select(col("s.*"), lit(baseProcverId).as("base_procver_id"), ts)
 
     val sources = allSources
       .drop("snr", "scienceflux", "sciencefluxerr", "extendedness", "reliability")
@@ -132,8 +139,8 @@ object AlertStream {
         .map(col): _*)
       .filter(extraCols.map(c => col(c).isNotNull).reduce(_ || _))
 
-    val allForced = alerts.select(explode(coalesce(col("prvDiaForcedSources"),
-        array().cast(ArrayType(forcedStruct)))).as("f"))
+    val allForced = stamped.select(explode(coalesce(col("prvDiaForcedSources"),
+        array().cast(ArrayType(forcedStruct)))).as("f"), ts)
       .select(
         col("f.diaForcedSourceId").as("diaforcedsourceid"),
         col("f.diaObjectId").as("diaobjectid"),
@@ -141,9 +148,8 @@ object AlertStream {
         col("f.midpointMjdTai").as("midpointmjdtai"),
         col("f.psfFlux").as("psfflux"), col("f.psfFluxErr").as("psffluxerr"),
         col("f.scienceFlux").as("scienceflux"),
-        col("f.scienceFluxErr").as("sciencefluxerr"))
-      .withColumn("base_procver_id", lit(baseProcverId))
-      .withColumn("ingest_ts", ts)
+        col("f.scienceFluxErr").as("sciencefluxerr"),
+        lit(baseProcverId).as("base_procver_id"), ts)
 
     val forced = allForced
       .drop("scienceflux", "sciencefluxerr")
@@ -158,7 +164,7 @@ object AlertStream {
     // one brokerinfo row per alert: consumer metadata + the prv id
     // arrays + every non-standard field as a JSON envelope
     // (alert_wrangler's brokerinfos list, brokerconsumer.py:625-649)
-    val brokerinfo = alerts.select(
+    val brokerinfo = stamped.select(
       lit(brokername).as("brokername"), lit(topic).as("topic"),
       col("diaSource.diaSourceId").as("diasourceid"),
       lit(baseProcverId).as("base_procver_id"),
@@ -174,7 +180,7 @@ object AlertStream {
 
     // thumbnails stage only when some cutout arrived
     // (_wrangle_all_standard_lsst_fields, brokerconsumer.py:565-575)
-    val thumbnails = alerts
+    val thumbnails = stamped
       .filter(col("cutoutDifference").isNotNull ||
         col("cutoutScience").isNotNull || col("cutoutTemplate").isNotNull)
       .select(
@@ -223,14 +229,16 @@ object AlertStream {
     * not a recomputation of the catalog. The alert frame is the one
     * persisted frame: saveDelta executes one plan per touched table (up
     * to 9), and each re-reads it instead of re-running the input scan.
-    * Wrangle's `current_timestamp()` is therefore fixed per plan: one
-    * value within a table write, not shared across tables. */
+    * The ingest stamp ([[Stamp]]) is a column beneath that cache, so
+    * every table of the batch gets the same value, and no plan above
+    * the cache inlines a per-batch literal: the generated classes of
+    * one batch are reused by the next from Spark's codegen cache. */
   def importAlerts(spark: SparkSession, store: SilverStore, alerts: DataFrame,
       baseProcverId: String, brokername: String = "direct",
       topic: String = "alerts"): Unit = {
-    alerts.persist()
+    val stamped = alerts.withColumn(Stamp, current_timestamp()).persist()
     try {
-      val w = wrangle(alerts, baseProcverId, brokername, topic)
+      val w = wrangle(stamped, baseProcverId, brokername, topic)
       val (_, deltas) = SourceImporter.importBatchWithDeltas(
         store.load(spark), w.objects, w.sources, w.forced,
         stagedSourcesExtra = Some(w.sourcesExtra),
@@ -238,6 +246,6 @@ object AlertStream {
         stagedBrokerinfo = Some(w.brokerinfo),
         stagedThumbnails = Some(w.thumbnails))
       store.saveDelta(deltas)
-    } finally alerts.unpersist()
+    } finally stamped.unpersist()
   }
 }

@@ -249,7 +249,10 @@ final class SilverStore(baseDir: String) {
       "diaforcedsource_extra" -> d.diaforcedsourceExtra)
       .collect { case (name, Some(df)) =>
         val seq = liveSegments(name).size.toLong + 1L
-        name -> df.withColumn("_seq", lit(seq))
+        // a UDF's result, not a literal: a literal is inlined into the
+        // generated class, so each batch would compile the table's
+        // write stage anew; the UDF is a reference the class reads
+        name -> df.withColumn("_seq", udf(() => seq).apply())
       }
     val staged = Staged(stagePar(appends ++ morAppends) { case (name, df) =>
       writeSegment(name, df).map(seg => name -> (liveSegments(name) :+ seg))

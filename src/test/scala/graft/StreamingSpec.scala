@@ -133,6 +133,58 @@ class StreamingSpec extends AnyFunSuite {
     assert(store.load(spark).brokerinfo.count() == 6)
   }
 
+  /** Alerts `ids` of object `objId`, read back from parquet with the
+    * stream's schema, as a micro-batch's frame is. */
+  def alertBatch(ids: Seq[Long], objId: Long, ra: Double, dec: Double) = {
+    val dir = Files.createTempDirectory("batch").toString
+    alertsDf(ids, objId, ra, dec).write.mode("overwrite").parquet(dir)
+    spark.read.schema(AlertStream.alertSchema).parquet(dir)
+  }
+
+  test("the test JVM runs with the build's codegen cache size") {
+    // build.sbt's javaOptions set it; a launch path that drops them
+    // leaves Spark's 100-entry LRU, which one alert batch's ~151
+    // generated classes thrash
+    val key = "spark.sql.codegen.cache.maxEntries"
+    val entries = sys.props.get(key)
+    assert(entries.exists(_.toInt > 151), s"$key = $entries: javaOptions not applied")
+    assert(spark.conf.get(key) == entries.get)
+  }
+
+  test("alert import: a steady-state batch reuses its generated classes") {
+    val store = new SilverStore(Files.createTempDirectory("silver").toString)
+    val compiles = (0 until 4).map { k =>
+      val batch = alertBatch(Seq(10L, 11L, 12L).map(_ + 100 * k), 30L + k,
+        20.0 + k, 5.0)
+      val (n0, _) = Probe.codegenCounters()
+      AlertStream.importAlerts(spark, store, batch, "bpv-cg")
+      Probe.codegenCounters()._1 - n0
+    }
+    assert(store.load(spark).brokerinfo.count() == 12)
+    // the first three batches compile the plan shapes that an empty, a
+    // one-segment and a two-segment store give; from then on a batch
+    // compiles only the projection beneath its cache, which inlines
+    // the batch's ingest stamp (measured: 2 classes)
+    assert(compiles(3) <= 4, s"classes compiled per batch: ${compiles.mkString(", ")}")
+  }
+
+  test("alert import: one ingest stamp per batch across tables") {
+    val store = new SilverStore(Files.createTempDirectory("silver").toString)
+    AlertStream.importAlerts(spark, store,
+      alertBatch(Seq(5L, 6L, 7L), 1L, 42.0, 13.0), "bpv-ts")
+    AlertStream.importAlerts(spark, store,
+      alertBatch(Seq(40L, 41L), 4L, 50.0, 13.0), "bpv-ts")
+    val s = store.load(spark)
+    val stamps = s.diaobjectPosition.select(col("diaobjectid"), col("created_at").as("t"))
+      .union(Seq("msgtime", "receivedtime", "importtime").map(c =>
+        s.brokerinfo.select(col("diaobjectid"), col(c).as("t"))).reduce(_ union _))
+      .groupBy("diaobjectid").agg(countDistinct("t").as("n"), min("t").as("t"))
+      .orderBy("diaobjectid").collect()
+    assert(stamps.map(_.getLong(0)).toSeq == Seq(1L, 4L))
+    assert(stamps.forall(_.getLong(1) == 1L), "a batch's rows carry several stamps")
+    assert(stamps(0).getTimestamp(2).before(stamps(1).getTimestamp(2)))
+  }
+
   test("silver store: crash before manifest flip leaves previous version readable") {
     val store = new SilverStore(Files.createTempDirectory("swap").toString)
     val w1 = AlertStream.wrangle(alertsDf(Seq(1L, 2L), 9L, 1.0, 2.0), "bpv-c")
