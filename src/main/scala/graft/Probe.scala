@@ -72,7 +72,8 @@ object Probe {
         if (anon && stageSites.nonEmpty)
           s"$site <- [${stageSites.take(4).mkString(" | ")}]"
         else site
-      // setJobDescription labels (the silver write path sets them)
+      // job labels (`Jobs.labelled`: silver, gold and rollup
+      // writes, the importer, the ltcv driver-side collects)
       // survive in the job properties when every call site collapses
       // to the stream's start()
       val label = Option(j.properties)

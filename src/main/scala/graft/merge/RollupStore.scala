@@ -1,82 +1,55 @@
 package graft.merge
 
+import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import graft.util.SegmentTable
 
 /** Incrementally-maintained aggregate rollup (a materialized view kept
   * fresh by batch folds) — the warehouse pattern behind every "daily
-  * metrics" table: per batch, aggregate ONLY the batch, read back only
-  * the rollup partitions the batch touches, merge additively, and
-  * rewrite exactly those partitions via dynamic partition overwrite.
+  * metrics" table. The state at `dir` is a [[SegmentTable]] of partial
+  * aggregates: per batch, aggregate ONLY the batch and append it as one
+  * segment; [[load]] sums the partials over the live segments
+  * (merge-on-read, as silver's `*_extra` tables do).
   *
-  * Scale shape: per-fold cost is O(batch) + O(touched partitions) —
-  * the accumulated history is never rescanned (the d8/d9 incremental
-  * contract, applied to aggregation instead of dedup). The state dir
-  * is parquet partitioned by the first key; the touched-key filter
-  * prunes untouched partitions at the FILE level (partition pruning),
-  * and `partitionOverwriteMode=dynamic` makes the overwrite replace
-  * only partitions present in the written frame. Counts and sums are
-  * additive, so fold order cannot change the result — an idempotence
-  * CONTRACT this store does not provide by itself: a replayed batch
-  * double-counts (pair with at-least-once dedup upstream, e.g.
-  * [[graft.streaming.StreamingDedup]], or exactly-once batch ids).
-  *
-  * Crash safety note: the dynamic overwrite is atomic per partition
-  * directory on a real object store committer; a mid-write crash on
-  * plain local FS can leave a torn partition — the SilverStore staged
-  * segments + manifest flip is the hardened variant when that matters.
+  * Cost shape: a fold is O(batch), never reads history and rewrites no
+  * committed segment; a read is O(live partials), one batch aggregate
+  * more per fold. Sums are additive, so flipping the manifest to one
+  * segment holding [[load]] would compact the history without changing
+  * a read (SilverStore.compact's story; ev8 folds four batches and
+  * needs none). Fold order cannot change the result, but a replayed
+  * batch double-counts — pair with at-least-once dedup upstream (e.g.
+  * [[graft.streaming.StreamingDedup]]) or exactly-once batch ids.
   */
 object RollupStore {
 
+  private def table(dir: String): SegmentTable =
+    new SegmentTable(Paths.get(dir), "rollup write")
+
   /** Fold one batch of events into the rollup at `dir`, keyed by
     * (`partCol`, `keyCol`) with additive metrics `n` (count) and
-    * `sum_value` (sum of `valueCol`). Returns the merged frame for
-    * the touched partitions. */
-  def fold(spark: SparkSession, dir: String, batch: DataFrame,
-      partCol: String, keyCol: String, valueCol: String): Unit = {
+    * `sum_value` (sum of `valueCol`). */
+  def fold(dir: String, batch: DataFrame, partCol: String, keyCol: String,
+      valueCol: String): Unit =
+    stageFold(dir, batch, partCol, keyCol, valueCol).commit()
+
+  private[graft] def stageFold(dir: String, batch: DataFrame,
+      partCol: String, keyCol: String, valueCol: String): SegmentTable.Staged = {
+    val t = table(dir)
     val agg = batch.groupBy(col(partCol), col(keyCol))
       .agg(count(lit(1)).as("n"), sum(col(valueCol)).as("sum_value"))
-      .persist()
-    // touched partitions: bounded by the batch's distinct partition
-    // keys (days, typically a handful) — broadcastable by construction
-    val touched = agg.select(partCol).distinct()
-    // Hadoop-FS marker probe (not java.io.File) so the rollup store
-    // works on HDFS/S3 locations, where an MV lives at 100 TB
-    val fs = graft.util.Stage.fs(spark, dir)
-    val started = new org.apache.hadoop.fs.Path(dir, "_STARTED")
-    val existing: Option[DataFrame] =
-      if (fs.exists(started))
-        // the store's schema IS the fold aggregate's schema (every
-        // fold writes through this same pipeline), so pass it
-        // explicitly: a schemaless read fires one footer-inference
-        // scheduler job per fold just to rediscover it (r15; the
-        // Tables.table / NearDupStream.indexSchemas rationale)
-        Some(spark.read.schema(agg.schema).parquet(dir)
-          .join(broadcast(touched), Seq(partCol), "left_semi"))
-      else None
-    val merged = existing match {
-      case Some(ex) =>
-        ex.unionByName(agg)
-          .groupBy(col(partCol), col(keyCol))
-          .agg(sum(col("n")).as("n"), sum(col("sum_value")).as("sum_value"))
-      case None => agg
-    }
-    // materialize BEFORE writing: the merged plan reads the very
-    // partitions the dynamic overwrite is about to replace
-    val out = merged.localCheckpoint(true)
-    agg.unpersist(blocking = false)
-    // per-write option, not session conf: other writes in the session
-    // keep their own overwrite mode
-    out.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
-      .partitionBy(partCol).parquet(dir)
-    graft.pipeline.Components.release(out)
-    if (!fs.exists(started)) fs.create(started).close()
+    SegmentTable.Staged(t.write(agg).map(seg => t -> (t.live :+ seg)).toSeq)
   }
 
-  /** The current rollup state. Callers that know the store's fixed
-    * (partCol, keyCol, n, sum_value) schema pass it to skip the
-    * footer-inference job the schemaless read fires. */
-  def load(spark: SparkSession, dir: String,
-      schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
-    schema.fold(spark.read)(spark.read.schema).parquet(dir)
+  /** The current rollup state: the live partials summed per
+    * (`partCol`, `keyCol`), the two keys being the first two columns of
+    * the stored (partCol, keyCol, n, sum_value) schema. Callers that
+    * know that schema pass it to skip the footer-inference job the
+    * schemaless read fires. */
+  def load(spark: SparkSession, dir: String, schema: Option[StructType] = None): DataFrame = {
+    val partials = schema.fold(spark.read)(spark.read.schema).parquet(table(dir).paths: _*)
+    partials.groupBy(partials.columns.take(2).map(col): _*)
+      .agg(sum(col("n")).as("n"), sum(col("sum_value")).as("sum_value"))
+  }
 }

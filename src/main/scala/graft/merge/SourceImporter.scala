@@ -194,12 +194,9 @@ object SourceImporter {
     // `uuid()` is non-deterministic and would evaluate differently in
     // the two plan branches below, and deterministic ids make replayed
     // imports byte-identical (rob_stress_2025apr.txt:60-62).
-    val sc = stagedObjects.sparkSession.sparkContext
-    sc.setJobDescription("importer: procver groups")
-    val bpvs =
-      try objDocs.select("base_procver_id").distinct()
-        .collect().map(_.getString(0)).sorted
-      finally sc.setJobDescription(null)
+    val bpvs = graft.util.Jobs.labelled(stagedObjects.sparkSession, "importer: procver groups") {
+      objDocs.select("base_procver_id").distinct().collect().map(_.getString(0)).sorted
+    }
     var roots = existing.rootDiaobject
     var diaobject = existing.diaobject
     var rootsDelta = existing.rootDiaobject.limit(0)

@@ -710,20 +710,19 @@ object Relational {
   /** EV8 (beyond ref): incrementally-maintained daily rollup — the
     * materialized-view pattern ([[graft.merge.RollupStore]]): the
     * event stream folds in four batches, each fold aggregating ONLY
-    * its batch, semi-joining back only the touched day partitions,
-    * and rewriting exactly those via dynamic partition overwrite.
-    * Counts/sums are additive so the final state equals the one-shot
-    * GROUP BY the oracle runs — which is precisely the m-view
-    * maintenance invariant the query pins. Sums round at 4 dp only at
-    * the output (state carries raw doubles; per-batch partial sums
-    * reassociate differently than one pass). */
+    * its batch and appending that aggregate as one segment, and the
+    * read sums the per-fold partials. Counts/sums are additive so the
+    * final state equals the one-shot GROUP BY the oracle runs — which
+    * is precisely the m-view maintenance invariant the query pins.
+    * Sums round at 4 dp only at the output (state carries raw doubles;
+    * per-batch partial sums reassociate differently than one pass). */
   def ev8IncrementalRollup(s: SparkSession, d: String): DataFrame = {
     val dir = java.nio.file.Files.createTempDirectory("graft_ev8").toString
     try {
       val ev = events(s, d).withColumn("day",
         expr("unix_micros(ts) div 86400000000").cast("int"))
       (0 until 4).foreach { k =>
-        graft.merge.RollupStore.fold(s, dir,
+        graft.merge.RollupStore.fold(dir,
           ev.filter(col("event_id") % 4 === k), "day", "event_type", "value")
       }
       // plan-only derivation of the store schema (fold's aggregate

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.procver.ProcVerDims
 import graft.functions.Funcs
+import graft.util.Jobs.labelled
 
 /** Catalog handle: the silver fact tables + procver dimensions.
   * All ops are DataFrame-in/DataFrame-out; nothing collects except
@@ -93,15 +94,6 @@ object Ltcv {
     cat.diaobject
       .filter(col("base_procver_id").isin(baseProcvers(cat, procverId, "diaobject"): _*))
       .select("diaobjectid", "rootid").distinct()
-
-  /** Run `body` with the Spark jobs it launches described as `label`,
-    * so a job census can attribute driver-side collects. */
-  private def labelled[T](spark: SparkSession, label: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    sc.setJobDescription(label)
-    try body
-    finally sc.setJobDescription(null)
-  }
 
   /** Resolve requested object ids to *all* (diaobjectid, rootid) pairs
     * sharing their rootids, on the driver (src/ltcv.py:569-630): the

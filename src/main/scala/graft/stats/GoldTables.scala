@@ -1,8 +1,10 @@
 package graft.stats
 
+import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.query.{Catalog, Ltcv}
+import graft.util.SegmentTable
 
 /** Gold summary tables — the replacement for the reference's
   * `objstats_{procver}` / `objstatscomb_{procver}` materialized views
@@ -11,36 +13,45 @@ import graft.query.{Catalog, Ltcv}
   *
   * The reference creates the views with 8 chained subqueries and
   * per-view indexes, refreshed manually; here each is one
-  * `groupBy` pass over the deduped detections, written as parquet and
-  * refreshed by overwrite (refresh = rerun). Object search (§3.4) is
-  * then a predicate-spec filter over the gold table — at 100 TB the
-  * search never touches photometry.
+  * `groupBy` pass over the deduped detections, kept as a
+  * [[SegmentTable]]: a refresh writes each result as one new segment
+  * and then flips both manifests, so no reader sees a missing or torn
+  * table. Object search (§3.4) is then a predicate-spec filter over the
+  * gold table — at 100 TB the search never touches photometry.
   */
 object GoldTables {
 
-  /** Build + persist per-band and cross-band objstats for one procver.
+  private def table(outDir: String, name: String): SegmentTable =
+    new SegmentTable(Paths.get(outDir, name), s"gold write: $name")
+
+  /** Build + commit per-band and cross-band objstats for one procver.
     * Joins weighted positions (A7) so cone search works on the gold
     * table alone. */
-  def refreshObjStats(cat: Catalog, procverId: String, outDir: String): Unit = {
+  def refreshObjStats(cat: Catalog, procverId: String, outDir: String): Unit =
+    stageObjStats(cat, procverId, outDir).commit()
+
+  private[graft] def stageObjStats(cat: Catalog, procverId: String,
+      outDir: String): SegmentTable.Staged = {
     // persist: the priority dedup over the full photometry is the most
     // expensive aggregation in the system, and without it the two
     // writes would execute it three times (perBand once, comb's
     // objStatsComb + weightedPositions join twice more)
     val src = Ltcv.sources(cat, procverId).persist()
-    try {
-      val perBand = Ltcv.objStats(src)
-      val comb = Ltcv.objStatsComb(src)
+    try SegmentTable.Staged(Seq(
+      s"objstats_$procverId" -> Ltcv.objStats(src),
+      s"objstatscomb_$procverId" -> Ltcv.objStatsComb(src)
         .join(Ltcv.weightedPositions(src), Seq("rootid"), "left_outer")
-      perBand.write.mode("overwrite").parquet(s"$outDir/objstats_$procverId")
-      comb.write.mode("overwrite").parquet(s"$outDir/objstatscomb_$procverId")
-    } finally src.unpersist()
+    ).map { case (name, df) => val t = table(outDir, name); t -> t.write(df).toSeq })
+    finally src.unpersist()
   }
 
+  /** The committed per-band (`band` given) or cross-band objstats. */
   def objStats(spark: SparkSession, outDir: String, procverId: String,
       band: Option[String] = None): DataFrame = {
-    val perBand = band.isDefined
-    val name = if (perBand) s"objstats_$procverId" else s"objstatscomb_$procverId"
-    val df = spark.read.parquet(s"$outDir/$name")
+    val name = if (band.isDefined) s"objstats_$procverId" else s"objstatscomb_$procverId"
+    val paths = table(outDir, name).paths
+    require(paths.nonEmpty, s"gold table $name under $outDir has no rows")
+    val df = spark.read.parquet(paths: _*)
     band.map(b => df.filter(col("band") === b)).getOrElse(df)
   }
 

@@ -155,7 +155,7 @@ class Round11Spec extends AnyFunSuite {
 
   // ---- ev8: incremental rollup ---------------------------------------
 
-  test("RollupStore folds equal one-shot agg; untouched partitions are not rewritten") {
+  test("RollupStore folds equal one-shot agg; a late fold rewrites no committed segment") {
     val rng = new scala.util.Random(29)
     val rows = (0L until 500L).map { i =>
       (i, rng.nextInt(6), Vector("a", "b", "c")(rng.nextInt(3)),
@@ -167,21 +167,26 @@ class Round11Spec extends AnyFunSuite {
       // fold by day pairs: batch 0 = days 0-1, 1 = days 2-3, 2 = days 4-5,
       // then a late batch touching ONLY day 5
       (0 until 3).foreach { b =>
-        merge.RollupStore.fold(spark, dir,
+        merge.RollupStore.fold(dir,
           df.filter(col("day") === 2 * b || col("day") === 2 * b + 1),
           "day", "k", "v")
       }
-      def files(day: Int) = {
-        val f = new java.io.File(dir, s"day=$day")
-        Option(f.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.endsWith(".parquet"))
-          .map(p => (p.getName, p.lastModified(), p.length())).sorted.toSeq
+      // every file of every committed segment: (segment/file, mtime, size)
+      def files() = {
+        val segs = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
+          .filter(_.getName.startsWith("seg_"))
+        segs.flatMap(s => s.listFiles().map(p =>
+          (s"${s.getName}/${p.getName}", p.lastModified(), p.length()))).sorted.toSeq
       }
-      val day0Before = files(0)
-      assert(day0Before.nonEmpty)
+      val before = files()
+      assert(before.count(_._1.endsWith(".parquet")) >= 3)
       val late = Seq((9999L, 5, "a", 1.25)).toDF("eid", "day", "k", "v")
-      merge.RollupStore.fold(spark, dir, late, "day", "k", "v")
-      assert(files(0) == day0Before, "untouched day partition was rewritten")
+      merge.RollupStore.fold(dir, late, "day", "k", "v")
+      val after = files()
+      assert(before.forall(after.contains), "a committed segment was rewritten or removed")
+      assert(after.map(_._1.takeWhile(_ != '/')).distinct.size ==
+        before.map(_._1.takeWhile(_ != '/')).distinct.size + 1,
+        "a fold appends exactly one segment")
       // final state == one-shot aggregate over everything folded
       val got = merge.RollupStore.load(spark, dir)
         .collect().map(r => ((r.getAs[Int]("day"), r.getAs[String]("k")),
