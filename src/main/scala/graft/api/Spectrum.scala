@@ -262,23 +262,14 @@ object Spectrum {
       .join(broadcast(roots), Seq("rootid"), "left_semi")
     // the two eager checkpoints are INDEPENDENT corpus scans (sources
     // vs forced) serialized only by the driver calling them in turn —
-    // submit both from a 2-thread pool so the second scan back-fills
-    // executors freed by the first's tail (r15, the SilverStore
-    // stagePar / NearDupStream-fold rationale; Spark schedules
-    // concurrent jobs FIFO, exactly the overlap wanted here)
-    val (src, frc) = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val fs = scala.concurrent.Future(Ltcv.sources(cat, procverId,
-          mjdNow = Some(mjdNow), scope = Some(Ltcv.Joined(ids))).localCheckpoint())
-        val ff = scala.concurrent.Future(Ltcv.forced(cat, procverId,
-          mjdNow = Some(mjdNow), scope = Some(Ltcv.Joined(ids))).localCheckpoint())
-        (scala.concurrent.Await.result(fs, scala.concurrent.duration.Duration.Inf),
-         scala.concurrent.Await.result(ff, scala.concurrent.duration.Duration.Inf))
-      } finally pool.shutdown()
-    }
+    // submit both at once so the second scan back-fills executors freed
+    // by the first's tail (Spark schedules concurrent jobs FIFO, exactly
+    // the overlap wanted here)
+    val Seq(src, frc) = graft.util.Jobs.par(Seq(
+      () => Ltcv.sources(cat, procverId, mjdNow = Some(mjdNow),
+        scope = Some(Ltcv.Joined(ids))).localCheckpoint(),
+      () => Ltcv.forced(cat, procverId, mjdNow = Some(mjdNow),
+        scope = Some(Ltcv.Joined(ids))).localCheckpoint()))
 
     // 5. A9 — latest point per (rootid, band), with mags
     def latestPerBand(df: DataFrame, idCol: String, pfx: String): DataFrame =

@@ -768,7 +768,8 @@ object Quality {
     // was one redundant re-materialization job), the ground-truth
     // in-group pair scan, and the vector count are three INDEPENDENT
     // materializations over the same planted frame — submit them from a
-    // small pool (guide §2.6, the sp1/SilverStore pattern) so the truth
+    // small pool (guide §2.6; graft.util.Jobs.par does this for results
+    // of one type, these are two frames and a count) so the truth
     // scan and the count back-fill the k-means train's driver-bound
     // phases instead of waiting for them. Frames and values are
     // byte-identical to the serial order; only job submission overlaps.

@@ -6,14 +6,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.merge.SourceImporter.{ImportDeltas, ImportResult}
 import graft.schema.Schemas
-import graft.util.SegmentTable
+import graft.util.{Jobs, SegmentTable}
 import graft.util.SegmentTable.Staged
 
 /** Log-structured parquet persistence for the silver catalog, one
-  * [[SegmentTable]] per table. Its segment + manifest flip is the
-  * chain's one protocol for the tables it mutates (gold's objstats and
-  * [[graft.merge.RollupStore]] commit through it too; build-once
-  * artifacts go through [[graft.util.Stage.publish]]). A commit keeps
+  * [[SegmentTable]] per table: it commits through the same segment +
+  * manifest flip as every other table the chain mutates. A commit keeps
   * the generation it replaced, so a frame opened before a [[compact]]
   * still reads its snapshot after it (one commit of GC lag).
   *
@@ -30,7 +28,10 @@ import graft.util.SegmentTable.Staged
   *
   * Cross-table consistency: all segments are written before any
   * manifest flips, so a crash mid-flip can mix per-table versions but
-  * never exposes a torn table. A transactional format (Delta/Iceberg)
+  * never exposes a torn table. The per-table segment writes are
+  * independent jobs submitted at once ([[Jobs.par]]); if one fails no
+  * manifest flips, and the segments the others wrote are orphans the
+  * next commit collects. A transactional format (Delta/Iceberg)
   * would collapse this whole file into `MERGE INTO`; the manifest is
   * the minimal stand-in this environment allows.
   */
@@ -39,16 +40,6 @@ final class SilverStore(baseDir: String) {
   // the label prefix is what a job census classifies silver writes by
   private def table(name: String): SegmentTable =
     new SegmentTable(Paths.get(baseDir, name), s"silver write: $name")
-
-  private def emptyOf(spark: SparkSession, schema: StructType): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
-  private def readRaw(spark: SparkSession, name: String,
-      schema: StructType): DataFrame = {
-    val paths = table(name).paths
-    if (paths.isEmpty) emptyOf(spark, schema)
-    else spark.read.schema(schema).parquet(paths: _*)
-  }
 
   private def withSeq(schema: StructType): StructType =
     StructType(schema.fields :+
@@ -60,9 +51,10 @@ final class SilverStore(baseDir: String) {
     * associative, so append order reproduces the upsert chain). */
   private def readMor(spark: SparkSession, name: String,
       schema: StructType): DataFrame = {
-    val paths = table(name).paths
-    if (paths.isEmpty) return emptyOf(spark, schema)
-    val raw = spark.read.schema(withSeq(schema)).parquet(paths: _*)
+    val t = table(name)
+    val segs = t.live
+    if (segs.isEmpty) return t.read(spark, schema, segs)
+    val raw = t.read(spark, withSeq(schema), segs)
     val keys = Seq(schema.fields.head.name, "base_procver_id")
     val payload = schema.fieldNames.toSeq.filterNot(keys.contains)
     val seq = col("_seq")
@@ -74,45 +66,17 @@ final class SilverStore(baseDir: String) {
   }
 
   def load(spark: SparkSession): ImportResult = ImportResult(
-    readRaw(spark, "root_diaobject", Schemas.rootDiaObject),
-    readRaw(spark, "diaobject", Schemas.diaObject),
-    readRaw(spark, "diasource", Schemas.diaSource),
-    readRaw(spark, "diaforcedsource", Schemas.diaForcedSource),
-    readRaw(spark, "diaobject_position", Schemas.diaObjectPosition),
+    table("root_diaobject").read(spark, Schemas.rootDiaObject),
+    table("diaobject").read(spark, Schemas.diaObject),
+    table("diasource").read(spark, Schemas.diaSource),
+    table("diaforcedsource").read(spark, Schemas.diaForcedSource),
+    table("diaobject_position").read(spark, Schemas.diaObjectPosition),
     readMor(spark, "diasource_extra", Schemas.diaSourceExtra),
     readMor(spark, "diaforcedsource_extra", Schemas.diaForcedSourceExtra),
-    readRaw(spark, "diasource_brokerinfo", Schemas.diaSourceBrokerInfo),
-    readRaw(spark, "thumbnails", Schemas.thumbnails))
+    table("diasource_brokerinfo").read(spark, Schemas.diaSourceBrokerInfo),
+    table("thumbnails").read(spark, Schemas.thumbnails))
 
   // ---- write path ---------------------------------------------------
-
-  /** Run one staging closure per table CONCURRENTLY on a bounded driver
-    * pool, preserving input order. The per-table segment writes are
-    * independent Spark jobs on disjoint directories, but running them
-    * back-to-back on one driver thread serializes ~9 scheduler
-    * round-trips per import batch — the dominant fixed cost of a small
-    * batch (the st4 profile: 9 sequential write jobs × 2 micro-batches).
-    * Concurrent job submission is exactly what the Spark scheduler
-    * exists to arbitrate; the cluster-slot story is unchanged. The
-    * manifest flips stay OUTSIDE this helper, sequential and atomic as
-    * before. On any failure the first error propagates and no commit
-    * happens; segments other threads managed to write are orphans the
-    * next successful commit garbage-collects (the same crash story as
-    * a mid-stage abort). */
-  private def stagePar[A, B](entries: Seq[A])(f: A => B): Seq[B] =
-    if (entries.sizeIs <= 1) entries.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(entries.size, 8))
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      try {
-        val futs = entries.map(e => scala.concurrent.Future(f(e)))
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futs),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
-    }
 
   /** Full rewrite of every table (bulk load / compaction path). */
   private[graft] def stageFull(r: ImportResult): Staged = {
@@ -124,10 +88,10 @@ final class SilverStore(baseDir: String) {
       Seq("diasource_extra" -> r.diasourceExtra,
         "diaforcedsource_extra" -> r.diaforcedsourceExtra)
         .map { case (name, df) => name -> df.withColumn("_seq", lit(0L)) }
-    Staged(stagePar(work) { case (name, df) =>
+    Staged(Jobs.par(work.map { case (name, df) => () =>
       val t = table(name)
       t -> t.write(df).toSeq
-    })
+    }))
   }
 
   def save(r: ImportResult): Unit = stageFull(r).commit()
@@ -154,10 +118,10 @@ final class SilverStore(baseDir: String) {
         // write stage anew; the UDF is a reference the class reads
         name -> df.withColumn("_seq", udf(() => seq).apply())
       }
-    Staged(stagePar(appends ++ morAppends) { case (name, df) =>
+    Staged(Jobs.par((appends ++ morAppends).map { case (name, df) => () =>
       val t = table(name)
       t.write(df).map(seg => t -> (t.live :+ seg))
-    }.flatten)
+    }).flatten)
   }
 
   /** Rewrite every table to a single segment (and collapse the

@@ -1,8 +1,9 @@
 package graft.util
 
 /** Local-filesystem helpers for JVM-local trees (queue replays, JSONL
-  * round-trip exports, silver-store segments) — java.nio, not Hadoop.
-  * Persistent artifacts go through [[Stage]] instead. */
+  * round-trip exports, the segments a [[SegmentTable]] collects) —
+  * java.nio, not Hadoop. Build-once artifacts go through [[Stage]],
+  * mutable tables through [[SegmentTable]]. */
 object Local {
   def deleteRecursively(dir: String): Unit = {
     val root = java.nio.file.Paths.get(dir)

@@ -3,13 +3,17 @@ package graft.util
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** One mutable table of the chain: a directory of immutable `seg_*`
   * parquet segments plus a `_manifest` listing the live ones, one name
   * per line. A writer writes new segments, then flips the manifest by
   * atomic rename, so a crash leaves either the old or the new manifest
-  * readable, never a torn table.
+  * readable, never a torn table. It is the one commit protocol for
+  * every table the chain mutates: silver, gold, the rollup and the
+  * streamed near-dup and vector state (build-once artifacts go through
+  * [[Stage.publish]]).
   *
   * A commit deletes the `seg_*` directories that neither the new
   * manifest nor the one it replaced lists: a frame opened before a
@@ -27,11 +31,22 @@ final class SegmentTable(dir: Path, label: String) {
 
   def paths: Seq[String] = live.map(s => dir.resolve(s).toString)
 
-  /** Write `df` as a fresh segment, its jobs labelled; None (and the
-    * directory removed) when the frame was empty, so a no-op write
+  /** The segments `segs` (all live ones by default) read with the
+    * declared `schema` (no footer-inference job); a typed empty frame
+    * when there are none. */
+  def read(spark: SparkSession, schema: StructType,
+      segs: Seq[String] = live): DataFrame =
+    if (segs.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    else spark.read.schema(schema).parquet(segs.map(s => dir.resolve(s).toString): _*)
+
+  /** Write `df` as a fresh segment, its jobs labelled, named
+    * `seg_<tag>_<uuid>` when tagged (a writer that must find its own
+    * segments again, such as a replayed batch, tags them); None (and
+    * the directory removed) when the frame was empty, so a no-op write
     * costs nothing in the manifest. */
-  def write(df: DataFrame): Option[String] = {
-    val seg = s"seg_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+  def write(df: DataFrame, tag: Option[String] = None): Option[String] = {
+    val seg = s"seg_${tag.fold("")(_ + "_")}" +
+      java.util.UUID.randomUUID().toString.replace("-", "")
     val segDir = dir.resolve(seg)
     Jobs.labelled(df.sparkSession, label)(df.write.parquet(segDir.toString))
     if (footerRowCount(df.sparkSession, segDir) == 0L) {
@@ -89,6 +104,12 @@ final class SegmentTable(dir: Path, label: String) {
 }
 
 object SegmentTable {
+  /** The tag a segment was written with, if any. */
+  def tagOf(seg: String): Option[String] = {
+    val body = seg.stripPrefix("seg_")
+    Some(body.lastIndexOf('_')).filter(_ > 0).map(body.take)
+  }
+
   /** Written segments awaiting their commit: each table's manifest-to-be. */
   final case class Staged(entries: Seq[(SegmentTable, Seq[String])]) {
     /** Flip every manifest, then collect each table's garbage: every

@@ -10,17 +10,20 @@ import graft.merge.{RollupStore, SourceImporter}
 import graft.merge.SourceImporter.ImportDeltas
 import graft.query.Ltcv
 import graft.stats.GoldTables
-import graft.streaming.{AlertStream, SilverStore}
+import graft.pipeline.PqAnn
+import graft.streaming.{AlertStream, NearDupStream, SilverStore, VectorIngest}
 import graft.util.SegmentTable
 
 /** Crash consistency of the chain's one commit protocol
   * ([[SegmentTable]]): for each owner of a mutable table — a silver
-  * `saveDelta`, a gold refresh, a rollup fold — a failure is injected
-  * mid-segment write (a UDF that throws on one row), after staging and
-  * before the manifest flip, and after the flip before garbage
-  * collection. After the recovery the table's contents equal those of
-  * an uninterrupted run, and no `seg_*` directory is left that neither
-  * the live manifest nor the one it replaced lists. */
+  * `saveDelta`, a gold refresh, a rollup fold, a streamed near-dup
+  * batch, a streamed vector batch — a failure is injected mid-segment
+  * write (a UDF that throws on one row), after staging and before the
+  * manifest flip, and after the flip before garbage collection; for
+  * owners of more than one table also between two tables' flips. After
+  * the recovery the tables' contents equal those of an uninterrupted
+  * run, and no `seg_*` directory is left that neither the live manifest
+  * nor the one it replaced lists. */
 class FaultSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -40,6 +43,7 @@ class FaultSpec extends AnyFunSuite {
     df.drop(df.schema.fields.filter(_.dataType == TimestampType).map(_.name).toSeq: _*)
       .collect().map(_.toSeq.map {
         case b: Array[Byte] => b.mkString("0x", ",", "")
+        case a: scala.collection.Seq[_] => a.map(String.valueOf).sorted.mkString("[", ",", "]")
         case v => String.valueOf(v)
       }.mkString("|")).toSeq.sorted
 
@@ -113,8 +117,7 @@ class FaultSpec extends AnyFunSuite {
     def stage(root: String) = GoldTables.stageObjStats(changed, pv, root)
     // a refresh is a rerun
     def recoverCommitted(root: String) = commit(root)
-    def contents(root: String) =
-      tables(root).map(t => rows(spark.read.parquet(new SegmentTable(t, "").paths: _*)))
+    def contents(root: String) = liveRows(tables(root))
   }
 
   private object Rollup extends Owner {
@@ -134,6 +137,62 @@ class FaultSpec extends AnyFunSuite {
     def recoverCommitted(root: String) = ()
     def contents(root: String) = Seq(rows(RollupStore.load(spark, root)
       .withColumn("sum_value", round(col("sum_value"), 6))))
+  }
+
+  /** Every live row of each table, read back schemaless. */
+  private def liveRows(tables: Seq[Path]): Seq[Seq[String]] =
+    tables.map(t => rows(spark.read.parquet(new SegmentTable(t, "").paths: _*)))
+
+  private object NearDup extends Owner {
+    private def doc(seed: Int) = {
+      val r = new scala.util.Random(seed)
+      Seq.fill(25)(s"w${r.nextInt(1000)}").mkString(" ")
+    }
+    private val p = NearDupStream.Params(threshold = 0.3)
+    private def batch0 = Seq((1L, doc(1)), (2L, doc(2)), (3L, doc(1) + " tail"))
+      .toDF("doc_id", "text")
+    // a corpus dup of 2, a novel doc and its in-batch twin
+    private def batch1 = Seq((10L, doc(2) + " tail"), (11L, doc(7)), (12L, doc(7) + " end"))
+      .toDF("doc_id", "text")
+    def tables(root: String) =
+      Seq("buckets", "shingles", "decisions", "clusters").map(Paths.get(root, _))
+    private def run(root: String, batch: DataFrame, id: Long): Unit =
+      NearDupStream.processBatch(batch, "doc_id", "text", root, id, p, liveClusters = true): Unit
+    def prior(root: String) = run(root, batch0, 0L)
+    def commit(root: String) = run(root, batch1, 1L)
+    def failing(root: String) = run(root, failOn(batch1, "doc_id", 11L), 1L)
+    def stage(root: String) =
+      NearDupStream.stageBatch(batch1, "doc_id", "text", root, 1L, p, liveClusters = true)._2
+    // the batch committed but its stream offset did not: foreachBatch
+    // replays it under the same id
+    def recoverCommitted(root: String) = commit(root)
+    def contents(root: String) = liveRows(tables(root))
+  }
+
+  private object Codes extends Owner {
+    private lazy val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select("vec_id", "embedding")
+    private lazy val model = {
+      val (built, assigned) = PqAnn.buildIndexWithAssigned(
+        emb, "vec_id", "embedding", dim = 64, nlist = 8, m = 8, ksub = 16)
+      assigned.unpersist()
+      built.model
+    }
+    private def wave(from: Long, until: Long, shift: Long) =
+      emb.filter(col("vec_id") >= from && col("vec_id") < until)
+        .select((col("vec_id") + shift).as("vec_id"), col("embedding"))
+    private def batch1 = wave(5, 8, 2000L)
+    def tables(root: String) = Seq(Paths.get(root, "codes"))
+    def prior(root: String) =
+      VectorIngest.processBatch(wave(0, 5, 1000L), "vec_id", "embedding", model, root, 0L)
+    def commit(root: String) =
+      VectorIngest.processBatch(batch1, "vec_id", "embedding", model, root, 1L)
+    def failing(root: String) = VectorIngest.processBatch(
+      failOn(batch1, "vec_id", 2006L), "vec_id", "embedding", model, root, 1L)
+    def stage(root: String) =
+      VectorIngest.stageBatch(batch1, "vec_id", "embedding", model, root, 1L)
+    def recoverCommitted(root: String) = commit(root)
+    def contents(root: String) = liveRows(tables(root))
   }
 
   private def tmp(tag: String) = Files.createTempDirectory(s"fault_$tag").toString
@@ -161,8 +220,10 @@ class FaultSpec extends AnyFunSuite {
     }
   }
 
-  for ((tag, owner) <- Seq("silver saveDelta" -> Silver, "gold refresh" -> Gold,
-      "rollup fold" -> Rollup)) {
+  private val owners = Seq("silver saveDelta" -> Silver, "gold refresh" -> Gold,
+    "rollup fold" -> Rollup, "neardup batch" -> NearDup, "vector batch" -> Codes)
+
+  for ((tag, owner) <- owners) {
     val prefix = tag.takeWhile(_ != ' ')
     test(s"$tag: a crash mid-segment write, then a retry, equals an uninterrupted run") {
       check(prefix, owner) { root =>
@@ -179,6 +240,16 @@ class FaultSpec extends AnyFunSuite {
     test(s"$tag: a crash after the flip before GC, then recovery, equals an uninterrupted run") {
       check(prefix, owner, afterFlip = true) { root =>
         owner.stage(root).flip(): Unit
+      }
+    }
+  }
+
+  // a crash between two tables' flips: the first table's manifest is
+  // flipped, the others' staged segments are left unlisted
+  for ((tag, owner) <- owners if owner.tables("").size > 1) {
+    test(s"$tag: a crash between two tables' flips, then recovery, equals an uninterrupted run") {
+      check(tag.takeWhile(_ != ' '), owner, afterFlip = true) { root =>
+        SegmentTable.Staged(owner.stage(root).entries.take(1)).flip(): Unit
       }
     }
   }

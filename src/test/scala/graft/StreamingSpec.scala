@@ -2,8 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import graft.streaming.{AlertStream, SilverStore}
+import graft.util.SegmentTable
 
 /** End-to-end alert-cycle test (the reference's alertcycle fixtures,
   * tests/fixtures/alertcycle.py): write alert packets as parquet files
@@ -644,8 +645,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(decisions(10L) == "dup_corpus", s"got ${decisions.get(10L)}")
     assert(decisions(11L) == "kept")
 
-    // the index holds postings for exactly the kept docs
-    val indexed = spark.read.parquet(s"$ixDir/shingles/*")
+    // the index holds postings for exactly the kept docs, one live
+    // segment per batch
+    def liveTags(table: String) = new SegmentTable(Paths.get(ixDir, table), "").live
+      .map(SegmentTable.tagOf(_).get)
+    def liveRead(table: String) =
+      spark.read.parquet(new SegmentTable(Paths.get(ixDir, table), "").paths: _*)
+    assert(liveTags("shingles") == Seq("b0", "b1"))
+    val indexed = liveRead("shingles")
       .select("doc_id").distinct().collect().map(_.getLong(0)).toSet
     assert(indexed == Set(1L, 2L, 11L))
 
@@ -667,10 +674,10 @@ class StreamingSpec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getString(1))).toMap
     assert(replay == Map(1L -> "kept", 2L -> "kept", 3L -> "dup_batch"),
       s"replay changed decisions: $replay")
-    val committed = new java.io.File(s"$ixDir/buckets").listFiles()
-      .filter(f => new java.io.File(f, "_SUCCESS").exists())
-      .map(_.getAbsolutePath)
-    val postingDocs = spark.read.parquet(committed: _*)
+    // the replay's flip replaced batch 0's own live segments
+    assert(liveTags("buckets").sorted == Seq("b0", "b1"))
+    assert(liveTags("decisions").sorted == Seq("b0", "b1"))
+    val postingDocs = liveRead("buckets")
     assert(postingDocs.groupBy("doc_id", "_band").count()
       .filter(col("count") > 1).count() == 0L, "replay duplicated postings")
     assert(postingDocs.select("doc_id").distinct().collect()
@@ -682,16 +689,23 @@ class StreamingSpec extends AnyFunSuite {
     assert(clusters2 == Map(1L -> 1L, 3L -> 1L, 2L -> 2L, 10L -> 2L),
       s"replayed cluster fold drifted: $clusters2")
 
-    // a crash-orphaned, marker-less segment directory must not poison
-    // future batches: drop one in (id BELOW the probing batch, so only
-    // the _SUCCESS filter excludes it) and process another wave
-    new java.io.File(s"$ixDir/buckets/b2").mkdirs()
-    new java.io.File(s"$ixDir/shingles/b2").mkdirs()
+    // a crash-orphaned segment the manifest never listed must not
+    // poison future batches: drop one in (tagged BELOW the probing
+    // batch, so only the manifest excludes it), holding a parquet file
+    // any read would fail on, and process another wave
+    val orphans = Seq("buckets", "shingles").map { t =>
+      val o = Paths.get(ixDir, t, "seg_b2_0123456789abcdef0123456789abcdef")
+      Files.createDirectories(o)
+      Files.write(o.resolve("part-00000.snappy.parquet"), "not parquet".getBytes)
+      o
+    }
     val more = NearDupStream.processBatch(
       Seq((20L, doc(7) + " other tail")).toDF("doc_id", "text"),
       "doc_id", "text", ixDir, 3L, NearDupStream.Params(threshold = 0.3))
     assert(more.collect().map(r => (r.getLong(0), r.getString(1))).toMap ==
       Map(20L -> "dup_corpus"), "orphaned segment broke the index read")
+    // ...and that batch's commit collected them
+    assert(orphans.forall(o => !Files.exists(o)), "orphaned segments survived a commit")
   }
 
   test("streamed embeddings grow the PQ index; codes equal batch encode; replay idempotent") {
@@ -742,12 +756,48 @@ class StreamingSpec extends AnyFunSuite {
       .head()
     assert(hit.getLong(1) == 2006L && hit.getDouble(2) > 0.9999,
       s"expected streamed twin 2006, got ${hit.getLong(1)}")
-    // at-least-once: replaying wave 1 as its own batch id rewrites its
+    // at-least-once: replaying wave 1 as its own batch id replaces its
     // segment and changes nothing
     VectorIngest.processBatch(w1, "vec_id", "embedding", model, ixDir, 0L)
     val replayed = VectorIngest.loadIndex(spark, ixDir, model,
       emb, "vec_id", "embedding")
     assert(codeSet(replayed.codes) == want)
+    assert(new SegmentTable(Paths.get(ixDir, "codes"), "").live
+      .map(SegmentTable.tagOf(_).get).sorted == Seq("b0", "b1"))
+  }
+
+  test("live clusters: six folds keep at most two map generations and equal a one-shot closure") {
+    import graft.streaming.NearDupStream
+    def doc(seed: Int) = {
+      val r = new scala.util.Random(seed)
+      Seq.fill(25)(s"w${r.nextInt(1000)}").mkString(" ")
+    }
+    // batch k = doc_id % 6; three planted groups of exact copies: one
+    // spanning four batches, one inside one batch, one across two
+    val base = (0L until 24L).map(i => i -> doc(100 + i.toInt))
+    val planted = Seq(24L -> 0L, 25L -> 0L, 26L -> 0L, 27L -> 0L,
+      33L -> 3L, 39L -> 3L, 29L -> 10L)
+      .map { case (id, of) => id -> base(of.toInt)._2 }
+    val docs = (base ++ planted).toDF("doc_id", "text")
+    val dir = Files.createTempDirectory("cc6").toString + "/ix"
+    (0 until 6).foreach { k =>
+      NearDupStream.processBatch(docs.filter(col("doc_id") % 6 === k),
+        "doc_id", "text", dir, k.toLong, NearDupStream.Params(threshold = 0.3),
+        liveClusters = true)
+    }
+    // one generation per fold would leave six map copies on disk; the
+    // flip keeps the live map and the one it replaced
+    val gens = Files.list(Paths.get(dir, "clusters")).toArray.toSeq
+      .map(_.asInstanceOf[java.nio.file.Path]).filter(Files.isDirectory(_))
+      .map(_.getFileName.toString)
+    assert(gens.size <= 2, s"cluster map generations on disk: ${gens.sorted}")
+    assert(gens.forall(_.startsWith("seg_")), s"${gens.sorted}")
+    // the one-shot closure of the planted copy groups: min id per group
+    val closure = (base ++ planted).groupBy(_._2).values.map(_.map(_._1))
+      .filter(_.size > 1).flatMap(ids => ids.map(_ -> ids.min)).toMap
+    val got = NearDupStream.latestClusters(spark, dir).get
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got == closure)
   }
 
   test("segment compaction: decisions unchanged, files collapse, crash residue ignored") {
@@ -757,10 +807,8 @@ class StreamingSpec extends AnyFunSuite {
       Seq.fill(25)(s"w${r.nextInt(1000)}").mkString(" ")
     }
     val p = NearDupStream.Params(threshold = 0.3)
-    def committedNames(dir: String) =
-      new java.io.File(s"$dir/buckets").listFiles().toSeq
-        .filter(f => new java.io.File(f, "_SUCCESS").exists())
-        .map(_.getName).toSet
+    def liveTags(dir: String, table: String) =
+      new SegmentTable(Paths.get(dir, table), "").live.map(SegmentTable.tagOf(_).get).toSet
     def run(dir: String, compact: Boolean): Map[Long, String] = {
       NearDupStream.processBatch(
         Seq((1L, doc(21)), (2L, doc(22))).toDF("doc_id", "text"),
@@ -782,12 +830,14 @@ class StreamingSpec extends AnyFunSuite {
     assert(run(dirB, compact = true) == base,
       "compaction changed dedup decisions")
     // the two b-segments collapsed into c2; batch 2 appended its own
-    assert(committedNames(dirA) == Set("b0", "b1", "b2"))
-    assert(committedNames(dirB) == Set("c2", "b2"))
+    assert(liveTags(dirA, "buckets") == Set("b0", "b1", "b2"))
+    assert(liveTags(dirB, "buckets") == Set("c2", "b2"))
+    assert(liveTags(dirB, "shingles") == Set("c2", "b2"))
 
-    // crash residue: a superseded input whose delete never ran (copy
-    // dirA's identical b0 back next to dirB's c2) must be invisible —
-    // the effective view double-counts nothing
+    // crash residue: a superseded input back on disk (copy dirA's
+    // identical b0 segments next to dirB's c2, under their own names)
+    // must be invisible — the manifest does not list it, so the
+    // effective view double-counts nothing
     def copyRec(src: java.io.File, dst: java.io.File): Unit = {
       java.nio.file.Files.walk(src.toPath).forEach { sp =>
         val dp = dst.toPath.resolve(src.toPath.relativize(sp))
@@ -797,7 +847,9 @@ class StreamingSpec extends AnyFunSuite {
       }
     }
     Seq("buckets", "shingles").foreach { k =>
-      copyRec(new java.io.File(s"$dirA/$k/b0"), new java.io.File(s"$dirB/$k/b0"))
+      val b0 = new SegmentTable(Paths.get(dirA, k), "").live
+        .find(SegmentTable.tagOf(_).contains("b0")).get
+      copyRec(new java.io.File(s"$dirA/$k/$b0"), new java.io.File(s"$dirB/$k/$b0"))
     }
     val like = Seq((1L, "x")).toDF("doc_id", "text")
     val view = NearDupStream.loadIndex(spark, dirB, like, "doc_id", "text", p)
