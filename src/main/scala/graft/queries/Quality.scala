@@ -158,7 +158,7 @@ object Quality {
   /** LIVE duplicate clusters after the st3 ingestion — the incremental
     * connected-components fold ([[graft.pipeline.Components
     * .updateClusters]] via `liveClusters = true`) driven over the same
-    * four micro-batches, serving the final versioned (doc, cluster)
+    * four micro-batches, serving the final live (doc, cluster)
     * map. The oracle computes the transitive closure over exactly the
     * pair stream the batches emit ([[PortableHashOracle.cc5Sql]]), so
     * the touched-clusters-only fold is hash-checked against a full
