@@ -28,7 +28,7 @@ import org.apache.spark.sql.graftbridge.Bridge
   * SPARK_GRAFT_CONF (semicolon-separated k=v) overrides session conf,
   * so an A/B like "same query, AQE off" is one env var instead of a
   * recompile. Bench never reads it. [[Meter]] is the measured run
-  * [[TailScale]] shares. */
+  * [[Bench]] and [[TailScale]] share. */
 object Probe {
 
   final case class Job(id: Int, stages: Int, label: String,
@@ -53,6 +53,14 @@ object Probe {
     * compiles, which hit the same cache. */
   def codegenCounters(): (Long, Long) =
     (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+
+  /** The middle value of `xs`; for an even count, the mean of the
+    * middle two. */
+  def median(xs: Seq[Double]): Double = {
+    val s = xs.sorted
+    val n = s.size
+    if (n % 2 == 1) s(n / 2) else (s(n / 2 - 1) + s(n / 2)) / 2
+  }
 
   /** The one listener: every job's stage count, label and wall-clock. */
   private final class Census extends SparkListener {
@@ -95,21 +103,26 @@ object Probe {
     /** Build the frame and write it to the noop sink, timed; then drain
       * the listener bus (outside the timed region: events arrive
       * asynchronously, and an undrained run's jobs undercount and bleed
-      * into the next), take the census, and clean the session's caches. */
+      * into the next), take the census, and clean the session's caches.
+      * A build or write that throws still drains and cleans before the
+      * exception leaves, so its jobs and caches never reach the next run. */
     def run(build: => DataFrame, explain: Boolean = false): Run = {
       census.jobs.clear()
       val (n0, ns0) = codegenCounters()
-      val t0 = System.nanoTime()
-      val df = build
-      df.write.mode("overwrite").format("noop").save()
-      val secs = (System.nanoTime() - t0) / 1e9
-      val (n1, ns1) = codegenCounters()
-      Bridge.drainListeners(spark.sparkContext)
-      val jobs = census.jobs.values.asScala.toSeq.sortBy(_.id)
-      val plan =
-        if (explain) Some(df.queryExecution.explainString(FormattedMode)) else None
-      GraftSession.clean(spark)
-      Run(secs, jobs, n1 - n0, (ns1 - ns0) / 1e6, plan)
+      val (secs, compiles, compileNs, plan) = try {
+        val t0 = System.nanoTime()
+        val df = build
+        df.write.mode("overwrite").format("noop").save()
+        val secs = (System.nanoTime() - t0) / 1e9
+        val (n1, ns1) = codegenCounters()
+        (secs, n1 - n0, ns1 - ns0,
+          Option.when(explain)(df.queryExecution.explainString(FormattedMode)))
+      } finally {
+        Bridge.drainListeners(spark.sparkContext)
+        GraftSession.clean(spark)
+      }
+      Run(secs, census.jobs.values.asScala.toSeq.sortBy(_.id), compiles,
+        compileNs / 1e6, plan)
     }
 
     def close(): Unit = spark.sparkContext.removeSparkListener(census)

@@ -134,12 +134,9 @@ object TailScale {
     (cold +: warms).zipWithIndex.foreach { case (r, i) =>
       println(s"[tailscale] $name x$nCopies run${i + 1}: ${r.summary}")
     }
-    val secs = warms.map(_.secs).sorted
-    val med =
-      if (nWarms % 2 == 1) secs(nWarms / 2)
-      else (secs(nWarms / 2 - 1) + secs(nWarms / 2)) / 2
+    val secs = warms.map(_.secs)
     println(f"[tailscale] $name x$nCopies%-4d rows=$n%-9d " +
-      f"cold=${cold.secs}%7.2f s  warm_med=${med}%7.2f s  warm_min=${secs.head}%7.2f s")
+      f"cold=${cold.secs}%7.2f s  warm_med=${Probe.median(secs)}%7.2f s  warm_min=${secs.min}%7.2f s")
     spark.stop()
   }
 

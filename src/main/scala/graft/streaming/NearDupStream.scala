@@ -175,16 +175,20 @@ object NearDupStream {
     * that is the map's whole next generation. The on-disk map is always
     * (long, long): [[Components.updateClusters]] casts ids and labels
     * before the write, so the read declares LongType whatever the batch
-    * id column's type. */
+    * id column's type. Every job of the fold carries the table's write
+    * label, the endpoint collects and broadcasts that build the next map
+    * before its segment write included. */
   private def foldClusters(spark: SparkSession, dir: String,
       pairs: DataFrame, idCol: String): (SegmentTable, Seq[String]) = {
     val t = table(dir, "clusters")
-    val prev = t.read(spark, StructType(Seq(StructField(idCol, LongType),
-      StructField("cluster", LongType))))
-    val next = Components.updateClusters(prev, idCol, "cluster",
-      pairs, "id_a", "id_b")
-    try t -> t.write(next).toSeq
-    finally Components.release(next)
+    Jobs.labelled(spark, t.label) {
+      val prev = t.read(spark, StructType(Seq(StructField(idCol, LongType),
+        StructField("cluster", LongType))))
+      val next = Components.updateClusters(prev, idCol, "cluster",
+        pairs, "id_a", "id_b")
+      try t -> t.write(next).toSeq
+      finally Components.release(next)
+    }
   }
 
   /** Merge every live posting segment of batches strictly below `upTo`

@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.StructType
   * commit still reads its snapshot whole after it (one commit of GC
   * lag), and crash orphans, which no manifest lists, go at the next
   * commit. One writer per table; `label` describes its write jobs. */
-final class SegmentTable(dir: Path, label: String) {
+final class SegmentTable(dir: Path, val label: String) {
   private def manifest: Path = dir.resolve("_manifest")
 
   /** The live segment names, in commit order. */

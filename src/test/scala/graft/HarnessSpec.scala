@@ -3,8 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
-/** Specs for the measurement harness: the measured run Probe and
-  * TailScale share, and TailScale's query → table → generator map. */
+/** Specs for the measurement harness: the measured run Bench, Probe
+  * and TailScale share, Bench's per-query record and groups, and
+  * TailScale's query → table → generator map. */
 class HarnessSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -40,6 +41,37 @@ class HarnessSpec extends AnyFunSuite {
       m.close()
       sc.removeSparkListener(slow)
     }
+  }
+
+  test("Probe.Meter: a run that throws still releases its caches") {
+    val m = new Probe.Meter(spark)
+    try {
+      val cached = spark.range(0, 100, 1, 2).toDF("x").persist()
+      val e = intercept[IllegalStateException](m.run {
+        cached.count()
+        throw new IllegalStateException("build failed")
+      })
+      assert(e.getMessage == "build failed")
+      assert(cached.storageLevel == org.apache.spark.storage.StorageLevel.NONE,
+        "the failed run left its frame cached")
+    } finally m.close()
+  }
+
+  test("Bench.measure: cold, warm median, the median run's jobs, no warm compiles") {
+    val m = new Probe.Meter(spark)
+    val r = try Bench.measure(m, "q1_agg", "/root/testdata/sf0.001") finally m.close()
+    assert(r.cold >= 0, r)
+    assert(r.ok && r.best >= 0 && r.best <= r.median, r)
+    assert(r.jobs > 0 && r.stages >= r.jobs, r)
+    assert(r.compilesCold >= 0, r)
+    assert(r.compilesWarm == 0L, s"an unchanged plan recompiled when warm: $r")
+  }
+
+  test("Bench.groups: every battery query once, sorted, in chunks of at most 8") {
+    val names = SparkEntry.queries.keys.toSeq
+    val gs = Bench.groups(names)
+    assert(gs.forall(g => g.nonEmpty && g.size <= 8), gs.map(_.size))
+    assert(gs.flatten == names.sorted)
   }
 
   test("TailScale map: every query is a battery entry, every table has a generator") {

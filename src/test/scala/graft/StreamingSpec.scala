@@ -606,6 +606,25 @@ class StreamingSpec extends AnyFunSuite {
       s"expected horizon-expired duplicate to re-enter; got $kept")
   }
 
+  test("streamed near-dup: every job of the live-cluster fold carries the clusters label") {
+    import graft.streaming.NearDupStream
+    val r = new scala.util.Random(1)
+    val text = Seq.fill(25)(s"w${r.nextInt(1000)}").mkString(" ")
+    val ixDir = Files.createTempDirectory("sndlbl").toString + "/ix"
+    def batch(id: Long, docs: (Long, String)*) =
+      NearDupStream.processBatch(docs.toDF("doc_id", "text"), "doc_id",
+        "text", ixDir, id, NearDupStream.Params(threshold = 0.3),
+        liveClusters = true)
+    // batch 0 commits a cluster map; batch 1's doc joins that cluster,
+    // so its fold collects the touched endpoints' labels from the map
+    batch(0L, 1L -> text, 2L -> (text + " tail")).collect()
+    val m = new Probe.Meter(spark)
+    val run = try m.run(batch(1L, 3L -> (text + " more"))) finally m.close()
+    val fold = run.jobs.map(_.label).filter(_.contains("Components.scala"))
+    assert(fold.nonEmpty, run.jobs.map(_.label))
+    assert(fold.forall(_.startsWith("[neardup write: clusters]")), fold)
+  }
+
   test("streamed near-dup: index accumulates across batches; retries idempotent") {
     import graft.streaming.NearDupStream
     def doc(seed: Int) = {
