@@ -4,8 +4,11 @@ import org.apache.spark.sql.SparkSession
 
 /** The one SparkSession factory for every graft main and the test
   * suite: local mode on [[cpus]] cores, one shuffle partition per core,
-  * UTC session time, no UI, WARN logging. Mains that time or compare
-  * queries call [[clean]] between them. */
+  * UTC session time, no UI, WARN logging, and the graft SQL functions
+  * and optimizer rule injected at build ([[graft.functions
+  * .GraftExtensions]]), so every plan sees the same rules whatever ran
+  * before it. Mains that time or compare queries call [[clean]] between
+  * them. */
 object GraftSession {
 
   /** Local-mode cores: SPARK_GRAFT_CPUS, else the JVM's core count. */
@@ -20,6 +23,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .withExtensions(new graft.functions.GraftExtensions)
     conf.foreach { case (k, v) => builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.{Column, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.functions._
@@ -13,9 +13,9 @@ import org.apache.spark.sql.graftbridge.Bridge
   * `q3c_radial_query` / `q3c_dist` and the schema's conventions supply
   * flux↔mag and MJD arithmetic. A user migrating that SQL needs the
   * same names resolvable by `spark.sql` — so every function here is
-  * registered into the session `FunctionRegistry` (and, for cluster
-  * deploys, injectable via `spark.sql.extensions=graft.functions
-  * .GraftExtensions`).
+  * injected into each session at build: `GraftSession.create` builds
+  * with [[GraftExtensions]], and cluster deploys name the same class in
+  * `spark.sql.extensions`.
   *
   * Each builder composes *built-in* column expressions (or the custom
   * codegen'd [[DotProduct]]), so the SQL surface inherits whole-stage
@@ -113,25 +113,8 @@ object SqlFunctions {
   private def info(f: Fn): ExpressionInfo =
     new ExpressionInfo("graft", null, f.name, f.usage, "")
 
-  /** Register every function into an existing session (temp-function
-    * scope — the non-extensions path used by tests and local tools).
-    * Idempotent: already-registered names are left alone, so callers
-    * may invoke this per-query without spamming "function replaced"
-    * warnings or mutating shared session state on every run. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    all.foreach { f =>
-      if (!reg.functionExists(FunctionIdentifier(f.name)))
-        reg.createOrReplaceTempFunction(f.name, builder(f) _, "built-in")
-    }
-    // session-level hook for the SargableCone rewrite (the
-    // non-extensions path; fixed-point batch, rule is idempotent)
-    if (!spark.experimental.extraOptimizations.contains(graft.spatial.SargableCone))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.spatial.SargableCone
-  }
-
-  /** Extension-based injection, for `spark.sql.extensions` deploys. */
+  /** The one injection path: every function and the SargableCone
+    * rule, at session build ([[GraftExtensions]]). */
   def inject(ext: SparkSessionExtensions): Unit = {
     all.foreach { f =>
       ext.injectFunction((FunctionIdentifier(f.name), info(f), builder(f) _))
@@ -140,9 +123,11 @@ object SqlFunctions {
   }
 }
 
-/** `--conf spark.sql.extensions=graft.functions.GraftExtensions` — the
-  * cluster-wide registration path; every session the builder creates
-  * then resolves the graft SQL functions without per-session setup. */
+/** The graft SQL surface as a session extension: `GraftSession.create`
+  * builds with it, and `--conf spark.sql.extensions=graft.functions
+  * .GraftExtensions` applies it on a cluster; every session the builder
+  * creates then resolves the graft SQL functions without per-session
+  * setup. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = SqlFunctions.inject(ext)
 }

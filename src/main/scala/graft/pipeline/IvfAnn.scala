@@ -116,7 +116,7 @@ object IvfAnn {
     * "index built at another resolution". The stamp makes an index at
     * a different nlist — larger (the limit below would silently
     * truncate it) or smaller (silently coarser quantization) — fail
-    * loudly, including a lost publish race against a different-nlist
+    * loudly, including a lost build race against a different-nlist
     * writer at the same explicit dir. */
   def loadOrBuild(corpus: DataFrame, idCol: String, embCol: String,
       nlist: Int, dir: String): Index = {

@@ -949,23 +949,24 @@ object Relational {
     * evicts + emits them. Sentinel users are negative ids, filtered
     * from the result; their own sessions never close, so nothing
     * synthetic can leak through the filter anyway. The staged copy
-    * (b0..b2) is a [[graft.util.Stage]] artifact; the real table rides in ONE file so no real row can arrive behind the
-    * watermark (the checkpoint is fresh per run — replay determinism
-    * is StreamingSpec territory). */
+    * (b0..b2) is a [[graft.util.Stage]] artifact, streamed from its live
+    * segment; the real table rides in ONE file so no real row can
+    * arrive behind the watermark (the checkpoint is fresh per run —
+    * replay determinism is StreamingSpec territory). */
   def st2StreamSessions(s: SparkSession, d: String): DataFrame = {
     val ev = events(s, d).select(col("ts"), col("user_id"))
-    val stage = graft.util.Stage.scratchDir("st2", d, "events")
-    graft.util.Stage.loadOrBuild(s, stage, (0 to 2).map(i => s"b$i" -> ev.schema)) {
+    val stage = graft.util.Stage.segment(s,
+        graft.util.Stage.scratchDir("st2", d, "events")) { seg =>
       val maxTs = ev.agg(max(unix_micros(col("ts")))).head().getLong(0)
       val day = 86400000000L
-      graft.util.Stage.Built(ev.coalesce(1).write +:
-        Seq(1 -> (maxTs + 10 * day), 2 -> (maxTs + 11 * day)).map {
-          case (i, us) =>
-            s.range(1)
-              .select(timestamp_micros(lit(us)).as("ts"),
-                lit(-i.toLong).as("user_id"))
-              .coalesce(1).write
-        })
+      ev.coalesce(1).write.parquet(s"$seg/b0")
+      Seq(1 -> (maxTs + 10 * day), 2 -> (maxTs + 11 * day)).foreach {
+        case (i, us) =>
+          s.range(1)
+            .select(timestamp_micros(lit(us)).as("ts"),
+              lit(-i.toLong).as("user_id"))
+            .coalesce(1).write.parquet(s"$seg/b$i")
+      }
     }
     val ckpt = java.nio.file.Files.createTempDirectory("st2_ckpt").toString
     val name = "st2_mem_" + java.util.UUID.randomUUID().toString.replace("-", "")

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.functions.SqlFunctions
 
 /** The ad-hoc SQL surface exercised end-to-end: registered graft
   * functions (q3c cone predicates, flux↔mag, MJD conversions, bit
@@ -25,7 +24,6 @@ object SqlSurface {
     * separation keeps ≫1 ULP of margin from the boundary — keep any
     * future cutoff off the lattice the same way. */
   def x1SqlCone(s: SparkSession, d: String): DataFrame = {
-    SqlFunctions.register(s)
     Tables.registerAll(s, d)
     s.sql("""
       WITH c AS (SELECT c_custkey, (c_custkey % 3600) * 0.1 AS ra,
@@ -85,7 +83,6 @@ object SqlSurface {
     * and inside every SF's partkey range, so membership has float
     * margin and the result is nonempty at sf0.001/0.01/0.1. */
   def x2AdhocAstro(s: SparkSession, d: String): DataFrame = {
-    SqlFunctions.register(s)
     FastdbOps.liSources(s, d).createOrReplaceTempView("diasource")
     FastdbOps.bpvPriorities(s).createOrReplaceTempView("procver_priority")
     val dir = java.nio.file.Files.createTempDirectory("x2queue").toString
@@ -148,7 +145,6 @@ object SqlSurface {
     * is exact-integer or a formula t1/t3/t4 already prove replays
     * identically in DuckDB, so the whole statement is oracled. */
   def x3SqlPipeline(s: SparkSession, d: String): DataFrame = {
-    SqlFunctions.register(s)
     Tables.registerAll(s, d)
     s.sql("""
       SELECT lang_id(text) AS pred_lang, COUNT(*) AS n_docs,
@@ -200,7 +196,6 @@ object SqlSurface {
     * expansion, so a hash match proves the migration form and the
     * blessed form agree end to end. */
   def x4NaiveCone(s: SparkSession, d: String): DataFrame = {
-    SqlFunctions.register(s)
     Tables.registerAll(s, d)
     s.sql("""
       WITH c AS (SELECT c_custkey, (c_custkey % 3600) * 0.1 AS ra,

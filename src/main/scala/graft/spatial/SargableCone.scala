@@ -32,9 +32,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType}
   * range that parquet row-group min/max skipping and partition pruning
   * can consume.
   *
-  * Injected via `GraftExtensions` (cluster deploys) and
-  * `SqlFunctions.register` (existing sessions, through
-  * `spark.experimental.extraOptimizations`). Both hooks place it in a
+  * Injected via `GraftExtensions` at session build (every
+  * `GraftSession` and `spark.sql.extensions` cluster deploys), into a
   * fixed-point batch, so the rewrite marks the expression
   * (`bandApplied`) to stay idempotent.
   */

@@ -1,9 +1,10 @@
 package graft.util
 
 /** Local-filesystem helpers for JVM-local trees (queue replays, JSONL
-  * round-trip exports, the segments a [[SegmentTable]] collects) —
-  * java.nio, not Hadoop. Build-once artifacts go through [[Stage]],
-  * mutable tables through [[SegmentTable]]. */
+  * round-trip exports, the segments a [[SegmentTable]] collects or a
+  * [[Stage]] builder discards) — java.nio, not Hadoop. Everything the
+  * chain persists, build-once artifacts included, commits through
+  * [[SegmentTable]]. */
 object Local {
   def deleteRecursively(dir: String): Unit = {
     val root = java.nio.file.Paths.get(dir)

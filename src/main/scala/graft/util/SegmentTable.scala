@@ -11,9 +11,10 @@ import org.apache.spark.sql.types.StructType
   * per line. A writer writes new segments, then flips the manifest by
   * atomic rename, so a crash leaves either the old or the new manifest
   * readable, never a torn table. It is the one commit protocol for
-  * every table the chain mutates: silver, gold, the rollup and the
-  * streamed near-dup and vector state (build-once artifacts go through
-  * [[Stage.publish]]).
+  * everything the chain persists: the tables it mutates (silver, gold,
+  * the rollup and the streamed near-dup and vector state) and the
+  * build-once artifacts of [[Stage]], whose manifest lists one segment
+  * and which never collect.
   *
   * A commit deletes the `seg_*` directories that neither the new
   * manifest nor the one it replaced lists: a frame opened before a
@@ -117,8 +118,9 @@ object SegmentTable {
       * flips can mix per-table versions but never exposes a torn table. */
     def commit(): Unit = flip().foreach { case (t, keep) => t.collect(keep) }
 
-    /** The flips alone (a test stops here): each table with the
-      * segments its GC keeps. */
+    /** The flips alone, without the GC (a build-once artifact commits
+      * this way, so a racing builder's segment survives; a test stops
+      * here): each table with the segments its GC keeps. */
     private[graft] def flip(): Seq[(SegmentTable, Set[String])] =
       entries.map { case (t, segs) => t -> (segs ++ t.flip(segs)).toSet }
   }

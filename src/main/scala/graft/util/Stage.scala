@@ -1,51 +1,43 @@
 package graft.util
 
 import java.nio.charset.StandardCharsets.UTF_8
+import java.nio.file.{Files, Paths}
 
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Lifecycle of the persisted shared artifacts — indexes, cluster
   * tables, fixtures and bucketed table copies that are built once and
-  * then probed by every reader. One artifact is a directory:
+  * then probed by every reader. One artifact is a [[SegmentTable]]
+  * whose manifest lists one segment:
   *
   *  - Location: [[scratchDir]] keys it by kind, source table, build
   *    parameters and the source table's CONTENT signature, so a
   *    regenerated dataset or a different parameter set gets a fresh
-  *    artifact instead of a stale one. Readers racing at one location
-  *    therefore always race to publish content-equivalent artifacts.
-  *  - Build ([[loadOrBuild]]): named parts written in order under a
-  *    session-unique staging dir, then a root `_SUCCESS` written LAST
-  *    (optionally stamped with the build parameters), then the build's
-  *    caches released, then [[publish]]ed by one rename.
-  *  - Load: every part read back with its declared schema, so a load
-  *    plans without the footer-inference job a schemaless read fires.
-  *
-  * All probes go through the Hadoop `FileSystem`, so the same code
-  * works on HDFS/S3/GCS paths, not just `file:` (a `java.io.File`
-  * probe silently returns false on any remote filesystem and every
-  * session rebuilds).
-  *
-  * Concurrency contract: `FileSystem.rename` is atomic on HDFS (and
-  * real-filesystem schemes like file:), so when two sessions race to
-  * build the same artifact, exactly one rename lands; the loser
-  * detects the existing destination, discards its staging dir, and
-  * reads the winner's files. On OBJECT stores (S3A, GCS) a directory
-  * rename is a client-side copy loop, not atomic — there the marker
-  * check still gates readers correctly only because the marker file
-  * is the artifact's LAST write inside the staging tree and copies
-  * preserve per-file completeness; a deployment that needs hard
-  * atomicity on S3 should point `dir` at an HDFS/consistent namespace
-  * or use a manifest committer.
+  *    artifact instead of a stale one. Builders racing at one location
+  *    therefore always build content-equivalent artifacts.
+  *  - Build ([[segment]]): the artifact is written into a fresh
+  *    `seg_<uuid>/` together with its `_stamp` (the build parameters),
+  *    every job labelled `stage build: <dir name>`, and committed by
+  *    the manifest flip, so the parts and the stamp appear together.
+  *  - Race: a builder re-reads the manifest before its flip. If another
+  *    session committed meanwhile, it deletes its own segment and reads
+  *    the winner's. An artifact commit never collects: that would
+  *    delete a racing builder's in-flight segment. So when two flips
+  *    both pass the re-check, the later one stays listed and a reader
+  *    of either segment still reads a whole artifact.
+  *  - Load ([[loadOrBuild]]): every named part (`seg_<uuid>/<part>`)
+  *    read back with its declared schema, so a load plans without the
+  *    footer-inference job a schemaless read fires.
   */
 object Stage {
-  def fs(spark: SparkSession, dir: String): FileSystem =
-    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+  private def table(dir: String): SegmentTable = {
+    val root = Paths.get(dir)
+    new SegmentTable(root, s"stage build: ${root.getFileName}")
+  }
 
-  /** Is the artifact at `dir` committed (root `_SUCCESS` present)? */
-  def isCommitted(spark: SparkSession, dir: String): Boolean =
-    fs(spark, dir).exists(new Path(dir, "_SUCCESS"))
+  /** Is the artifact at `dir` committed (its manifest lists a segment)? */
+  def isCommitted(dir: String): Boolean = table(dir).live.nonEmpty
 
   /** Catalog-safe artifact key: `graft_<kind>_<table>_<params…>_<sig>`
     * where `sig` is the content signature of `dataset`'s `table`. */
@@ -60,123 +52,67 @@ object Stage {
     s"${System.getProperty("java.io.tmpdir")}/${
       scratchKey(kind, dataset, table, params: _*)}"
 
-  /** Session-unique staging location next to the destination (same
-    * filesystem — a cross-FS rename is a copy, not atomic). */
-  def stagingDir(spark: SparkSession, dir: String): String =
-    s"$dir.staging-${spark.sparkContext.applicationId}"
+  /** Write a fresh, unlisted segment of the artifact at `dir` with
+    * `write` (given the segment's path) and then its `_stamp`; the name
+    * of the segment. A `write` that throws deletes the segment first. */
+  private[graft] def stage(spark: SparkSession, dir: String, stamp: String)(
+      write: String => Unit): String = {
+    val t = table(dir)
+    val seg = "seg_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    val path = Paths.get(dir, seg)
+    try {
+      Jobs.labelled(spark, t.label)(write(path.toString))
+      Files.createDirectories(path)
+      Files.write(path.resolve("_stamp"), stamp.getBytes(UTF_8))
+    } catch {
+      case e: Throwable => Local.deleteRecursively(path.toString); throw e
+    }
+    seg
+  }
+
+  /** The path of the artifact's live segment, written by `write` and
+    * committed first if the artifact is not committed. `write` is never
+    * called for a committed artifact. A committed artifact stamped
+    * differently — a build at other parameters, e.g. a racing writer at
+    * the same explicit dir — is rejected rather than served. */
+  def segment(spark: SparkSession, dir: String, stamp: String = "")(
+      write: String => Unit): String = {
+    val t = table(dir)
+    if (t.live.isEmpty) {
+      val seg = stage(spark, dir, stamp)(write)
+      if (t.live.nonEmpty) Local.deleteRecursively(Paths.get(dir, seg).toString)
+      else SegmentTable.Staged(Seq(t -> Seq(seg))).flip(): Unit
+    }
+    val path = t.paths.head
+    val built = new String(Files.readAllBytes(Paths.get(path, "_stamp")), UTF_8)
+    require(built == stamp, s"artifact at $dir was built with '$built' " +
+      s"but '$stamp' was requested — rebuild it or key the location by it")
+    path
+  }
 
   /** What a build hands [[loadOrBuild]]: one writer per declared part,
     * in part order, and the release of whatever the build cached. */
   final case class Built(writers: Seq[DataFrameWriter[Row]],
       release: () => Unit = () => ())
 
-  /** The artifact at `dir`, built first if it is not committed: the
-    * parts (name, read schema) are written in order from `build`'s
-    * writers, the root `_SUCCESS` (holding `stamp`) last, and the
-    * build's caches are released before publishing. `build` is never
-    * evaluated for a committed artifact, and the returned frames (in
-    * part order) are schema-declared reads, so a load runs no job. A
-    * committed artifact stamped differently — a build at other
-    * parameters, e.g. a racing writer at the same explicit dir — is
-    * rejected rather than served. */
+  /** The artifact at `dir` as one frame per part (name, read schema),
+    * built by [[segment]] first if it is not committed: `build`'s
+    * writers fill the parts in order, then the build's caches are
+    * released. `build` is never evaluated for a committed artifact, and
+    * the returned frames are schema-declared reads, so a load runs no
+    * job. */
   def loadOrBuild(spark: SparkSession, dir: String,
       parts: Seq[(String, StructType)], stamp: String = "")(
       build: => Built): Seq[DataFrame] = {
-    val f = fs(spark, dir)
-    val marker = new Path(dir, "_SUCCESS")
-    if (!f.exists(marker)) publish(spark, dir) { staging =>
+    val seg = segment(spark, dir, stamp) { seg =>
       val b = build
       require(b.writers.size == parts.size,
         s"${b.writers.size} writers for ${parts.size} parts of $dir")
       try parts.zip(b.writers).foreach { case ((name, _), w) =>
-        w.parquet(s"$staging/$name") }
+        w.parquet(s"$seg/$name") }
       finally b.release()
-      val out = f.create(new Path(staging, "_SUCCESS"))
-      try out.write(stamp.getBytes(UTF_8)) finally out.close()
     }
-    val in = f.open(marker)
-    val built = try new String(in.readAllBytes(), UTF_8) finally in.close()
-    require(built == stamp, s"artifact at $dir was built with '$built' " +
-      s"but '$stamp' was requested — rebuild it or key the location by it")
     parts.map { case (name, schema) =>
-      spark.read.schema(schema).parquet(s"$dir/$name") }
-  }
-
-  /** Build into `staging` via `write`, then atomically publish it at
-    * `dir`. Returns true if this session's artifact landed, false if
-    * a concurrent writer already published (staging is discarded; the
-    * winner's artifact is content-equivalent, since locations are
-    * keyed by source-content signature + parameters). `write` must
-    * leave the root `_SUCCESS` as its last write. An existing
-    * UNCOMMITTED destination (no marker — a crashed writer's debris,
-    * or a pre-created empty dir) is replaced. The racy interleaving
-    * where a winner commits between the debris delete and the rename
-    * is detected POST-rename (see the in-body comment on HDFS's
-    * rename-into-existing-dir semantics) rather than assumed away. */
-  def publish(spark: SparkSession, dir: String)(write: String => Unit): Boolean = {
-    val f = fs(spark, dir)
-    val staging = stagingDir(spark, dir)
-    val stagingPath = new Path(staging)
-    f.delete(stagingPath, true) // leftover from a crashed prior run
-    write(staging)
-    val dst = new Path(dir)
-    def committed = f.exists(new Path(dst, "_SUCCESS"))
-    if (committed) {
-      f.delete(stagingPath, true)
-      false
-    } else {
-      // Replace uncommitted debris (a crashed writer's half-written
-      // dir), then rename. HDFS hazard: if a concurrent winner commits
-      // BETWEEN the delete and the rename, HDFS's rename-onto-an-
-      // existing-directory does not fail — it moves the staging dir
-      // INSIDE dst and returns true, nesting a '*.staging-*' subtree
-      // into the committed artifact (which would pollute partition
-      // discovery for every later reader). So a true return is not
-      // trusted by itself: verify no nested staging entry landed under
-      // dst (the staging name is session-unique, so the check is
-      // unambiguous) and that the marker is present at the expected
-      // relative path. Local-FS renames onto a non-empty dst simply
-      // fail, which the committed-recheck branch below handles.
-      //
-      // Narrow re-check IMMEDIATELY before the destructive delete: a
-      // winner that committed between the initial marker check and
-      // here would otherwise have its fully committed artifact
-      // removed — only safe under the content-equivalence convention,
-      // which publish cannot enforce for caller-chosen explicit dirs
-      // (e.g. two IvfAnn writers with different nlist at one dir; the
-      // stamp would catch the damage only at load time). The re-check
-      // is a single metadata probe and composes with the post-rename
-      // nested-staging verification below.
-      if (committed) {
-        f.delete(stagingPath, true)
-        false
-      } else {
-        f.delete(dst, true)
-        if (f.rename(stagingPath, dst)) {
-          val nested = new Path(dst, stagingPath.getName)
-          if (f.exists(nested)) {
-            // lost the race on HDFS semantics: un-nest our debris and
-            // defer to the winner's (content-equivalent) artifact
-            f.delete(nested, true)
-            false
-          } else if (committed) true
-          else throw new java.io.IOException(
-            s"publish to $dir renamed but marker _SUCCESS is absent — " +
-              "the write callback did not produce the marker as its last write")
-        }
-        else if (committed) {
-          // rename lost to a concurrent winner that landed in the gap
-          f.delete(stagingPath, true)
-          false
-        } else {
-          // rename failed with NO winner present: a real IO problem.
-          // Keep staging for post-mortem and fail loudly — silently
-          // returning would leave isCommitted-gated readers pointing at
-          // a nonexistent artifact.
-          throw new java.io.IOException(
-            s"rename $staging -> $dir failed and no committed artifact exists")
-        }
-      }
-    }
+      spark.read.schema(schema).parquet(s"$seg/$name") }
   }
 }

@@ -12,7 +12,7 @@ import graft.query.Ltcv
 import graft.stats.GoldTables
 import graft.pipeline.PqAnn
 import graft.streaming.{AlertStream, NearDupStream, SilverStore, VectorIngest}
-import graft.util.SegmentTable
+import graft.util.{SegmentTable, Stage}
 
 /** Crash consistency of the chain's one commit protocol
   * ([[SegmentTable]]): for each owner of a mutable table — a silver
@@ -23,7 +23,11 @@ import graft.util.SegmentTable
   * owners of more than one table also between two tables' flips. After
   * the recovery the tables' contents equal those of an uninterrupted
   * run, and no `seg_*` directory is left that neither the live manifest
-  * nor the one it replaced lists. */
+  * nor the one it replaced lists. A build-once artifact ([[Stage]])
+  * commits through the same flip: a build that throws mid-part, a crash
+  * after its parts are written and one after its flip each recover to
+  * an uninterrupted build with one listed segment, and a build that
+  * loses a race reads the winner's rows. */
 class FaultSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
@@ -195,12 +199,38 @@ class FaultSpec extends AnyFunSuite {
     def contents(root: String) = liveRows(tables(root))
   }
 
+  /** A build-once artifact of two parts: nothing comes before its
+    * build, and a build that finds it committed is a load. */
+  private object Artifact extends Owner {
+    private def frame = spark.range(0, 40, 1, 4)
+      .select(col("id"), concat(lit("v"), col("id")).as("v"))
+    private val parts = Seq("head", "tail").map(_ -> frame.schema)
+    def dir(root: String) = Paths.get(root, "artifact")
+    def tables(root: String) = Seq(dir(root))
+    def prior(root: String) = ()
+    def built(df: DataFrame, release: () => Unit = () => (),
+        tail: DataFrame => DataFrame = identity) = Stage.Built(
+      Seq(df.filter(col("id") < 20).write, tail(df.filter(col("id") >= 20)).write), release)
+    def load(root: String)(build: => Stage.Built): Seq[DataFrame] =
+      Stage.loadOrBuild(spark, dir(root).toString, parts, "v1")(build)
+    def commit(root: String) = load(root)(built(frame)): Unit
+    // the head part is written, then the tail part's write throws part-way
+    def failing(root: String) = load(root)(built(frame, tail = failOn(_, "id", 30L))): Unit
+    def stage(root: String) = SegmentTable.Staged(Seq(new SegmentTable(dir(root), "") ->
+      Seq(Stage.stage(spark, dir(root).toString, "v1") { seg =>
+        parts.zip(built(frame).writers).foreach { case ((n, _), w) => w.parquet(s"$seg/$n") }
+      })))
+    def recoverCommitted(root: String) = commit(root)
+    def contents(root: String) =
+      load(root)(sys.error("a committed artifact must not be rebuilt")).map(rows)
+  }
+
   private def tmp(tag: String) = Files.createTempDirectory(s"fault_$tag").toString
 
   /** Run `owner`'s faulted commit with `crash`, recover, and compare
     * with an uninterrupted run. */
   private def check(tag: String, owner: Owner, afterFlip: Boolean = false,
-      staged: Boolean = false)(crash: String => Unit): Unit = {
+      staged: Boolean = false)(crash: String => Unit): String = {
     val clean = tmp(tag)
     owner.prior(clean); owner.commit(clean)
     val root = tmp(tag)
@@ -218,6 +248,7 @@ class FaultSpec extends AnyFunSuite {
       val stray = segDirs(t) -- live(t) -- before
       assert(stray.isEmpty, s"$t keeps unlisted segments $stray")
     }
+    root
   }
 
   private val owners = Seq("silver saveDelta" -> Silver, "gold refresh" -> Gold,
@@ -252,6 +283,65 @@ class FaultSpec extends AnyFunSuite {
         SegmentTable.Staged(owner.stage(root).entries.take(1)).flip(): Unit
       }
     }
+  }
+
+  test("stage build: a build that throws mid-part, then a retry, equals an uninterrupted build") {
+    val root = check("artifact", Artifact) { root =>
+      val e = intercept[Exception](Artifact.failing(root))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(t => Option(t.getMessage).exists(_.contains("injected fault"))))
+      assert(!Stage.isCommitted(Artifact.dir(root).toString))
+    }
+    assert(live(Artifact.dir(root)).size == 1)
+  }
+
+  test("stage build: a crash after the parts are written, before the flip, " +
+    "then a retry, equals an uninterrupted build") {
+    val clean = tmp("artifact")
+    Artifact.commit(clean)
+    val root = tmp("artifact")
+    val t = Artifact.dir(root)
+    val Seq((_, Seq(debris))) = Artifact.stage(root).entries
+    assert(!Stage.isCommitted(t.toString) && segDirs(t) == Set(debris))
+    Artifact.commit(root)
+    assert(Artifact.contents(root) == Artifact.contents(clean))
+    val listed = live(t)
+    assert(listed.size == 1 && !listed.contains(debris))
+    // an artifact commit never collects: the crashed build's segment stays
+    assert(segDirs(t) == listed + debris)
+  }
+
+  test("stage build: a crash after the flip, then a load, equals an uninterrupted build") {
+    val root = check("artifact", Artifact, afterFlip = true) { root =>
+      Artifact.stage(root).flip(): Unit
+    }
+    assert(live(Artifact.dir(root)).size == 1)
+  }
+
+  test("stage build: a build that loses a race reads the winner's rows " +
+    "and deletes only its own segment") {
+    val root = tmp("artifact_race")
+    val t = Artifact.dir(root)
+    def files(seg: Path): Map[String, (Long, Long)] = {
+      val w = Files.walk(seg)
+      try w.iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
+        seg.relativize(p).toString -> (Files.size(p), Files.getLastModifiedTime(p).toMillis)
+      }.toMap finally w.close()
+    }
+    var winner = ""
+    var winnerFiles = Map.empty[String, (Long, Long)]
+    val loserRows = spark.range(100, 110).select(col("id"), lit("loser").as("v"))
+    // the loser's parts are written; before its flip the winner commits
+    val got = Artifact.load(root)(Artifact.built(loserRows, release = () => {
+      Artifact.commit(root)
+      winner = live(t).head
+      winnerFiles = files(t.resolve(winner))
+      assert(segDirs(t).size == 2, "the loser's segment is written, unlisted")
+    }))
+    assert(got.map(rows) == Artifact.contents(root))
+    assert(!got.map(rows).flatten.exists(_.contains("loser")))
+    assert(live(t) == Set(winner) && segDirs(t) == Set(winner))
+    assert(files(t.resolve(winner)) == winnerFiles)
   }
 
   test("every job of a gold refresh carries a gold write label") {

@@ -186,11 +186,12 @@ class PipelineSpec extends AnyFunSuite {
     val q = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding"))
     val dir = java.nio.file.Files.createTempDirectory("ivf_persist").toString
-    assert(!graft.util.Stage.isCommitted(spark, dir))
+    assert(!graft.util.Stage.isCommitted(dir))
     val viaBuild = IvfAnn.loadOrBuild(emb, "vec_id", "embedding", 8, dir)
-    assert(graft.util.Stage.isCommitted(spark, dir))
+    assert(graft.util.Stage.isCommitted(dir))
     // the layout is partitioned by cell id → a probe reads only its cells
-    val cellDirs = new java.io.File(s"$dir/assigned").listFiles()
+    val seg = new graft.util.SegmentTable(java.nio.file.Paths.get(dir), "").paths.head
+    val cellDirs = new java.io.File(s"$seg/assigned").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("_cell="))
     assert(cellDirs.length == 8, s"expected 8 cell partitions, got ${cellDirs.length}")
     def topk(ix: IvfAnn.Index) = IvfAnn.topK(ix, q, k = 5, nprobe = 5)
@@ -254,11 +255,12 @@ class PipelineSpec extends AnyFunSuite {
     val q = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_vec_id"), col("embedding").as("q_embedding"))
     val dir = java.nio.file.Files.createTempDirectory("ivfpq_persist").toString
-    assert(!graft.util.Stage.isCommitted(spark, dir))
+    assert(!graft.util.Stage.isCommitted(dir))
     val viaBuild = PqAnn.loadOrBuild(emb, "vec_id", "embedding",
       dim = 64, nlist = 8, m = 8, ksub = 16, dir = dir)
-    assert(graft.util.Stage.isCommitted(spark, dir))
-    val cellDirs = new java.io.File(s"$dir/codes").listFiles()
+    assert(graft.util.Stage.isCommitted(dir))
+    val seg = new graft.util.SegmentTable(java.nio.file.Paths.get(dir), "").paths.head
+    val cellDirs = new java.io.File(s"$seg/codes").listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("_cell="))
     assert(cellDirs.length == 8, s"expected 8 cell partitions, got ${cellDirs.length}")
     def topk(ix: PqAnn.Index) = PqAnn.topK(ix, emb, q, k = 5, nprobe = 5)

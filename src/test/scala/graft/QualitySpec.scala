@@ -510,7 +510,7 @@ class QualitySpec extends AnyFunSuite {
     Components.release(viaIndex)
     Components.release(inPlace)
     // and a RE-load (second consumer) sees the same index
-    assert(graft.util.Stage.isCommitted(spark, dir))
+    assert(graft.util.Stage.isCommitted(dir))
     val again = SemDedup.semanticDedupWithIndex(
       IvfAnn.loadOrBuild(semCorpus, "vec_id", "embedding", nlist = 8, dir = dir),
       "vec_id", threshold = 0.9)

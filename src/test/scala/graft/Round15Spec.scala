@@ -105,9 +105,9 @@ class Round15Spec extends AnyFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     assert(stored == direct)
     // the artifact is on disk and a second call probes it (same rows,
-    // _SUCCESS marker present — the loadOrBuild read path)
+    // committed by its manifest — the loadOrBuild read path)
     val sd = graft.pipeline.ClusterStore.scratchDir(dir, 3, 0.5)
-    assert(new java.io.File(sd, "_SUCCESS").exists())
+    assert(graft.util.Stage.isCommitted(sd))
     val again = graft.pipeline.ClusterStore.loadOrBuild(
         spark, dir, sys.error("must not rebuild"))
       .orderBy("doc_id")

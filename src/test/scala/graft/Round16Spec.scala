@@ -3,11 +3,11 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-/** Specs for the round-16 additions: the Stage commit protocol
-  * (Hadoop-FS markers + staging-then-atomic-rename) that all persisted
-  * shared artifacts now publish through, the hardNegatives duplicate-
-  * rank tie-break, and the a22 lightcurve-API composition's
-  * split-identity expansion.
+/** Specs for the round-16 additions: the Stage artifact lifecycle
+  * (a committed artifact loads without a job; every job of a build is
+  * labelled), the hardNegatives duplicate-rank tie-break, and the a22
+  * lightcurve-API composition's split-identity expansion. Stage's crash
+  * and race cases are in FaultSpec.
   */
 class Round16Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -17,59 +17,6 @@ class Round16Spec extends AnyFunSuite {
     val d = java.nio.file.Files.createTempDirectory(s"graft-$tag")
     d.toFile.deleteOnExit()
     d.toString
-  }
-
-  test("Stage.publish: atomic staging commit, loser discards, debris replaced") {
-    import graft.util.Stage
-    val dir = s"${tmpBase("stage")}/artifact"
-    assert(!Stage.isCommitted(spark, dir))
-
-    // first publish lands and is visible only AFTER the rename
-    val landed = Stage.publish(spark, dir) { staging =>
-      assert(staging.startsWith(dir + ".staging-"),
-        "staging must be a sibling on the same filesystem")
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-        .write.mode("overwrite").parquet(staging)
-      assert(!Stage.isCommitted(spark, dir),
-        "artifact must not be visible while only staging exists")
-    }
-    assert(landed && Stage.isCommitted(spark, dir))
-    assert(spark.read.parquet(dir).count() == 2)
-
-    // a second writer (content-equivalent by contract) loses the race:
-    // returns false, destination untouched, its staging cleaned up
-    val landed2 = Stage.publish(spark, dir) { staging =>
-      Seq((1L, "a"), (2L, "b")).toDF("id", "v")
-        .write.mode("overwrite").parquet(staging)
-    }
-    assert(!landed2)
-    assert(spark.read.parquet(dir).count() == 2)
-    assert(!new java.io.File(Stage.stagingDir(spark, dir)).exists(),
-      "losing staging dir must be deleted")
-
-    // an existing UNCOMMITTED destination (pre-created empty dir, or a
-    // crashed writer's partial output) is replaced, not treated as won
-    val dir2 = s"${tmpBase("stage2")}/artifact"
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(dir2))
-    assert(!Stage.isCommitted(spark, dir2))
-    assert(Stage.publish(spark, dir2) { staging =>
-      Seq((9L, "z")).toDF("id", "v").write.parquet(staging)
-    })
-    assert(Stage.isCommitted(spark, dir2))
-    assert(spark.read.parquet(dir2).count() == 1)
-
-    // loadOrBuild: named parts in order, root _SUCCESS last — nothing
-    // is committed while the build runs
-    val dir3 = s"${tmpBase("stage3")}/artifact"
-    val part = Seq((1L, "x")).toDF("id", "v")
-    val Seq(inner, outer) = Stage.loadOrBuild(spark, dir3,
-        Seq("inner" -> part.schema, "outer" -> part.schema)) {
-      assert(!Stage.isCommitted(spark, dir3))
-      Stage.Built(Seq(part.write, part.union(part).write))
-    }
-    assert(Stage.isCommitted(spark, dir3))
-    assert(new java.io.File(s"$dir3/inner/_SUCCESS").exists())
-    assert(inner.count() == 1 && outer.count() == 2)
   }
 
   /** Spark jobs launched while `f` runs on this thread: job-start
@@ -132,6 +79,29 @@ class Round16Spec extends AnyFunSuite {
     assert(ccJobs == 0, s"$ccJobs job(s) before the first action")
     assert(clusters.filter(col("is_rep")).count() == 2)
     graft.util.Local.deleteRecursively(graft.pipeline.ClusterStore.scratchDir(ds, 3, 0.5))
+  }
+
+  test("every job of an artifact build carries its stage build label") {
+    val ds = tmpBase("census_cc")
+    val docs = Seq((1L, "a b c d e"), (2L, "a b c d e"), (3L, "x y z w q"))
+      .toDF("doc_id", "text")
+    docs.write.parquet(s"$ds/documents.parquet")
+    val m = new Probe.Meter(spark)
+    try {
+      // the empty frame's own sink write is the run's only other job
+      val sink = m.run(spark.emptyDataFrame).jobs.map(_.label)
+      val jobs = m.run {
+        graft.pipeline.ClusterStore.loadOrBuild(spark, ds, docs)
+        spark.emptyDataFrame
+      }.jobs.map(_.label)
+      val build = jobs.diff(sink)
+      assert(build.nonEmpty)
+      assert(build.forall(_.startsWith("[stage build: graft_cc_documents_3_50_")),
+        build.mkString("\n"))
+    } finally {
+      m.close()
+      graft.util.Local.deleteRecursively(graft.pipeline.ClusterStore.scratchDir(ds, 3, 0.5))
+    }
   }
 
   test("hardNegatives: duplicate ranks resolve by id, partition-invariant") {

@@ -6,9 +6,8 @@ import graft.query.Catalog
 
 /** Specs for the round-17 additions: the full what_spectra_are_wanted
   * workflow (edge semantics the battery's sp1 parameters can't pin
-  * one-by-one), the Stage.publish post-rename marker verification, the
-  * IvfAnn index-resolution guard, and portableProfile's null-text
-  * contract.
+  * one-by-one), the IvfAnn index-resolution guard, and
+  * portableProfile's null-text contract.
   */
 class Round17Spec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
@@ -236,18 +235,6 @@ class Round17Spec extends AnyFunSuite {
     }
   }
 
-  test("Stage.publish: a write that produces no marker fails loudly " +
-    "instead of publishing an uncommitted artifact") {
-    val dir = s"${tmpBase("stage17")}/artifact"
-    val ex = intercept[java.io.IOException] {
-      graft.util.Stage.publish(spark, dir) { staging =>
-        new java.io.File(staging).mkdirs() // no _SUCCESS anywhere
-      }
-    }
-    assert(ex.getMessage.contains("marker"))
-    assert(!graft.util.Stage.isCommitted(spark, dir))
-  }
-
   test("IvfAnn.loadOrBuild: a saved index at a different resolution is " +
     "rejected, not silently truncated or coarsened") {
     val emb = (0 until 24).map(i =>
@@ -305,7 +292,6 @@ class Round17Spec extends AnyFunSuite {
       assert(got2.toSeq == want)
     } finally spark.conf.set("spark.sql.codegen.wholeStage", interp)
     // SQL-callable under the DuckDB/Postgres-compatible name
-    graft.functions.SqlFunctions.register(spark)
     assert(spark.sql("SELECT nfc_normalize('cafe\u0301') AS n")
       .head().getString(0) == "caf\u00e9")
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.{AttributeReference, GreaterThanOrEqual, LessThanOrEqual, Literal}
 import org.apache.spark.sql.catalyst.plans.logical.Filter
-import graft.functions.{Funcs, GraftExtensions, SqlFunctions}
+import graft.functions.{Funcs, GraftExtensions}
 import graft.spatial.GreatCircleDist
 
 /** SargableCone: the optimizer rule that turns the NAIVE q3c migration
@@ -15,8 +15,6 @@ import graft.spatial.GreatCircleDist
 class SargableConeSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
-
-  private def registered: SparkSession = { SqlFunctions.register(spark); spark }
 
   // parquet-backed points: a LocalRelation would be folded away before
   // the filter plan shape can be observed
@@ -55,7 +53,7 @@ class SargableConeSpec extends AnyFunSuite {
   }
 
   test("GreatCircleDist is bit-identical to the composed greatCircleDeg tree") {
-    val s = registered
+    val s = spark
     val r = new scala.util.Random(7)
     val quads = Seq.fill(500)((r.nextDouble * 360, r.nextDouble * 180 - 90,
       r.nextDouble * 360, r.nextDouble * 180 - 90))
@@ -74,7 +72,7 @@ class SargableConeSpec extends AnyFunSuite {
   }
 
   test("naive q3c_dist <= r predicate pushes a dec band into the parquet scan") {
-    val s = registered
+    val s = spark
     pts(s)
     val q = s.sql(
       "SELECT id FROM cone_pts WHERE q3c_dist(ra, dec, 42.0, 13.0) <= 0.5")
@@ -89,7 +87,7 @@ class SargableConeSpec extends AnyFunSuite {
   }
 
   test("all four comparison orientations are rewritten") {
-    val s = registered
+    val s = spark
     pts(s)
     val forms = Seq(
       "q3c_dist(ra, dec, 42.0, 13.0) <= 0.5",
@@ -103,7 +101,7 @@ class SargableConeSpec extends AnyFunSuite {
   }
 
   test("rewrite is idempotent under the fixed-point batch: exactly one band") {
-    val s = registered
+    val s = spark
     pts(s)
     val q = s.sql(
       "SELECT id FROM cone_pts WHERE q3c_dist(ra, dec, 42.0, 13.0) <= 0.5")
@@ -114,7 +112,7 @@ class SargableConeSpec extends AnyFunSuite {
   }
 
   test("non-foldable center: no band, distance still computes correctly") {
-    val s = registered
+    val s = spark
     pts(s)
     // center columns come from the row itself — nothing foldable
     val q = s.sql(
@@ -134,7 +132,7 @@ class SargableConeSpec extends AnyFunSuite {
   }
 
   test("rewrite is sound under OR and NOT: band only tightens its own disjunct") {
-    val s = registered
+    val s = spark
     pts(s)
     // dist ≤ r ⇒ band, so (band AND dist≤r) ≡ dist≤r under any boolean
     // context — including negation, where ¬band ⇒ ¬(dist≤r) keeps
@@ -152,7 +150,7 @@ class SargableConeSpec extends AnyFunSuite {
   }
 
   test("NaN radius is not banded: result matches the un-rewritten semantics") {
-    val s = registered
+    val s = spark
     pts(s)
     // Spark's total order ranks NaN above every double, so dist <= NaN
     // is TRUE for every row; a band built from NaN arithmetic would be

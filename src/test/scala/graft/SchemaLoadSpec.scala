@@ -22,6 +22,11 @@ class SchemaLoadSpec extends AnyFunSuite {
   private def rows(df: org.apache.spark.sql.DataFrame): Set[String] =
     df.collect().map(_.toString).toSet
 
+  /** Schemaless read of part `name` of the artifact at `dir`, from the
+    * segment its manifest lists. */
+  private def plainPart(dir: String, name: String) = spark.read.parquet(
+    new graft.util.SegmentTable(java.nio.file.Paths.get(dir), "").paths.head + s"/$name")
+
   private val docs = Seq(
     (1L, "the quick brown fox jumps over the lazy dog again and again"),
     (2L, "the quick brown fox jumps over the lazy dog again and again"),
@@ -33,8 +38,8 @@ class SchemaLoadSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("sls_mh").toString + "/ix"
     val typed = Dedup.loadOrBuildIndex(docs, "doc_id", "text",
       shingleWords = 2, numHashes = 8, bands = 4, dir = dir)
-    val plainBuckets = spark.read.parquet(s"$dir/buckets")
-    val plainShingles = spark.read.parquet(s"$dir/shingles")
+    val plainBuckets = plainPart(dir, "buckets")
+    val plainShingles = plainPart(dir, "shingles")
     assert(shape(typed.buckets).toSet === shape(plainBuckets).toSet)
     assert(shape(typed.shingles).toSet === shape(plainShingles).toSet)
     assert(rows(typed.buckets.select("_band", "_bucket", "doc_id")) ===
@@ -47,8 +52,8 @@ class SchemaLoadSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("sls_sh").toString + "/ix"
     val typed = Dedup.loadOrBuildSimhashIndex(docs, "doc_id", "text",
       maxHamming = 2, shingleWords = 2, dir = dir)
-    val plainKeys = spark.read.parquet(s"$dir/keys")
-    val plainShingles = spark.read.parquet(s"$dir/shingles")
+    val plainKeys = plainPart(dir, "keys")
+    val plainShingles = plainPart(dir, "shingles")
     assert(shape(typed.keys).toSet === shape(plainKeys).toSet)
     assert(shape(typed.shingles).toSet === shape(plainShingles).toSet)
     assert(rows(typed.keys.select("_comb", "_v1", "_v2", "doc_id", "_sim")) ===
@@ -63,8 +68,8 @@ class SchemaLoadSpec extends AnyFunSuite {
       (i, Array.tabulate(4)(k => ((i % 5) + k * 0.1)))).toSeq
       .toDF("vec_id", "embedding")
     val typed = IvfAnn.loadOrBuild(emb, "vec_id", "embedding", nlist = 3, dir = dir)
-    val plainAssigned = spark.read.parquet(s"$dir/assigned")
-    val plainCentroids = spark.read.parquet(s"$dir/centroids")
+    val plainAssigned = plainPart(dir, "assigned")
+    val plainCentroids = plainPart(dir, "centroids")
     assert(shape(typed.assigned).toSet === shape(plainAssigned).toSet)
     assert(shape(typed.centroids).toSet === shape(plainCentroids).toSet)
     assert(rows(typed.assigned.select("vec_id", "_cell")) ===
@@ -78,7 +83,7 @@ class SchemaLoadSpec extends AnyFunSuite {
     docs.write.parquet(s"$ds/documents.parquet")
     val typed = ClusterStore.loadOrBuild(spark, ds, docs)
     val dir = ClusterStore.scratchDir(ds, 3, 0.5)
-    val plain = spark.read.parquet(s"$dir/clusters")
+    val plain = plainPart(dir, "clusters")
     assert(shape(typed) === shape(plain))
     assert(rows(typed) === rows(plain))
     graft.util.Local.deleteRecursively(dir)
@@ -93,10 +98,10 @@ class SchemaLoadSpec extends AnyFunSuite {
     val ix = PqAnn.loadOrBuild(emb, "vec_id", "embedding",
       dim = 8, nlist = 2, m = 2, ksub = 4, dir = dir)
     // the loaded codes frame must agree with the encoder's own shape
-    // (s5 unionByName's them) and with the schemaless read of the dir
+    // (s5 unionByName's them) and with the schemaless read of the part
     val enc = PqAnn.encodeNew(ix.model, emb.limit(0), "vec_id", "embedding")
     assert(shape(ix.codes).toSet === shape(enc).toSet)
-    val plain = spark.read.parquet(s"$dir/codes")
+    val plain = plainPart(dir, "codes")
     assert(shape(ix.codes).toSet === shape(plain).toSet)
     // hex the code bytes: Row.toString renders binary as an array ref
     def norm(df: org.apache.spark.sql.DataFrame) =

@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import graft.functions.{Funcs, GraftExtensions, SqlFunctions}
+import graft.functions.{Funcs, GraftExtensions}
 import graft.spatial.Spatial
 
 /** The SQL-callable function surface: registered names resolve in
@@ -14,10 +14,8 @@ class SqlFunctionsSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  private def registered: SparkSession = { SqlFunctions.register(spark); spark }
-
   test("q3c_dist / q3c_radial_query match the Column-API spatial path") {
-    val s = registered
+    val s = spark
     val pts = Seq((1L, 41.9, 13.01), (2L, 42.3, 13.0), (3L, 220.0, -40.0))
       .toDF("id", "ra", "dec")
     pts.createOrReplaceTempView("pts")
@@ -38,7 +36,7 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("photometric + time + bit functions compute the documented formulas") {
-    val s = registered
+    val s = spark
     val row = s.sql(
       """SELECT flux2mag(1000.0) AS m, mag2flux(flux2mag(1000.0)) AS f,
         |  timestamp_to_mjd(mjd_to_timestamp(60123.456789)) AS mjd,
@@ -58,7 +56,7 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("q3c_radial_query is sargable: dec band pushes into the parquet scan") {
-    val s = registered
+    val s = spark
     val dir = java.nio.file.Files.createTempDirectory("q3c_sarg").toString
     (0 until 1000).map(i => (i.toLong, (i % 360).toDouble, i * 0.17 - 85.0))
       .toDF("id", "ra", "dec")
@@ -92,7 +90,7 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("text-pipeline functions match their Column-API counterparts") {
-    val s = registered
+    val s = spark
     import graft.pipeline.TextAnalysis
     val docs = Seq("the cat sat, on the mat!", "el gato es un gato",
       "", "zz qq").toDF("t")
@@ -110,20 +108,8 @@ class SqlFunctionsSpec extends AnyFunSuite {
     assert(viaSql.map(_.toSeq).toSeq == viaCol.map(_.toSeq).toSeq)
   }
 
-  test("register is idempotent: second call does not replace registered builders") {
-    val s = registered
-    val reg = s.sessionState.functionRegistry
-    val before = reg.lookupFunctionBuilder(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("q3c_dist"))
-    SqlFunctions.register(s)
-    val after = reg.lookupFunctionBuilder(
-      org.apache.spark.sql.catalyst.FunctionIdentifier("q3c_dist"))
-    assert(before.isDefined && (before.get eq after.get),
-      "register() re-created an already-registered function")
-  }
-
   test("dot_product rejects decimal arrays at analysis, not with runtime garbage") {
-    val s = registered
+    val s = spark
     val ex = intercept[Exception](
       s.sql("SELECT dot_product(array(1.5BD, 2.5BD), array(1.5BD, 2.5BD)) FROM range(1)")
         .collect())
@@ -132,13 +118,13 @@ class SqlFunctionsSpec extends AnyFunSuite {
   }
 
   test("wrong arity fails analysis with the usage hint, not at runtime") {
-    val s = registered
+    val s = spark
     val ex = intercept[Exception](s.sql("SELECT q3c_dist(1.0, 2.0) FROM range(1)").collect())
     assert(ex.getMessage.contains("q3c_dist"))
   }
 
   test("registered functions run through the read-only query queue") {
-    val s = registered
+    val s = spark
     Seq((1L, 42.0, 13.0)).toDF("id", "ra", "dec").createOrReplaceTempView("qq_pts")
     val dir = java.nio.file.Files.createTempDirectory("qq_sqlfn").toString
     val q = new graft.api.QueryQueue(s, dir)
